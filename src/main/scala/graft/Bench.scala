@@ -1,24 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // r15 verdict task 2: checkpoint-unpersist emits one "MapPartitionsRDD
-    // ... locally checkpointed" WARN per released RDD; hundreds of them
-    // flooded the driver's captured stdout tail and cost the round its
-    // parsed bench record (BENCH_r15.json parsed:null). The JSON line is
-    // the contract — rdd-lifecycle chatter is not — so that one logger
-    // drops to ERROR while everything else stays at WARN.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession()
     // JIT/codegen warmup + one-time view registration (SURVEY §6: register
     // temp views once per session; schemas are static). Without this the
     // ~5s first-job JIT cost lands on whichever query happens to run first.

@@ -64,18 +64,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same rdd-lifecycle silencing as Bench.main: checkpoint-unpersist WARN
-    // spam must never flood a driver-captured stdout tail (r15 task 2)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter: SPARK_GRAFT_KEYS="q_a,q_b" restricts the dump
     // to those keys (the driver never sets it, so its runs stay complete).

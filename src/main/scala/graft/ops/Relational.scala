@@ -301,7 +301,14 @@ object Relational {
       bucketDriverMaxRows: Int = BucketDriverMaxRows,
       histDriverMaxRows: Int = HistDriverMaxRows): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    if (histDriverMaxRows > 0) {
+    // the driver replay handles numeric values only; any other value
+    // type takes the distributed arm, never a driver-side error
+    val driverReplayable = hist.schema(valueCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType | FloatType |
+          DoubleType | _: DecimalType => true
+      case _ => false
+    }
+    if (histDriverMaxRows > 0 && driverReplayable) {
       // measured dispatch on the histogram itself: |distinct values| is
       // the machinery's whole input — when it fits the driver cap, ONE
       // collect replaces the rank probe, the bucket pass and the

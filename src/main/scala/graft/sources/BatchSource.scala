@@ -7,12 +7,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PType}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.catalyst.InternalRow
@@ -20,9 +20,12 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.connector.Partitioner
@@ -34,14 +37,17 @@ import graft.connector.Partitioner
   *   - a staged result set is a directory of parquet files (what
   *     `write_pandas` uploads to a Snowflake stage, core.py:32-40);
   *   - the "batches" are parquet ROW GROUPS — lazy handles carrying only
-  *     (path, index, rows, bytes) from the footers, no data, exactly like
+  *     (path, index, rows, byte range) from the footers, no data, exactly like
   *     the reference's batch objects carry stage URLs (core.py:144-146);
   *   - `planInputPartitions` greedy-packs batches into size- or
   *     count-targeted partitions with the SAME [[Partitioner.pack]]
   *     algorithm the reference implements (core.py:149-197);
-  *   - each `PartitionReader` opens only its own row groups on the
-  *     executor (`skipNextRowGroup` for the rest) — the parallel
-  *     worker↔stage data plane of SURVEY §3.1 stage 10.
+  *   - each [[BatchPartitionReader]] decodes only its own row groups on
+  *     the executor with Spark's own `VectorizedParquetRecordReader` (one
+  *     byte-range split per run of consecutive row groups, hive partition
+  *     values as constant columns) — the parallel worker↔stage data plane
+  *     of SURVEY §3.1 stage 10, columnar end to end like the reference's
+  *     Arrow batches.
   *
   * Options: `partition_size` (default 100 MiB) / `npartitions`, exactly
   * one (core.py:164-167). Column pruning is pushed into the parquet reads
@@ -242,6 +248,9 @@ private[sources] object BatchSource {
         // match the native reader's mapping: UTC-adjusted → TimestampType,
         // wall-clock (isAdjustedToUTC=false) → TimestampNTZType
         case t: TimestampLogicalTypeAnnotation =>
+          // Spark's parquet reader decodes MILLIS and MICROS only
+          require(t.getUnit != TimeUnit.NANOS,
+            s"TIMESTAMP(NANOS) on '${p.getName}' unsupported: stage µs timestamps")
           if (t.isAdjustedToUTC) TimestampType else TimestampNTZType
         case null => LongType
         case _: LogicalTypeAnnotation.IntLogicalTypeAnnotation => LongType
@@ -260,8 +269,10 @@ private[sources] object BatchSource {
     }
   }
 
-  /** One lazy batch handle = one row group (path + index + stats only). */
-  case class BatchHandle(path: String, rowGroup: Int, rows: Long, bytes: Long)
+  /** One lazy batch handle = one row group (path + index + stats only);
+    * the row group's column chunks occupy bytes [start, start + bytes). */
+  case class BatchHandle(path: String, rowGroup: Int, rows: Long, bytes: Long,
+      start: Long)
 
   /** Driver-only per-column row-group statistics for batch pruning:
     * (min, max, nullCount) as comparable values; None when the footer has
@@ -289,7 +300,8 @@ private[sources] object BatchSource {
                 statValue(s.genericGetMax, c.getPrimitiveType), s.getNumNulls)))
             else None
           }.toMap
-        (BatchHandle(f.getPath.toString, i, b.getRowCount, b.getCompressedSize), stats)
+        (BatchHandle(f.getPath.toString, i, b.getRowCount, b.getCompressedSize,
+          b.getStartingPos), stats)
       }.toIndexedSeq
       finally reader.close()
     }
@@ -297,8 +309,7 @@ private[sources] object BatchSource {
 
   /** Footer min/max → the value SPARK sees for that cell: decimal unscaled
     * ints become BigDecimal at the annotated scale, DATE day numbers stay
-    * Int (= Spark's internal days), timestamps normalize to µs with the
-    * SAME floor-division the partition readers apply to NANOS, strings
+    * Int (= Spark's internal days), timestamps normalize to µs, strings
     * decode from Binary. Pruning comparisons against filter literals are
     * then exact in the value domain the reader materializes. */
   private def statValue(v: Any, p: PrimitiveType): Any = p.getLogicalTypeAnnotation match {
@@ -313,8 +324,7 @@ private[sources] object BatchSource {
       case l: java.lang.Long =>
         java.lang.Long.valueOf(t.getUnit match {
           case TimeUnit.MILLIS => Math.multiplyExact(l.longValue, 1000L)
-          case TimeUnit.MICROS => l.longValue
-          case TimeUnit.NANOS => Math.floorDiv(l.longValue, 1000L)
+          case _ => l.longValue
         })
       case other => other
     }
@@ -415,23 +425,6 @@ private[sources] object BatchSource {
   /** Column names a filter references (for targeted stats collection). */
   def filterCols(f: org.apache.spark.sql.sources.Filter): Set[String] =
     f.references.toSet
-
-  /** The parquet projection for a (possibly leaf-pruned) required schema:
-    * whole fields as stored, except unannotated groups (structs), which
-    * keep only the requested leaves in the requested order — the reader's
-    * per-index decode plans then line up with the pruned group, and
-    * parquet never materializes pages of unrequested leaves. */
-  def pruneMessage(fileMsg: MessageType, required: StructType): MessageType =
-    new MessageType("graft_pruned", required.fields.map { f =>
-      val ft = fileMsg.getFields.get(fileMsg.getFieldIndex(f.name))
-      (f.dataType, ft) match {
-        case (st: StructType, gt: org.apache.parquet.schema.GroupType)
-            if gt.getLogicalTypeAnnotation == null =>
-          new org.apache.parquet.schema.GroupType(gt.getRepetition, gt.getName,
-            st.fields.map(sf => gt.getType(sf.name)): _*)
-        case _ => ft
-      }
-    }: _*)
 }
 
 /** Hadoop Configuration isn't Serializable — ship it to executors with
@@ -840,225 +833,128 @@ private[sources] class BatchScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BatchReaderFactory(required, new SerializableHadoopConf(conf),
-      partCols.filter(f => required.fieldNames.contains(f.name)), rootDir)
+    new BatchReaderFactory(required, conf, partCols, rootDir)
 }
 
 /** Serialized to executors: only the lazy handles, never data. */
 private[sources] case class BatchInputPartition(
     handles: Array[BatchSource.BatchHandle]) extends InputPartition
 
+/** Columnar only: every partition decodes through [[BatchPartitionReader]].
+  * Built on the driver, so the session's reader settings
+  * (`spark.sql.parquet.columnarReaderBatchSize`,
+  * `spark.sql.columnVector.offheap.enabled`) and the parquet read-support
+  * keys `ParquetFileFormat` sets travel inside the factory. */
 private[sources] class BatchReaderFactory(
-    required: StructType, conf: SerializableHadoopConf,
-    partCols: Seq[StructField] = Seq.empty, rootDir: String = "")
+    required: StructType, hadoopConf: Configuration,
+    partCols: Seq[StructField], rootDir: String)
     extends PartitionReaderFactory {
 
-  /** `required` minus path-derived partition columns — what the parquet
-    * files themselves must supply. */
-  private val fileRequired = StructType(
-    required.fields.filterNot(f => partCols.exists(_.name == f.name)))
+  // the vectorized reader appends partition columns after the file's
+  // columns; inferSchema (and column pruning, which keeps its order)
+  // already puts them last
+  private val partSchema =
+    StructType(required.fields.filter(f => partCols.exists(_.name == f.name)))
+  private val fileSchema = StructType(required.fields.filterNot(partSchema.contains))
+  require(required.fields.sameElements(fileSchema.fields ++ partSchema.fields),
+    s"partition columns must trail the data columns: ${required.simpleString}")
+
+  private val batchSize = SQLConf.get.parquetVectorizedReaderBatchSize
+  private val offHeap = SQLConf.get.offHeapColumnVectorEnabled
+  private val conf = new SerializableHadoopConf({
+    val c = new Configuration(hadoopConf)
+    c.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, fileSchema.json)
+    // the schema-converter flags, pinned to what [[BatchSource.toStructType]]
+    // infers: exact names, opaque BINARY, no nanos-as-long
+    Seq(SQLConf.CASE_SENSITIVE -> true, SQLConf.PARQUET_BINARY_AS_STRING -> false,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> true,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED -> true,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> false)
+      .foreach { case (k, v) => c.setBoolean(k.key, v) }
+    c
+  })
+
+  override def supportColumnarReads(p: InputPartition): Boolean = true
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    if (partCols.isEmpty)
-      new BatchPartitionReader(p.asInstanceOf[BatchInputPartition], required, conf)
-    else
-      new PartitionedRowReader(
-        p.asInstanceOf[BatchInputPartition], required, fileRequired, partCols,
-        rootDir, conf)
+    throw new UnsupportedOperationException("graft scans decode columnar only")
 
-  /** Default data plane is COLUMNAR (ColumnarBatch + codegen'd
-    * ColumnarToRow); the row-based reader above stays as the fallback for
-    * projections with no file-backed columns (a zero-column parquet read
-    * has no column readers to drive the batch row count). */
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    fileRequired.nonEmpty
-
-  override def createColumnarReader(
-      p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    if (partCols.isEmpty)
-      new ColumnarBatchPartitionReader(
-        p.asInstanceOf[BatchInputPartition], required, conf)
-    else
-      new PartitionedColumnarReader(
-        p.asInstanceOf[BatchInputPartition], required, fileRequired, partCols,
-        rootDir, conf)
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
+    new BatchPartitionReader(p.asInstanceOf[BatchInputPartition].handles,
+      partSchema, rootDir, conf.value, batchSize, offHeap)
 }
 
-/** Executor-side materialization (SURVEY §3.1 stage 10): open each file,
-  * read ONLY this partition's row groups (skip the rest without IO),
-  * decode to InternalRow with the pruned schema. */
+/** Executor-side decode (SURVEY §3.1 stage 10) through Spark's own
+  * `VectorizedParquetRecordReader` — the reader `spark.read.parquet` runs.
+  * Each maximal run of consecutive row groups of one file opens as ONE
+  * `FileSplit`: parquet-hadoop keeps a row group iff its midpoint falls in
+  * the split's byte range, so [first run start, last run end) selects
+  * exactly that run and a pruned row group between two runs stays unread.
+  * The requested (pruned) schema travels in the factory's conf; the file's
+  * hive partition values ride as constant columns via `initBatch`. Rebase
+  * modes are CORRECTED: values decode as stored, with no calendar shift. */
 private[sources] class BatchPartitionReader(
-    partition: BatchInputPartition, required: StructType,
-    serConf: SerializableHadoopConf)
-    extends PartitionReader[InternalRow] {
+    handles: Seq[BatchSource.BatchHandle], partSchema: StructType,
+    rootDir: String, conf: Configuration, batchSize: Int, offHeap: Boolean)
+    extends PartitionReader[ColumnarBatch] {
 
-  private val conf = serConf.value
-  private val byFile: Seq[(String, Seq[Int])] = partition.handles
-    .groupBy(_.path).view.mapValues(_.map(_.rowGroup).toIndexedSeq)
-    .toSeq.sortBy(_._1)
+  private val runs = BatchPartitionReader.runs(handles).iterator
+  private var reader: VectorizedParquetRecordReader = _
+  private var run: Seq[BatchSource.BatchHandle] = Seq.empty
+  private var planned, rowsRead = 0L
 
-  private var fileIdx = 0
-  private var reader: ParquetFileReader = _
-  private var prunedMsg: MessageType = _
-  private var wanted: Set[Int] = Set.empty
-  private var groupIdx = 0
-  private var recordIter: Iterator[Group] = Iterator.empty
-  private var current: InternalRow = _
-
-  private def openNextFile(): Boolean = {
-    if (reader != null) { reader.close(); reader = null }
-    if (fileIdx >= byFile.length) return false
-    val (path, groups) = byFile(fileIdx)
-    fileIdx += 1
-    val in = HadoopInputFile.fromPath(new Path(path), conf)
-    reader = ParquetFileReader.open(in)
-    val fileMsg = reader.getFooter.getFileMetaData.getSchema
-    prunedMsg = BatchSource.pruneMessage(fileMsg, required)
-    reader.setRequestedSchema(prunedMsg)
-    wanted = groups.toSet
-    groupIdx = 0
-    recordIter = Iterator.empty
-    true
-  }
-
-  private def advanceRowGroup(): Boolean = {
-    while (reader != null) {
-      if (groupIdx >= reader.getFooter.getBlocks.size()) {
-        if (!openNextFile()) return false
-      } else if (!wanted.contains(groupIdx)) {
-        reader.skipNextRowGroup()
-        groupIdx += 1
-      } else {
-        val pages = reader.readNextRowGroup()
-        val rows = reader.getFooter.getBlocks.get(groupIdx).getRowCount
-        groupIdx += 1
-        val io = new ColumnIOFactory().getColumnIO(prunedMsg)
-        val rr = io.getRecordReader(pages, new GroupRecordConverter(prunedMsg))
-        recordIter = (0L until rows).iterator.map(_ => rr.read())
-        return true
+  private def openNextRun(): Boolean = {
+    close()
+    if (!runs.hasNext) return false
+    run = runs.next()
+    val (first, last) = (run.head, run.last)
+    reader = new VectorizedParquetRecordReader(
+      null, "CORRECTED", "UTC", "CORRECTED", "UTC", offHeap, batchSize)
+    reader.initialize(
+      new FileSplit(new Path(first.path), first.start,
+        last.start + last.bytes - first.start, Array.empty[String]),
+      new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+    val vals = Partitions.valuesOf(first.path, rootDir, partSchema.fields.toSeq)
+    reader.initBatch(partSchema, new GenericInternalRow(partSchema.fields.map { f =>
+      vals.getOrElse(f.name, null) match {
+        case s: String => UTF8String.fromString(s)
+        case v => v
       }
-    }
-    false
+    }))
+    planned = run.map(_.rows).sum
+    rowsRead = 0L
+    true
   }
 
   override def next(): Boolean = {
-    while (!recordIter.hasNext) {
-      if (reader == null) {
-        if (!openNextFile()) return false
-      } else if (!advanceRowGroup()) return false
+    while (reader == null || !reader.nextBatch()) {
+      // the byte range must have selected exactly the planned row groups
+      if (reader != null && rowsRead != planned)
+        throw new IllegalStateException(s"${run.head.path}: read $rowsRead rows " +
+          s"for row groups ${run.map(_.rowGroup).mkString(",")}, planned $planned")
+      if (!openNextRun()) return false
     }
-    current = convert(recordIter.next())
+    rowsRead += reader.resultBatch().numRows
     true
   }
 
-  override def get(): InternalRow = current
+  override def get(): ColumnarBatch = reader.resultBatch()
 
-  override def close(): Unit = if (reader != null) reader.close()
+  override def close(): Unit = if (reader != null) { reader.close(); reader = null }
+}
 
-  /** Decode one present primitive value at `(g, idx)` to Spark internal
-    * representation; `pt` is the parquet type carrying the physical width
-    * / timestamp unit the Spark schema doesn't. Shared by top-level and
-    * struct-nested fields. */
-  private def primValue(g: Group, idx: Int, dt: DataType, pt: PType): Any = dt match {
-    case BooleanType => g.getBoolean(idx, 0)
-    case IntegerType => g.getInteger(idx, 0)
-    case LongType => g.getLong(idx, 0)
-    case FloatType => g.getFloat(idx, 0)
-    case DoubleType => g.getDouble(idx, 0)
-    case StringType => UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
-    case BinaryType => g.getBinary(idx, 0).getBytes
-    case DateType => g.getInteger(idx, 0) // parquet DATE = Spark days
-    case d: DecimalType =>
-      import org.apache.spark.sql.types.Decimal
-      pt.asPrimitiveType().getPrimitiveTypeName match {
-        case INT32 => Decimal(g.getInteger(idx, 0).toLong, d.precision, d.scale)
-        case INT64 => Decimal(g.getLong(idx, 0), d.precision, d.scale)
-        case _ => Decimal(new java.math.BigDecimal(
-            new java.math.BigInteger(g.getBinary(idx, 0).getBytes), d.scale),
-          d.precision, d.scale)
+private[sources] object BatchPartitionReader {
+
+  /** Handles grouped into maximal runs of consecutive row groups per file,
+    * in (path, row group) order. */
+  def runs(handles: Seq[BatchSource.BatchHandle]): Seq[Seq[BatchSource.BatchHandle]] =
+    handles.sortBy(h => (h.path, h.rowGroup))
+      .foldLeft(List.empty[List[BatchSource.BatchHandle]]) {
+        case ((prev :: run) :: done, h)
+            if prev.path == h.path && prev.rowGroup + 1 == h.rowGroup =>
+          (h :: prev :: run) :: done
+        case (done, h) => List(h) :: done
       }
-    case TimestampType | TimestampNTZType =>
-      // Spark internal = µs since epoch; normalize the parquet unit
-      val raw = g.getLong(idx, 0)
-      pt.asPrimitiveType().getLogicalTypeAnnotation match {
-        case t: TimestampLogicalTypeAnnotation => t.getUnit match {
-          case TimeUnit.MILLIS => raw * 1000L
-          case TimeUnit.MICROS => raw
-          // floor (not truncate): pre-epoch nanos must round down
-          // like Spark's native parquet reader
-          case TimeUnit.NANOS => Math.floorDiv(raw, 1000L)
-        }
-        case _ => raw
-      }
-    case other => throw new IllegalArgumentException(s"unsupported type $other")
-  }
-
-  private def convert(g: Group): InternalRow = {
-    val vals = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      vals(i) =
-        if (g.getFieldRepetitionCount(i) == 0) null
-        else required.fields(i).dataType match {
-          case st: StructType =>
-            // one-level struct group: decode each present primitive subfield
-            val grp = g.getGroup(i, 0)
-            val gt = prunedMsg.getType(i).asGroupType()
-            val sub = new Array[Any](st.length)
-            var k = 0
-            while (k < st.length) {
-              sub(k) =
-                if (grp.getFieldRepetitionCount(k) == 0) null
-                else primValue(grp, k, st.fields(k).dataType, gt.getType(k))
-              k += 1
-            }
-            new GenericInternalRow(sub)
-          case MapType(kt, vt, _) =>
-            // standard MAP: outer group → repeated key_value(key, value)
-            val outer = g.getGroup(i, 0)
-            val kvType = prunedMsg.getType(i).asGroupType().getType(0).asGroupType()
-            val m = outer.getFieldRepetitionCount(0)
-            val keys = new Array[Any](m)
-            val values = new Array[Any](m)
-            var j = 0
-            while (j < m) {
-              val kv = outer.getGroup(0, j)
-              keys(j) = primValue(kv, 0, kt, kvType.getType(0))
-              values(j) =
-                if (kv.getFieldRepetitionCount(1) == 0) null
-                else primValue(kv, 1, vt, kvType.getType(1))
-              j += 1
-            }
-            new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(values))
-          case ArrayType(elemType, _) =>
-            // 3-level list: outer group → repeated "list" → "element"
-            val outer = g.getGroup(i, 0)
-            val n = outer.getFieldRepetitionCount(0)
-            val values = new Array[Any](n)
-            var j = 0
-            while (j < n) {
-              val entry = outer.getGroup(0, j)
-              values(j) =
-                if (entry.getFieldRepetitionCount(0) == 0) null
-                else elemType match {
-                  case FloatType => entry.getFloat(0, 0)
-                  case DoubleType => entry.getDouble(0, 0)
-                  case IntegerType => entry.getInteger(0, 0)
-                  case LongType => entry.getLong(0, 0)
-                  case StringType => UTF8String.fromBytes(entry.getBinary(0, 0).getBytes)
-                  case other => throw new IllegalArgumentException(
-                    s"unsupported array element type $other")
-                }
-              j += 1
-            }
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(values)
-          case dt => primValue(g, i, dt, prunedMsg.getType(i))
-        }
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
+      .reverse.map(_.reverse)
 }

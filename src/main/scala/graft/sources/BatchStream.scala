@@ -17,7 +17,7 @@ import graft.connector.Partitioner
   * the staged directory become the next micro-batch — the continuously-fed
   * stage scenario (a warehouse unloading result batches while the cluster
   * consumes them). Reuses the batch machinery wholesale: discovery, greedy
-  * packing, and the columnar [[BatchPartitionReader]] plane.
+  * packing, and the vectorized [[BatchPartitionReader]].
   *
   * Offsets index into a FILE LOG persisted under the query's checkpoint
   * (`graft-file-log/seg-<start>`, one segment per discovery that found new
@@ -358,8 +358,7 @@ private[sources] class BatchMicroBatchStream(
     // partition columns flow through the stream too: without them a
     // partitioned stage's readers would ask the footer for a column that
     // lives only in the path
-    new BatchReaderFactory(required, new SerializableHadoopConf(conf),
-      partCols.filter(f => required.fieldNames.contains(f.name)),
+    new BatchReaderFactory(required, conf, partCols,
       BatchSource.qualifiedDir(options, conf))
 
   override def stop(): Unit = ()

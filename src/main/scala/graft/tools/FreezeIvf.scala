@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Vector
@@ -18,12 +17,7 @@ import graft.ops.Vector
 object FreezeIvf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val sample = graft.warehouse.Tables.table(spark, sfDir, "embeddings")
       .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .limit(20000)

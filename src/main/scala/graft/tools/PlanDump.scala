@@ -24,13 +24,7 @@ object PlanDump {
       "usage: PlanDump <sfDir> <outDir> <tag> q_key1,q_key2")
     val Array(sfDir, outDir, tag, keysCsv) = args
     val keys = keysCsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(logLevel = "ERROR")
     graft.warehouse.Tables.register(spark, sfDir)
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     Files.createDirectories(Paths.get(outDir))

@@ -214,4 +214,26 @@ class HistQuantilesSpec extends SparkSpec {
     assertSameRows(ga, gb)
     assert(ga.count() == 1 && ga.head.getLong(0) == 0L)
   }
+
+  test("a value type the driver arm does not replay takes the " +
+      "distributed arm, never a driver-side error") {
+    // DATE values, far under the row cap. The driver replay handles
+    // numeric values only, so this call must behave exactly like the
+    // forced distributed arm: whatever that arm returns — here Spark's
+    // own analysis error for date arithmetic — and never the replay's
+    // unsupported-type error after a collect
+    val named = Seq(0.25 -> "q1", 0.5 -> "q2")
+    val dates = (0 until 300).map(i => (s"g${i % 3}", i * 7 % 101))
+      .toDF("g", "d")
+      .select(col("g"), date_add(lit("2024-02-27").cast("date"), col("d")).as("v"))
+    def outcome(cap: Int): Either[String, Seq[Seq[Any]]] =
+      scala.util.Try(Relational.histQuantiles(dates, "v", Seq("g"), named,
+          histDriverMaxRows = cap).orderBy("g").collect().toSeq.map(_.toSeq)) match {
+        case scala.util.Success(rows) => Right(rows)
+        case scala.util.Failure(e: org.apache.spark.sql.AnalysisException) =>
+          Left(e.getCondition)
+        case scala.util.Failure(e) => throw e
+      }
+    assert(outcome(Relational.HistDriverMaxRows) == outcome(0))
+  }
 }

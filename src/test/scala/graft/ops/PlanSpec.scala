@@ -890,21 +890,39 @@ class PlanSpec extends SparkSpec {
 
   test("q_profile_equidepth bins via broadcast cutpoints, never a global sort of the fact") {
     val p = plan("q_profile_equidepth")
-    // histQuantiles materializes the value-grain histogram with a
-    // lineage cut (the corpus pass runs ONCE), so the plan reads it as
-    // a concrete RDD scan; windows run only over histogram-derived
-    // frames, never raw fact rows
-    assert(p.contains("Scan ExistingRDD"),
-      s"the value histogram must be a materialized (checkpointed) scan:\n$p")
-    // the only parquet scans left belong to the final binning pass —
-    // pruned to the value column; a window over the raw fact would
-    // need a wider scan than this
+    // histQuantiles' full-driver arm replays the ranks over one bounded
+    // collect of the value-grain histogram, so the 1-row cutpoints come
+    // back as a local relation; no window runs over raw fact rows
+    assert(p.contains("LocalTableScan"),
+      s"the cutpoints must be a driver-built local relation:\n$p")
+    // the only parquet scans belong to the final binning pass — pruned
+    // to the value column; a window over the raw fact would need a wider
+    // scan than this
     val scans = p.linesIterator.filter(_.contains("FileScan parquet")).toSeq
     assert(scans.nonEmpty &&
       scans.forall(_.contains("ReadSchema: struct<o_totalprice:double>")),
-      s"every remaining fact scan must be the pruned binning pass:\n$p")
+      s"every fact scan must be the pruned binning pass:\n$p")
     assert(p.contains("BroadcastExchange"),
       s"the 1-row cutpoints must broadcast back onto the fact:\n$p")
+  }
+
+  test("histQuantiles' distributed arm reads the materialized histogram") {
+    // histDriverMaxRows = 0 forces the distributed rank/bucket machinery:
+    // the value-grain histogram is materialized with a lineage cut (the
+    // corpus pass runs ONCE), so its plan reads a concrete RDD scan and
+    // no fact scan at all
+    val orders = graft.warehouse.Tables.table(spark, sfDir, "orders")
+      .select("o_totalprice")
+    val named = Seq(0.25 -> "c1", 0.5 -> "c2", 0.75 -> "c3")
+    val cuts = Relational.histQuantiles(orders, "o_totalprice", Nil, named,
+      histDriverMaxRows = 0)
+    val p = cuts.queryExecution.executedPlan.toString
+    assert(p.contains("Scan ExistingRDD"),
+      s"the value histogram must be a materialized (checkpointed) scan:\n$p")
+    assert(!p.contains("FileScan parquet"),
+      s"the cutpoint plan must not rescan the fact:\n$p")
+    assertSameRows(cuts,
+      Relational.histQuantiles(orders, "o_totalprice", Nil, named))
   }
 
   test("q_agg_argmax is one mergeable struct-max agg, not a per-group window") {

@@ -598,45 +598,49 @@ class BatchSourceSpec extends SparkSpec {
     assertSameRows(back, spark.read.parquet(dir))
   }
 
-  test("row-based fallback reader decodes nested columns like the columnar plane") {
-    // the row-based PartitionReader only runs for zero-column projections
-    // in production, but it must stay a faithful fallback — drive it
-    // directly over a staged nested file and compare to the columnar path
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    val dir = Files.createTempDirectory("graft_rowbased").toString
-    Tables.table(spark, sfDir, "documents").limit(50).selectExpr(
-        "doc_id",
-        "named_struct('mime', 'x', 'n', CAST(octet_length(text) AS BIGINT)) AS meta",
-        "map('lang', lang) AS attrs",
-        "CAST(text AS BINARY) AS payload")
-      .coalesce(1).write.format("graft").mode("overwrite").save(dir)
-    val opts = new CaseInsensitiveStringMap(java.util.Map.of("path", dir))
-    val schema = new BatchSource().inferSchema(opts)
+  test("a read needing no file column decodes through the vectorized reader") {
+    // count(*) after a LIMIT prunes every file column: the scan decodes
+    // row counts only, through the same reader as every other scan
+    // (a plain count() would be answered from footer metadata instead)
+    val dir = stage("orders", 3)
+    val n = 1234
+    val total = spark.read.parquet(dir).count()
+    assert(spark.read.format("graft").load(dir).limit(n).count() ==
+      spark.read.parquet(dir).limit(n).count())
+    assert(spark.read.format("graft").option("npartitions", 2).load(dir)
+      .limit(total.toInt + 5).count() == total)
+  }
+
+  test("a filter pruning the MIDDLE row group reads only the outer two") {
+    // one sorted file of ≥ 3 row groups; a filter whose footer stats drop
+    // the middle group leaves two non-adjacent runs in ONE partition —
+    // the middle group must not come back in through a byte range
+    val dir = Files.createTempDirectory("graft_mid_prune").toString
+    Tables.table(spark, sfDir, "orders")
+      .orderBy("o_orderkey").coalesce(1)
+      .write.option("parquet.block.size", 32 * 1024)
+      .mode("overwrite").parquet(dir)
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", dir))
     val conf = BatchSource.hadoopConf()
-    val handles = BatchSource.discoverBatches(
-      BatchSource.listFiles(opts, conf), conf).map(_._1)
-    val part = BatchInputPartition(handles.toArray)
-    val reader = new BatchPartitionReader(part, schema,
-      new SerializableHadoopConf(conf))
-    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.catalyst.InternalRow]
-    while (reader.next()) rows += reader.get().copy()
-    reader.close()
-    assert(rows.length == 50)
-    val viaColumnar = spark.read.format("graft").load(dir)
-      .selectExpr("doc_id", "meta.n AS n", "element_at(attrs, 'lang') AS lang",
-        "md5(payload) AS digest")
-      .orderBy("doc_id").collect()
-    val viaRows = rows.map { r =>
-      val meta = r.getStruct(1, 2)
-      val m = r.getMap(2)
-      (r.getLong(0), meta.getLong(1),
-        m.valueArray().getUTF8String(0).toString,
-        org.apache.commons.codec.digest.DigestUtils.md5Hex(r.getBinary(3)))
-    }.sortBy(_._1)
-    viaColumnar.zip(viaRows).foreach { case (c, (id, n, lang, digest)) =>
-      assert(c.getLong(0) == id && c.getLong(1) == n)
-      assert(c.getString(2) == lang && c.getString(3) == digest)
-    }
+    val groups = BatchSource.discoverBatches(
+      BatchSource.listFiles(opts, conf), conf, Set("o_orderkey"))
+    assert(groups.length >= 3, s"need ≥ 3 row groups, got ${groups.length}")
+    val mid = groups.length / 2
+    def stat(i: Int, k: Int) =
+      groups(i)._2("o_orderkey").productElement(k).asInstanceOf[Long]
+    val (lo, hi) = (stat(mid - 1, 1), stat(mid + 1, 0))
+    val pred = col("o_orderkey") <= lo || col("o_orderkey") >= hi
+    val df = spark.read.format("graft").option("npartitions", 1).load(dir)
+      .filter(pred)
+    assert(df.rdd.getNumPartitions == 1)
+    assert(df.queryExecution.executedPlan.toString
+      .contains(s"batches=${groups.length - 1}/${groups.length}"),
+      df.queryExecution.executedPlan.toString)
+    assertSameRows(df, spark.read.parquet(dir).filter(pred))
+    // the unfiltered single-partition read sees every row group once
+    assertSameRows(spark.read.format("graft").option("npartitions", 1).load(dir),
+      spark.read.parquet(dir))
   }
 
   test("footer pruning and MIN/MAX stay exact for BIGINT beyond 2^53") {
