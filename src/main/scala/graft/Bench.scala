@@ -8,6 +8,9 @@ object Bench {
     // temp views once per session; schemas are static). Without this the
     // ~5s first-job JIT cost lands on whichever query happens to run first.
     graft.warehouse.Tables.register(spark, sfDir)
+    // the DSv2 keys stage their fixtures on first use; stage them here,
+    // untimed, so their `cold` times grade the read and not the write
+    connector.ConnectorQueries.prestage(spark, sfDir)
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     // shared-machinery JIT warmup: the FIRST use of lower()/regexp_replace()/
     // md5() in a JVM pays ~1s of one-time init (case-mapping tables, regex,

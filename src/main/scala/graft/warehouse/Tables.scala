@@ -11,9 +11,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the "warehouse" is Spark SQL + Catalyst over these views, so predicate
   * pushdown / column pruning reach the parquet scan natively.
   *
-  * Registration reads only the parquet footer (schema), no data; repeated
-  * calls with the same dir are a cheap hash-map hit — important because
-  * every `SparkEntry.queries` fn calls this and Bench times each call.
+  * Registration writes nothing. It pins two session parquet settings and
+  * creates the ten views; `spark.read.parquet` infers each view's schema
+  * with one small Spark job over the footers, so the first call costs a
+  * few seconds. Repeated calls with the same dir are a cheap hash-map
+  * hit — important because every `SparkEntry.queries` fn calls this and
+  * Bench times each call. The DSv2 write-then-read fixtures are staged on
+  * first use by the query keys that read them, not here.
   */
 object Tables {
 
@@ -68,12 +72,7 @@ object Tables {
           if (Files.exists(Paths.get(p)))
             normalizeTs(spark.read.parquet(p)).createOrReplaceTempView(t)
         }
-        registered.put(k, sfDir) // before prestage: its table() calls re-enter
-        // Stage the DSv2 write-then-read fixtures up front (idempotent).
-        // This runs inside the warmup path — Bench calls register before
-        // timing — so a timed DSv2 key grades its read plan, not the
-        // one-time fixture write.
-        graft.connector.ConnectorQueries.prestage(spark, sfDir)
+        registered.put(k, sfDir)
       }
     }
   }

@@ -141,4 +141,35 @@ class ConnectorSpec extends SparkSpec {
       graft.Graft.compactSmallFiles(spark, in, out, targetBytes = 0)
     }
   }
+
+  private def rowsOf(s: org.apache.spark.sql.SparkSession, key: String) =
+    graft.SparkEntry.queries(key)(s, sfDir).collect().map(_.toSeq).toSeq
+
+  test("Tables.register stages no fixture; each key stages its own on first use") {
+    StageCache.clearAll()
+    // a fresh session has not registered the dir yet, and carries none of
+    // the parquet settings register pins
+    val fresh = spark.newSession()
+    Tables.register(fresh, sfDir)
+    assert(StageCache.size == 0, "register must not stage DSv2 fixtures")
+    // DATE/DECIMAL stage (written after the pin), nested stage, catalog tables
+    val keys = Seq("q_dsv2_decimal", "q_layout_compact", "q_bucket_join")
+    val lazily = keys.map(k => k -> rowsOf(fresh, k)).toMap
+    assert(StageCache.size > 0)
+    StageCache.clearAll()
+    ConnectorQueries.prestage(fresh, sfDir)
+    keys.foreach { k =>
+      val eager = rowsOf(fresh, k)
+      assert(eager.nonEmpty, k)
+      assert(lazily(k) == eager, s"$k: rows differ between lazy and prestaged fixtures")
+    }
+  }
+
+  test("q_bucket_join re-creates its tables after StageCache.clearAll()") {
+    val first = rowsOf(spark, "q_bucket_join")
+    StageCache.clearAll()
+    // the catalog still lists the tables; their files are gone
+    assert(rowsOf(spark, "q_bucket_join") == first)
+    assert(first.nonEmpty)
+  }
 }
