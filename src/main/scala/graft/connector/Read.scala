@@ -1,6 +1,8 @@
 package graft.connector
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 import graft.warehouse.Tables
 
@@ -24,9 +26,11 @@ import graft.warehouse.Tables
   *     derived from the plan's size estimate (the analogue of the
   *     reference's sampled row width, core.py:172-179)
   *
-  * Scale note: reducing partition counts uses `coalesce` (no shuffle — at
-  * 100 TB a shuffle just to resize partitions would dominate the query);
-  * only a genuine increase pays `repartition`'s round-robin shuffle.
+  * Scale note: reducing a scan's partition count uses `coalesce` (no
+  * shuffle — at 100 TB a shuffle just to resize partitions would dominate
+  * the query); only a genuine increase pays `repartition`'s round-robin
+  * shuffle. A plan with an exchange (aggregates, joins) is repartitioned
+  * without probing its count first — see [[resize]].
   */
 object Read {
 
@@ -75,11 +79,26 @@ object Read {
     n.max(1).min(Int.MaxValue).toInt
   }
 
-  /** Shuffle-free when shrinking; round-robin repartition only to grow. */
-  private def resize(df: DataFrame, n: Int): DataFrame = {
-    val cur = df.rdd.getNumPartitions
-    if (n < cur) df.coalesce(n)
-    else if (n > cur) df.repartition(n)
-    else df
+  /** Exactly `n` partitions. An exchange-free plan knows its partition
+    * count without running anything: shuffle-free `coalesce` to shrink,
+    * round-robin `repartition` only to grow. A plan with an exchange would
+    * run its stages just to report the count (AQE sizes them at run time)
+    * and the caller's action would run them again, so it takes
+    * `repartition(n)` unprobed. */
+  private def resize(df: DataFrame, n: Int): DataFrame =
+    if (hasExchange(df)) df.repartition(n)
+    else {
+      val cur = df.rdd.getNumPartitions
+      if (n < cur) df.coalesce(n)
+      else if (n > cur) df.repartition(n)
+      else df
+    }
+
+  private def hasExchange(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan // the unexecuted initial plan
+      case p => p
+    }
+    plan.collectWithSubqueries { case e: Exchange => e }.nonEmpty
   }
 }

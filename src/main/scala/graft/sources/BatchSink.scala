@@ -3,14 +3,15 @@ package graft.sources
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** The write half of the DSv2 connector — `to_snowflake`'s architecture
   * (SURVEY §3.2): every partition writes its own staged file in parallel
@@ -21,11 +22,19 @@ import org.apache.spark.sql.types._
   *
   * `df.write.format("graft").mode(...).save(dir)` stages files that
   * [[BatchSource]] (or any parquet reader) reads back — the two halves
-  * of the connector close the loop.
+  * of the connector close the loop. Like `write_pandas`, the sink does
+  * not encode parquet itself: every file is written by the `OutputWriter`
+  * Spark's `ParquetUtils.prepareWrite` returns — the encoder and
+  * Spark→parquet type mapping `df.write.parquet` runs — under the pinned
+  * [[BatchSink.writeConf]]. The schema must pass
+  * [[BatchSource.requireReadable]], checked here on the driver before any
+  * task stages a file.
   */
 private[sources] class BatchWriteBuilder(
     schema: StructType, dir: String, partitionBy: Seq[String])
     extends WriteBuilder with SupportsTruncate {
+
+  BatchSource.requireReadable(schema)
 
   partitionBy.foreach { c =>
     require(schema.fieldNames.contains(c),
@@ -93,9 +102,19 @@ private[sources] class BatchSinkWrite(
     schema: StructType, dir: String, truncate: Boolean, partitionBy: Seq[String])
     extends BatchWrite {
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new BatchWriterFactory(schema, dir,
-      new SerializableHadoopConf(BatchSource.hadoopConf()), partitionBy)
+  /** Spark's parquet writer, prepared once on the driver under the pinned
+    * [[BatchSink.writeConf]] and shipped with its Hadoop conf to every
+    * task. Partition columns are carried by the paths, so the data files'
+    * schema excludes them. */
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    val job = Job.getInstance(BatchSource.hadoopConf())
+    val sqlConf = BatchSink.writeConf()
+    val factory = ParquetUtils.prepareWrite(sqlConf, job,
+      StructType(schema.filterNot(f => partitionBy.contains(f.name))),
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    new BatchWriterFactory(schema, dir, partitionBy, factory,
+      new SerializableConfiguration(job.getConfiguration))
+  }
 
   /** Commit: truncate-then-visible. Staged attempt files are invisible to
     * [[BatchSource]] until renamed to `.parquet` here, so readers never
@@ -138,14 +157,15 @@ private[sources] case class BatchFileCommit(stagedPaths: Seq[String])
     extends WriterCommitMessage
 
 private[sources] class BatchWriterFactory(
-    schema: StructType, dir: String, conf: SerializableHadoopConf,
-    partitionBy: Seq[String])
+    schema: StructType, dir: String, partitionBy: Seq[String],
+    factory: OutputWriterFactory, conf: SerializableConfiguration)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     if (partitionBy.isEmpty)
-      new BatchDataWriter(schema, dir, partitionId, taskId, conf)
+      new BatchDataWriter(schema, dir, partitionId, taskId, factory, conf)
     else
-      new PartitionedBatchDataWriter(schema, dir, partitionId, taskId, conf, partitionBy)
+      new PartitionedBatchDataWriter(schema, dir, partitionId, taskId,
+        partitionBy, factory, conf)
 }
 
 /** Hive-layout routing writer: each row lands in the file for its
@@ -157,13 +177,16 @@ private[sources] class BatchWriterFactory(
   * (`df.repartition(col)`) the same way Spark's own file sink expects. */
 private[sources] class PartitionedBatchDataWriter(
     schema: StructType, dir: String, partitionId: Int, taskId: Long,
-    conf: SerializableHadoopConf, partitionBy: Seq[String])
+    partitionBy: Seq[String], factory: OutputWriterFactory,
+    conf: SerializableConfiguration)
     extends DataWriter[InternalRow] {
 
   private val partOrds: Array[Int] = partitionBy.map(schema.fieldIndex).toArray
   private val dataFields: Array[Int] =
     schema.fields.indices.filterNot(partOrds.contains(_)).toArray
   private val dataSchema = StructType(dataFields.map(schema.fields))
+  // partition columns projected out without a copy; the path carries them
+  private val projected = ProjectingInternalRow(dataSchema, dataFields.toIndexedSeq)
 
   private val open = scala.collection.mutable.LinkedHashMap
     .empty[String, BatchDataWriter]
@@ -199,14 +222,11 @@ private[sources] class PartitionedBatchDataWriter(
       val key = partitionBy.zip(vals.toIndexedSeq)
         .map { case (n, v) => s"$n=${Partitions.encode(v)}" }.mkString("/")
       lastWriter = open.getOrElseUpdate(key,
-        new BatchDataWriter(dataSchema, s"$dir/$key", partitionId, taskId, conf))
+        new BatchDataWriter(dataSchema, s"$dir/$key", partitionId, taskId, factory, conf))
       lastVals = vals
     }
-    val writer = lastWriter
-    // project partition columns out; the path carries them
-    val projected = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      dataFields.map(i => row.get(i, schema.fields(i).dataType)): Array[Any])
-    writer.write(projected)
+    projected.project(row)
+    lastWriter.write(projected)
   }
 
   override def commit(): WriterCommitMessage =
@@ -219,99 +239,26 @@ private[sources] class PartitionedBatchDataWriter(
   override def close(): Unit = open.values.foreach(_.close())
 }
 
+/** One staged file, encoded by the `OutputWriter` Spark's own parquet
+  * source uses (`ParquetOutputWriter` over `ParquetWriteSupport`):
+  * `InternalRow`s go straight through, no per-row conversion. */
 private[sources] class BatchDataWriter(
-    schema: StructType, dir: String, partitionId: Int, taskId: Long,
-    conf: SerializableHadoopConf)
+    dataSchema: StructType, dir: String, partitionId: Int, taskId: Long,
+    factory: OutputWriterFactory, conf: SerializableConfiguration)
     extends DataWriter[InternalRow] {
 
-  private val msg: MessageType = BatchSink.toMessageType(schema)
   // unique per (partition, task attempt): retries never collide
   private val staged = new Path(dir,
     f"part-$partitionId%05d-$taskId-${UUID.randomUUID().toString.take(8)}.staged")
-  private lazy val writer = {
-    val c = new org.apache.hadoop.conf.Configuration(conf.value)
-    ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(staged, c))
-      .withType(msg)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-  }
-
-  /** Write one present primitive value from `row(ord)` into `g(idx)` —
-    * shared by top-level fields and struct subfields. */
-  private def addPrim(
-      g: org.apache.parquet.example.data.Group, idx: Int, dt: DataType,
-      row: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      ord: Int): Unit = dt match {
-    case BooleanType => g.add(idx, row.getBoolean(ord))
-    case IntegerType => g.add(idx, row.getInt(ord))
-    case LongType => g.add(idx, row.getLong(ord))
-    case FloatType => g.add(idx, row.getFloat(ord))
-    case DoubleType => g.add(idx, row.getDouble(ord))
-    case StringType => g.add(idx, row.getUTF8String(ord).toString)
-    case BinaryType => g.add(idx,
-      org.apache.parquet.io.api.Binary.fromConstantByteArray(row.getBinary(ord)))
-    case DateType => g.add(idx, row.getInt(ord)) // days since epoch
-    case d: DecimalType =>
-      val dec = row.getDecimal(ord, d.precision, d.scale)
-      if (d.precision <= Decimal.MAX_INT_DIGITS) g.add(idx, dec.toUnscaledLong.toInt)
-      else if (d.precision <= Decimal.MAX_LONG_DIGITS) g.add(idx, dec.toUnscaledLong)
-      else g.add(idx, org.apache.parquet.io.api.Binary.fromConstantByteArray(
-        dec.toJavaBigDecimal.unscaledValue().toByteArray))
-    case TimestampType | TimestampNTZType => g.add(idx, row.getLong(ord)) // µs
-    case other => throw new IllegalArgumentException(s"unsupported type $other")
-  }
-
-  override def write(row: InternalRow): Unit = {
-    val g = new SimpleGroup(msg)
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) schema.fields(i).dataType match {
-        case st: StructType =>
-          val sub = row.getStruct(i, st.length)
-          val grp = g.addGroup(i)
-          var k = 0
-          while (k < st.length) {
-            if (!sub.isNullAt(k)) addPrim(grp, k, st.fields(k).dataType, sub, k)
-            k += 1
-          }
-        case MapType(kt, vt, _) =>
-          val m = row.getMap(i)
-          val keys = m.keyArray()
-          val vals = m.valueArray()
-          val mapGroup = g.addGroup(i)
-          var j = 0
-          while (j < m.numElements()) {
-            val kv = mapGroup.addGroup(0)
-            addPrim(kv, 0, kt, keys, j)
-            if (!vals.isNullAt(j)) addPrim(kv, 1, vt, vals, j)
-            j += 1
-          }
-        case ArrayType(elemType, _) =>
-          // 3-level list: field group → repeated "list" group → "element";
-          // a null element is a "list" entry with no "element" child
-          val arr = row.getArray(i)
-          val listGroup = g.addGroup(i)
-          var j = 0
-          while (j < arr.numElements()) {
-            val entry = listGroup.addGroup(0)
-            if (!arr.isNullAt(j)) elemType match {
-              case FloatType => entry.add(0, arr.getFloat(j))
-              case DoubleType => entry.add(0, arr.getDouble(j))
-              case IntegerType => entry.add(0, arr.getInt(j))
-              case LongType => entry.add(0, arr.getLong(j))
-              case StringType => entry.add(0, arr.getUTF8String(j).toString)
-              case other => throw new IllegalArgumentException(
-                s"unsupported array element type $other")
-            }
-            j += 1
-          }
-        case dt => addPrim(g, i, dt, row, i)
-      }
-      i += 1
+  // the write support reads its rebase modes from SQLConf.get when it is
+  // built, so it is built under the pinned conf, not the session's
+  private lazy val writer: OutputWriter =
+    SQLConf.withExistingConf(BatchSink.writeConf()) {
+      factory.newInstance(staged.toString, dataSchema,
+        new TaskAttemptContextImpl(conf.value, new TaskAttemptID()))
     }
-    writer.write(g)
-  }
+
+  override def write(row: InternalRow): Unit = writer.write(row)
 
   override def commit(): WriterCommitMessage = {
     writer.close()
@@ -328,91 +275,18 @@ private[sources] class BatchDataWriter(
 
 private[sources] object BatchSink {
 
-  /** Spark StructType → parquet MessageType (inverse of
-    * [[BatchSource.toStructType]]): flat primitives plus ArrayType as the
-    * standard 3-level list encoding — `embeddings`' array<float> stages
-    * through the connector like any other column. */
-  def toMessageType(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val rep = if (f.nullable) org.apache.parquet.schema.Type.Repetition.OPTIONAL
-        else org.apache.parquet.schema.Type.Repetition.REQUIRED
-      f.dataType match {
-        case ArrayType(elem, containsNull) =>
-          val elemRep =
-            if (containsNull) org.apache.parquet.schema.Type.Repetition.OPTIONAL
-            else org.apache.parquet.schema.Type.Repetition.REQUIRED
-          val elemType = elem match {
-            case FloatType => Types.primitive(PrimitiveTypeName.FLOAT, elemRep)
-            case DoubleType => Types.primitive(PrimitiveTypeName.DOUBLE, elemRep)
-            case IntegerType => Types.primitive(PrimitiveTypeName.INT32, elemRep)
-            case LongType => Types.primitive(PrimitiveTypeName.INT64, elemRep)
-            case StringType => Types.primitive(PrimitiveTypeName.BINARY, elemRep)
-              .as(LogicalTypeAnnotation.stringType())
-            case other => throw new IllegalArgumentException(
-              s"unsupported array element type $other for column '${f.name}'")
-          }
-          b.addField(Types.list(rep).element(elemType.named("element")).named(f.name))
-        case st: StructType =>
-          // one-level struct → unannotated parquet group of primitives
-          // (the shape [[BatchSource.toStructType]] maps back)
-          val grp = Types.buildGroup(rep)
-          st.fields.foreach { sub =>
-            sub.dataType match {
-              case _: ArrayType | _: StructType | _: MapType =>
-                throw new IllegalArgumentException(
-                  s"struct field '${f.name}.${sub.name}' must be primitive " +
-                    "(one nesting level)")
-              case _ => grp.addField(primitiveType(sub).named(sub.name))
-            }
-          }
-          b.addField(grp.named(f.name))
-        case MapType(kt, vt, valueContainsNull) =>
-          // standard parquet MAP: repeated key_value group, required key,
-          // optionally-null value — the same canonical layout as the wire
-          val keyT = primitiveType(StructField("key", kt, nullable = false))
-            .named("key")
-          val valT = primitiveType(StructField("value", vt, valueContainsNull))
-            .named("value")
-          b.addField(Types.map(rep).key(keyT).value(valT).named(f.name))
-        case _ =>
-          b.addField(primitiveType(f).named(f.name))
-      }
-    }
-    b.named("graft_staged")
-  }
-
-  private def primitiveType(f: StructField): Types.Builder[_, _ <: org.apache.parquet.schema.Type] = {
-    val rep = if (f.nullable) org.apache.parquet.schema.Type.Repetition.OPTIONAL
-      else org.apache.parquet.schema.Type.Repetition.REQUIRED
-    f.dataType match {
-        case BooleanType => Types.primitive(PrimitiveTypeName.BOOLEAN, rep)
-        case IntegerType => Types.primitive(PrimitiveTypeName.INT32, rep)
-        case LongType => Types.primitive(PrimitiveTypeName.INT64, rep)
-        case FloatType => Types.primitive(PrimitiveTypeName.FLOAT, rep)
-        case DoubleType => Types.primitive(PrimitiveTypeName.DOUBLE, rep)
-        case StringType => Types.primitive(PrimitiveTypeName.BINARY, rep)
-          .as(LogicalTypeAnnotation.stringType())
-        case BinaryType => Types.primitive(PrimitiveTypeName.BINARY, rep)
-        case DateType => Types.primitive(PrimitiveTypeName.INT32, rep)
-          .as(LogicalTypeAnnotation.dateType())
-        // Snowflake NUMBER ↔ parquet DECIMAL: physical width by precision,
-        // same mapping the warehouse's own unload uses
-        case dt: DecimalType =>
-          val phys =
-            if (dt.precision <= Decimal.MAX_INT_DIGITS) PrimitiveTypeName.INT32
-            else if (dt.precision <= Decimal.MAX_LONG_DIGITS) PrimitiveTypeName.INT64
-            else PrimitiveTypeName.BINARY
-          Types.primitive(phys, rep)
-            .as(LogicalTypeAnnotation.decimalType(dt.scale, dt.precision))
-        case TimestampType => Types.primitive(PrimitiveTypeName.INT64, rep)
-          .as(LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-        case TimestampNTZType => Types.primitive(PrimitiveTypeName.INT64, rep)
-          .as(LogicalTypeAnnotation.timestampType(false,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-      case dt => throw new IllegalArgumentException(
-        s"unsupported type $dt for column '${f.name}'")
-    }
+  /** The settings every staged file is written with, whatever the session
+    * says: INT64 µs timestamps (not legacy INT96), snappy, Spark's standard
+    * (non-legacy) list, map and decimal layout, and CORRECTED rebase
+    * (values stored as given, no calendar shift — the mode
+    * [[BatchPartitionReader]] decodes with). */
+  def writeConf(): SQLConf = {
+    val c = new SQLConf
+    Seq(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE -> "TIMESTAMP_MICROS",
+      SQLConf.PARQUET_COMPRESSION -> "snappy",
+      SQLConf.PARQUET_WRITE_LEGACY_FORMAT -> "false",
+      SQLConf.PARQUET_REBASE_MODE_IN_WRITE -> "CORRECTED")
+      .foreach { case (k, v) => c.setConfString(k.key, v) }
+    c
   }
 }

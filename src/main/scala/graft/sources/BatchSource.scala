@@ -12,21 +12,21 @@ import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PType}
-import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
+import org.apache.parquet.schema.LogicalTypeAnnotation.{IntLogicalTypeAnnotation, TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter, VectorizedParquetRecordReader}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.connector.Partitioner
 
@@ -51,10 +51,13 @@ import graft.connector.Partitioner
   *
   * Options: `partition_size` (default 100 MiB) / `npartitions`, exactly
   * one (core.py:164-167). Column pruning is pushed into the parquet reads
-  * via `SupportsPushDownRequiredColumns`. Scope: flat relational schemas
-  * (the shape `write_pandas` stages) plus one nesting level —
-  * array<primitive> (embeddings) and struct<primitive…> (multimodal
-  * metadata); deeper nesting is rejected at schema inference.
+  * via `SupportsPushDownRequiredColumns`. The schema is the first footer
+  * through Spark's own `ParquetToSparkSchemaConverter`, under the flags
+  * the reader is pinned to ([[BatchSource.readConf]]). Scope, enforced by
+  * [[BatchSource.requireReadable]]: flat relational schemas (the shape
+  * `write_pandas` stages) plus one nesting level — array<leaf>
+  * (embeddings), map<leaf,leaf> and struct<leaf…> (multimodal metadata);
+  * deeper nesting is rejected at schema inference.
   *
   * Usage: `spark.read.format("graft").option("npartitions", 8).load(dir)`.
   */
@@ -66,10 +69,14 @@ class BatchSource extends TableProvider with DataSourceRegister {
     val conf = BatchSource.hadoopConf()
     val files = BatchSource.listFiles(options, conf)
     require(files.nonEmpty, s"no parquet files under '${BatchSource.dir(options)}'")
+    // the data columns: the first footer through Spark's own converter,
+    // under the flags the reader is pinned to
+    val fileSchema = new ParquetToSparkSchemaConverter(BatchSource.readConf(conf))
+      .convert(BatchSource.footerSchema(files.head, conf))
     // hive-style `col=value/` segments become trailing partition columns
     // (the layout [[PartitionedBatchDataWriter]] stages)
     StructType(
-      BatchSource.toStructType(BatchSource.footerSchema(files.head, conf)).fields ++
+      BatchSource.requireReadable(fileSchema).fields ++
         Partitions.partitionFields(files, conf,
           BatchSource.qualifiedDir(options, conf)))
   }
@@ -185,88 +192,46 @@ private[sources] object BatchSource {
     finally reader.close()
   }
 
-  /** Parquet MessageType → Spark StructType: flat primitives, standard
-    * 3-level LIST groups (array<primitive> — the `embeddings` shape), and
-    * unannotated groups of primitives (struct<primitive…> — the multimodal
-    * `meta` shape). Deeper nesting is still rejected loudly. */
-  def toStructType(msg: MessageType): StructType = StructType(
-    msg.getFields.asScala.map { f =>
-      val dt =
-        if (f.isPrimitive) sparkType(f.asPrimitiveType())
-        else if (f.getLogicalTypeAnnotation == LogicalTypeAnnotation.listType()) {
-          val repeated = f.asGroupType().getFields.get(0).asGroupType()
-          val elem = repeated.getFields.get(0)
-          require(elem.isPrimitive,
-            s"nested list elements unsupported on '${f.getName}'")
-          ArrayType(sparkType(elem.asPrimitiveType()),
-            elem.getRepetition != PType.Repetition.REQUIRED)
-        } else if (f.getLogicalTypeAnnotation == LogicalTypeAnnotation.mapType()) {
-          val kv = f.asGroupType().getFields.get(0).asGroupType()
-          val k = kv.getFields.get(0)
-          val v = kv.getFields.get(1)
-          require(k.isPrimitive && v.isPrimitive,
-            s"map key/value on '${f.getName}' must be primitive")
-          MapType(sparkType(k.asPrimitiveType()), sparkType(v.asPrimitiveType()),
-            v.getRepetition != PType.Repetition.REQUIRED)
-        } else {
-          require(f.getLogicalTypeAnnotation == null,
-            s"nested field '${f.getName}' unsupported by graft BatchSource " +
-              s"(only LIST, MAP and unannotated STRUCT groups)")
-          StructType(f.asGroupType().getFields.asScala.map { sub =>
-            require(sub.isPrimitive,
-              s"struct field '${f.getName}.${sub.getName}' must be primitive " +
-                "(one nesting level)")
-            StructField(sub.getName, sparkType(sub.asPrimitiveType()),
-              sub.getRepetition != PType.Repetition.REQUIRED)
-          }.toIndexedSeq)
-        }
-      StructField(f.getName, dt, f.getRepetition != PType.Repetition.REQUIRED)
-    }.toIndexedSeq)
+  /** Spark's parquet schema-converter flags, pinned instead of read from
+    * the session (`Tables.register` turns nanos-as-long on session-wide):
+    * exact names, opaque BINARY, INT96 as a timestamp, NTZ inference, and
+    * TIMESTAMP(NANOS) rejected — the vectorized reader cannot decode it.
+    * Schema inference and the executor-side reader share this one set. */
+  def readConf(hadoopConf: Configuration): Configuration = {
+    val c = new Configuration(hadoopConf)
+    Seq(SQLConf.CASE_SENSITIVE -> true, SQLConf.PARQUET_BINARY_AS_STRING -> false,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> true,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED -> true,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> false)
+      .foreach { case (k, v) => c.setBoolean(k.key, v) }
+    c
+  }
 
-  private def sparkType(p: PrimitiveType): DataType = {
-    val ann = p.getLogicalTypeAnnotation
-    def dec(d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation): DataType =
-      DecimalType(d.getPrecision, d.getScale)
-    p.getPrimitiveTypeName match {
-      case BOOLEAN => BooleanType
-      case FLOAT => FloatType
-      case DOUBLE => DoubleType
-      // Snowflake NUMBER stages as parquet DECIMAL (the reference's
-      // dominant dtype, tests/test_core.py:63-65) and DATE as annotated
-      // INT32 — both are first-class here; remaining annotated ints
-      // (TIME etc.) are still rejected LOUDLY rather than decoded as
-      // silently-corrupt raw ints
-      case INT32 => ann match {
-        case null => IntegerType
-        case _: LogicalTypeAnnotation.IntLogicalTypeAnnotation => IntegerType
-        case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation => DateType
-        case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => dec(d)
-        case other => throw new IllegalArgumentException(
-          s"unsupported INT32 logical type $other on '${p.getName}'")
-      }
-      case INT64 => ann match {
-        // match the native reader's mapping: UTC-adjusted → TimestampType,
-        // wall-clock (isAdjustedToUTC=false) → TimestampNTZType
-        case t: TimestampLogicalTypeAnnotation =>
-          // Spark's parquet reader decodes MILLIS and MICROS only
-          require(t.getUnit != TimeUnit.NANOS,
-            s"TIMESTAMP(NANOS) on '${p.getName}' unsupported: stage µs timestamps")
-          if (t.isAdjustedToUTC) TimestampType else TimestampNTZType
-        case null => LongType
-        case _: LogicalTypeAnnotation.IntLogicalTypeAnnotation => LongType
-        case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => dec(d)
-        case other => throw new IllegalArgumentException(
-          s"unsupported INT64 logical type $other on '${p.getName}'")
-      }
-      case BINARY if ann == LogicalTypeAnnotation.stringType() => StringType
-      case BINARY | FIXED_LEN_BYTE_ARRAY
-          if ann.isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation] =>
-        dec(ann.asInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation])
-      // unannotated BINARY = opaque bytes (the multimodal payload column)
-      case BINARY if ann == null => BinaryType
-      case other => throw new IllegalArgumentException(
-        s"unsupported parquet type $other${if (ann != null) s" ($ann)" else ""} on '${p.getName}'")
+  /** The one shape rule of graft stages, for reads and writes alike:
+    * atomic leaves (boolean, byte, short, int, long, float, double,
+    * string, binary, date, decimal, timestamp, timestamp_ntz) and one
+    * nesting level — array, map or non-empty struct of leaves (the
+    * `embeddings` and multimodal `meta` shapes). */
+  def requireReadable(schema: StructType): StructType = {
+    def leaf(dt: DataType): Boolean = dt match {
+      case BooleanType | ByteType | ShortType | IntegerType | LongType |
+          FloatType | DoubleType | StringType | BinaryType | DateType |
+          TimestampType | TimestampNTZType | _: DecimalType => true
+      case _ => false
     }
+    schema.fields.foreach { f =>
+      val ok = f.dataType match {
+        case ArrayType(e, _) => leaf(e)
+        case MapType(k, v, _) => leaf(k) && leaf(v)
+        case st: StructType => st.nonEmpty && st.fields.forall(s => leaf(s.dataType))
+        case dt => leaf(dt)
+      }
+      if (!ok) throw new IllegalArgumentException(
+        s"column '${f.name}' has type ${f.dataType.simpleString}, unsupported " +
+          "by graft stages: atomic leaves and one nesting level only " +
+          "(array, map or struct of leaves)")
+    }
+    schema
   }
 
   /** One lazy batch handle = one row group (path + index + stats only);
@@ -295,7 +260,8 @@ private[sources] object BatchSource {
           else b.getColumns.asScala.flatMap { c =>
             val name = c.getPath.toDotString
             val s = c.getStatistics
-            if (statCols.contains(name) && s != null && s.hasNonNullValue)
+            if (statCols.contains(name) && s != null && s.hasNonNullValue &&
+                !unsignedInt(c.getPrimitiveType))
               Some(name -> ((statValue(s.genericGetMin, c.getPrimitiveType),
                 statValue(s.genericGetMax, c.getPrimitiveType), s.getNumNulls)))
             else None
@@ -307,12 +273,25 @@ private[sources] object BatchSource {
     }
   }
 
+  /** Unsigned ints keep footer min/max in unsigned order and Spark widens
+    * their values, so their stats are never used. */
+  private def unsignedInt(p: PrimitiveType): Boolean = p.getLogicalTypeAnnotation match {
+    case i: IntLogicalTypeAnnotation => !i.isSigned
+    case _ => false
+  }
+
   /** Footer min/max → the value SPARK sees for that cell: decimal unscaled
-    * ints become BigDecimal at the annotated scale, DATE day numbers stay
-    * Int (= Spark's internal days), timestamps normalize to µs, strings
-    * decode from Binary. Pruning comparisons against filter literals are
-    * then exact in the value domain the reader materializes. */
+    * ints become BigDecimal at the annotated scale, INT(8)/INT(16) become
+    * Byte/Short, DATE day numbers stay Int (= Spark's internal days),
+    * timestamps normalize to µs, strings decode from Binary. Pruning
+    * comparisons against filter literals are then exact in the value
+    * domain the reader materializes. */
   private def statValue(v: Any, p: PrimitiveType): Any = p.getLogicalTypeAnnotation match {
+    case i: IntLogicalTypeAnnotation => (i.getBitWidth, v) match {
+      case (8, n: java.lang.Integer) => java.lang.Byte.valueOf(n.byteValue)
+      case (16, n: java.lang.Integer) => java.lang.Short.valueOf(n.shortValue)
+      case _ => v
+    }
     case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => v match {
       case i: java.lang.Integer => java.math.BigDecimal.valueOf(i.longValue, d.getScale)
       case l: java.lang.Long => java.math.BigDecimal.valueOf(l.longValue, d.getScale)
@@ -425,21 +404,6 @@ private[sources] object BatchSource {
   /** Column names a filter references (for targeted stats collection). */
   def filterCols(f: org.apache.spark.sql.sources.Filter): Set[String] =
     f.references.toSet
-}
-
-/** Hadoop Configuration isn't Serializable — ship it to executors with
-  * its own writable protocol. */
-private[sources] class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
 }
 
 private[sources] class BatchTable(
@@ -588,7 +552,9 @@ private[sources] class BatchScanBuilder(
         case Some(pf) => return partMinMax(pf, wantMin)
         case None => ()
       }
-      fullSchema.fields.find(_.name == name).flatMap { field =>
+      // a BINARY column's footer stats decode as strings (statValue), not
+      // as the bytes Spark expects: let Spark scan it
+      fullSchema.fields.find(f => f.name == name && f.dataType != BinaryType).flatMap { field =>
         val stats = discovered.map(_._2.get(name))
         if (stats.exists(_.isEmpty)) None // a batch without stats → bail out
         else {
@@ -861,17 +827,12 @@ private[sources] class BatchReaderFactory(
 
   private val batchSize = SQLConf.get.parquetVectorizedReaderBatchSize
   private val offHeap = SQLConf.get.offHeapColumnVectorEnabled
-  private val conf = new SerializableHadoopConf({
-    val c = new Configuration(hadoopConf)
+  // the converter flags schema inference used, so the reader's view of
+  // every file matches the inferred schema
+  private val conf = new SerializableConfiguration({
+    val c = BatchSource.readConf(hadoopConf)
     c.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
     c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, fileSchema.json)
-    // the schema-converter flags, pinned to what [[BatchSource.toStructType]]
-    // infers: exact names, opaque BINARY, no nanos-as-long
-    Seq(SQLConf.CASE_SENSITIVE -> true, SQLConf.PARQUET_BINARY_AS_STRING -> false,
-      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> true,
-      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED -> true,
-      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> false)
-      .foreach { case (k, v) => c.setBoolean(k.key, v) }
     c
   })
 

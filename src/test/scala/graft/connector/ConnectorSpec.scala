@@ -172,4 +172,37 @@ class ConnectorSpec extends SparkSpec {
     assert(rowsOf(spark, "q_bucket_join") == first)
     assert(first.nonEmpty)
   }
+
+  /** Spark jobs started while `body` runs: a marker job after `body` is
+    * awaited on the listener bus, so every earlier job start is counted. */
+  private def jobsDuring(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(js.properties.getProperty("spark.job.description")).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "marker job never reached the listener")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    seen.toArray(Array.empty[String]).toSeq.filterNot(_ == marker)
+  }
+
+  test("an aggregating read runs no Spark job before the caller's action") {
+    Tables.register(spark, sfDir)
+    val grouped = """SELECT l_suppkey, count(*) AS n, sum(l_extendedprice) AS s
+                    |FROM lineitem GROUP BY l_suppkey""".stripMargin
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring { df = graft.Graft.read(spark, sfDir, grouped, npartitions = Some(2)) }
+    assert(jobs.isEmpty, s"Graft.read ran ${jobs.size} job(s) before any action")
+    assert(df.rdd.getNumPartitions == 2)
+    assertSameRows(df, spark.sql(grouped))
+  }
 }

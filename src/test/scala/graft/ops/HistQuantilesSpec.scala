@@ -236,4 +236,42 @@ class HistQuantilesSpec extends SparkSpec {
       }
     assert(outcome(Relational.HistDriverMaxRows) == outcome(0))
   }
+
+  test("the distributed arm matches exact percentile on the adversarial " +
+      "inputs: buckets 1/2/16, NULL values, a NULL group key") {
+    // histDriverMaxRows = 0 skips the full-driver replay these small
+    // inputs would otherwise take, so the null-safe rank joins and the
+    // bucket edges run; bucketDriverMaxRows = 0 also distributes the
+    // needed-bucket selection
+    val named = ps.zipWithIndex.map { case (p, i) => p -> s"q$i" }
+    def render(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy(col("g").asc_nulls_first).collect()
+        .map(r => (Option(r.getString(0)),
+          (1 to ps.length).map(i => r.get(i)).toSeq)).toSeq
+    def same(df: org.apache.spark.sql.DataFrame, buckets: Int,
+        bucketCap: Int = Relational.BucketDriverMaxRows): Unit = {
+      val got = Relational.histQuantiles(df, "v", Seq("g"), named,
+        buckets = buckets, histDriverMaxRows = 0, bucketDriverMaxRows = bucketCap)
+      assert(render(got) == render(refQuantiles(df, "g", "v", ps)),
+        s"distributed arm (buckets=$buckets, bucket cap $bucketCap) " +
+          "diverged from exact percentile")
+    }
+    val rnd = new scala.util.Random(42)
+    val duplicates = (1 to 2000).map(_ =>
+      (s"g${rnd.nextInt(4)}", math.floor(rnd.nextDouble() * 50) / 7.0)).toDF("g", "v")
+    val continuous = (1 to 1500).map(_ =>
+      (s"g${rnd.nextInt(3)}", rnd.nextGaussian() * 100.0)).toDF("g", "v")
+    val tiny = (Seq.fill(100)(("same", 3.25)) ++ Seq(("one", 9.5)) ++
+      Seq(("two", 1.0), ("two", 2.0))).toDF("g", "v")
+    val withNulls = (1 to 600).map(_ =>
+        (s"g${rnd.nextInt(2)}", rnd.nextDouble() * 200 - 100)).toDF("g", "v")
+      .unionAll(Seq(("g0", null.asInstanceOf[java.lang.Double]),
+        ("g1", null.asInstanceOf[java.lang.Double])).toDF("g", "v"))
+    val nullKey = Seq(("a", 1.0), ("a", 3.0),
+        (null.asInstanceOf[String], 10.0), (null.asInstanceOf[String], 20.0),
+        (null.asInstanceOf[String], 30.0)).toDF("g", "v")
+    for (df <- Seq(duplicates, continuous, tiny, withNulls, nullKey);
+         b <- Seq(1, 2, 16)) same(df, b)
+    for (df <- Seq(withNulls, nullKey); b <- Seq(1, 16)) same(df, b, bucketCap = 0)
+  }
 }

@@ -1245,4 +1245,191 @@ class BatchSourceSpec extends SparkSpec {
       s"all partition-value groups must decode, got $langs")
     assert(one.count() == Tables.table(spark, sfDir, "documents").count())
   }
+
+  /** Every row as one JSON string, sorted: compares binary, map, array and
+    * struct columns by value. */
+  private def jsonRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)))
+      .collect().map(_.getString(0)).toSeq.sorted
+
+  /** One column of each type the sink accepts, nulls in every column. */
+  private def everyType(n: Int) = spark.range(0, n).selectExpr(
+    "id",
+    "IF(id % 7 = 0, NULL, id % 2 = 0) AS b",
+    "IF(id % 11 = 0, NULL, CAST(id * 3 AS INT)) AS i",
+    "IF(id % 5 = 0, NULL, CAST(id / 4 AS FLOAT)) AS f",
+    "IF(id % 3 = 0, NULL, CAST(id AS DOUBLE) / 7) AS d",
+    "IF(id % 4 = 0, NULL, concat('s', id)) AS s",
+    "IF(id % 7 = 1, NULL, CAST(id * 1.25 AS DECIMAL(9,2))) AS dec9",
+    "IF(id % 7 = 2, NULL, CAST(id * -12345.6789 AS DECIMAL(18,4))) AS dec18",
+    """IF(id % 7 = 3, NULL, CAST(concat(IF(id % 2 = 0, '-', ''), id,
+      |  '1234567890123456789012345.0123456789') AS DECIMAL(38,10))) AS dec38""".stripMargin,
+    "IF(id % 8 = 0, NULL, date_add(DATE'1000-01-01', CAST(id * 1777 AS INT))) AS dt",
+    "IF(id % 9 = 0, NULL, timestamp_micros(id * 86400000123 - 1000000000000000)) AS ts",
+    "IF(id % 9 = 1, NULL, CAST(timestamp_micros(id * 3600000007) AS TIMESTAMP_NTZ)) AS ntz",
+    "IF(id % 6 = 0, NULL, CAST(concat('bin', id) AS BINARY)) AS bin",
+    "IF(id % 10 = 0, NULL, array(CAST(id AS DOUBLE) / 2, NULL, CAST(id AS DOUBLE))) AS arr_d",
+    """IF(id % 10 = 1, NULL, IF(id % 10 = 2, CAST(array() AS ARRAY<STRING>),
+      |  array(concat('a', id), NULL))) AS arr_s""".stripMargin,
+    "IF(id % 10 = 3, NULL, map('k', id, 'n', IF(id % 3 = 0, NULL, id * 2))) AS m",
+    """IF(id % 12 = 0, NULL, named_struct('a', CAST(id AS INT),
+      |  'b', IF(id % 5 = 0, NULL, concat('x', id)),
+      |  'c', CAST(id AS DECIMAL(38,10)), 'd', date_add(DATE'2000-01-01', CAST(id AS INT)))) AS st""".stripMargin)
+
+  test("every accepted type round-trips through the sink and source, nulls included") {
+    val dir = Files.createTempDirectory("graft_every_type").toString
+    val src = everyType(240)
+    src.repartition(3).write.format("graft").mode("overwrite").save(dir)
+    val back = spark.read.format("graft").load(dir)
+    assert(back.schema == src.schema,
+      s"schema drifted:\n${src.schema.treeString}\nvs\n${back.schema.treeString}")
+    assert(jsonRows(back) == jsonRows(src))
+    // and Spark's own parquet source reads the staged files the same way
+    assert(jsonRows(spark.read.parquet(dir)) == jsonRows(src))
+  }
+
+  test("a write nesting past one level is rejected at build time, on the driver") {
+    val dir = Files.createTempDirectory("graft_deep_nest").toString
+    // array<struct<…>>: checked before any executor task stages a file
+    val e = intercept[IllegalArgumentException] {
+      spark.range(0, 10)
+        .selectExpr("id", "array(named_struct('k', id, 'v', concat('x', id))) AS items")
+        .write.format("graft").mode("overwrite").save(dir)
+    }
+    assert(e.getMessage.contains("'items'"), e.getMessage)
+    assert(new java.io.File(dir).listFiles() == null ||
+      new java.io.File(dir).listFiles().isEmpty,
+      "a build-time rejection must leave nothing staged")
+  }
+
+  test("BYTE and SHORT columns keep their types, and footer MIN/MAX answer them") {
+    val dir = Files.createTempDirectory("graft_small_ints").toString
+    val src = spark.range(0, 300).selectExpr("id",
+      "IF(id % 7 = 0, NULL, CAST(id % 200 - 100 AS TINYINT)) AS b8",
+      "IF(id % 5 = 0, NULL, CAST(id * 97 - 15000 AS SMALLINT)) AS b16")
+    src.repartition(2).write.format("graft").mode("overwrite").save(dir)
+    val back = spark.read.format("graft").load(dir)
+    assert(back.schema == src.schema)
+    assertSameRows(back, src)
+    val agg = back.agg(min("b8"), max("b8"), min("b16"), max("b16"))
+    val got = agg.collect().toSeq
+    assert(agg.queryExecution.executedPlan.toString.contains("METADATA-ONLY"))
+    assert(got == src.agg(min("b8"), max("b8"), min("b16"), max("b16")).collect().toSeq)
+    // a footer-stat filter on a byte column prunes like any other int
+    assert(back.filter(col("b8") === 42).count() == src.filter(col("b8") === 42).count())
+  }
+
+  test("MIN/MAX over a BINARY column are computed from the data, not the footers") {
+    val dir = Files.createTempDirectory("graft_bin_minmax").toString
+    val src = spark.range(0, 40).selectExpr("id", "CAST(concat('b', id) AS BINARY) AS bin")
+    src.repartition(2).write.format("graft").mode("overwrite").save(dir)
+    val got = spark.read.format("graft").load(dir).agg(hex(min("bin")), hex(max("bin")))
+    assert(got.collect().toSeq == src.agg(hex(min("bin")), hex(max("bin"))).collect().toSeq)
+  }
+
+  test("staged files do not depend on the session's parquet writer settings") {
+    import org.apache.spark.sql.internal.SQLConf
+    val dir = Files.createTempDirectory("graft_pinned_write").toString
+    // everything Tables.register does not pin, set the other way
+    val s2 = spark.newSession()
+    Seq(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key -> "INT96",
+      SQLConf.PARQUET_COMPRESSION.key -> "gzip",
+      SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key -> "true",
+      SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key -> "LEGACY")
+      .foreach { case (k, v) => s2.conf.set(k, v) }
+    s2.range(0, 120).selectExpr("id",
+        "date_add(DATE'1000-01-01', CAST(id AS INT)) AS dt",
+        "timestamp_micros(id * 1000003 - 30000000000000000) AS ts",
+        "CAST(id AS DECIMAL(38,10)) AS dec38",
+        "array(id, id + 1) AS arr")
+      .write.format("graft").mode("overwrite").save(dir)
+    val back = spark.read.format("graft").load(dir)
+    val want = spark.range(0, 120).selectExpr("id",
+      "date_add(DATE'1000-01-01', CAST(id AS INT)) AS dt",
+      "timestamp_micros(id * 1000003 - 30000000000000000) AS ts",
+      "CAST(id AS DECIMAL(38,10)) AS dec38",
+      "array(id, id + 1) AS arr")
+    assert(jsonRows(back) == jsonRows(want))
+    val file = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toString), new org.apache.hadoop.conf.Configuration()))
+    try {
+      val footer = reader.getFooter
+      val schema = footer.getFileMetaData.getSchema
+      def field(name: String) = schema.getType(schema.getFieldIndex(name))
+      val ts = field("ts").asPrimitiveType()
+      assert(ts.getPrimitiveTypeName.name == "INT64", ts.toString)
+      assert(ts.getLogicalTypeAnnotation.toString.contains("MICROS"), ts.toString)
+      assert(footer.getBlocks.get(0).getColumns.get(0).getCodec.name == "SNAPPY")
+      assert(!footer.getFileMetaData.getKeyValueMetaData.containsKey("org.apache.spark.legacyDateTime"))
+      // the standard 3-level list, not the legacy 2-level form
+      assert(field("arr").asGroupType().getType(0).getName == "list")
+    } finally reader.close()
+  }
+
+  test("legacy INT96 timestamps read as TIMESTAMP through Spark's converter") {
+    val dir = Files.createTempDirectory("graft_int96").toString
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    val src = s2.range(0, 50).selectExpr("id",
+      "IF(id % 4 = 0, NULL, timestamp_micros(id * 86400000001)) AS ts")
+    src.write.mode("overwrite").parquet(dir)
+    val back = spark.read.format("graft").load(dir)
+    assert(back.schema("ts").dataType.typeName == "timestamp")
+    val want = spark.range(0, 50).selectExpr("id",
+      "IF(id % 4 = 0, NULL, timestamp_micros(id * 86400000001)) AS ts")
+    assertSameRows(back, want)
+    // INT96 footers carry no usable min/max: MIN/MAX still answer right
+    assertSameRows(back.agg(min("ts"), max("ts")), want.agg(min("ts"), max("ts")))
+  }
+
+  test("unsigned INT(32) reads widened to BIGINT, and its footer stats never prune") {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val dir = Files.createTempDirectory("graft_uint32").toString
+    val msg = Types.buildMessage()
+      .addField(Types.required(PrimitiveTypeName.INT32)
+        .as(LogicalTypeAnnotation.intType(32, false)).named("u"))
+      .named("unsigned")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"))
+      .withType(msg).build()
+    try Seq(7, -1294967296).foreach { bits => // 7 and 3,000,000,000 as uint32
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(msg)
+      g.add(0, bits)
+      w.write(g)
+    } finally w.close()
+    val df = spark.read.format("graft").load(dir)
+    assert(df.schema("u").dataType.typeName == "long")
+    assert(df.filter(col("u") === 3000000000L).count() == 1)
+    assert(df.agg(max("u")).head.getLong(0) == 3000000000L)
+  }
+
+  test("TIMESTAMP(NANOS) files are rejected at schema inference") {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val dir = Files.createTempDirectory("graft_nanos").toString
+    val msg = Types.buildMessage()
+      .addField(Types.optional(PrimitiveTypeName.INT64)
+        .as(LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.NANOS))
+        .named("t"))
+      .named("nanos")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"))
+      .withType(msg).build()
+    try {
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(msg)
+      g.add(0, 1000000000123456789L)
+      w.write(g)
+    } finally w.close()
+    // the session's nanosAsLong (Tables.register sets it) does not leak in
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      val e = intercept[Exception](spark.read.format("graft").load(dir).schema)
+      assert(e.getMessage.contains("NANOS"), e.getMessage)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
