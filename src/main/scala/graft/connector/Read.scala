@@ -1,8 +1,9 @@
 package graft.connector
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 import graft.warehouse.Tables
 
@@ -26,11 +27,10 @@ import graft.warehouse.Tables
   *     derived from the plan's size estimate (the analogue of the
   *     reference's sampled row width, core.py:172-179)
   *
-  * Scale note: reducing a scan's partition count uses `coalesce` (no
-  * shuffle — at 100 TB a shuffle just to resize partitions would dominate
-  * the query); only a genuine increase pays `repartition`'s round-robin
-  * shuffle. A plan with an exchange (aggregates, joins) is repartitioned
-  * without probing its count first — see [[resize]].
+  * Scale note: reducing partition counts uses `coalesce` (no shuffle — at
+  * 100 TB a shuffle just to resize partitions would dominate the query);
+  * only a genuine increase, or a plan whose count is known only after its
+  * shuffles ran, pays `repartition`'s round-robin shuffle — see [[resize]].
   */
 object Read {
 
@@ -79,14 +79,28 @@ object Read {
     n.max(1).min(Int.MaxValue).toInt
   }
 
-  /** Exactly `n` partitions. An exchange-free plan knows its partition
-    * count without running anything: shuffle-free `coalesce` to shrink,
-    * round-robin `repartition` only to grow. A plan with an exchange would
-    * run its stages just to report the count (AQE sizes them at run time)
-    * and the caller's action would run them again, so it takes
-    * `repartition(n)` unprobed. */
+  /** Exactly `n` partitions, without running the query where that can be
+    * avoided — reading the partition count of an adaptive plan runs its
+    * query stages, and the caller's action, planned anew, runs them again:
+    *
+    *   - `n == 1`: `coalesce(1)`, one partition whatever the plan, no probe
+    *     and no shuffle (size mode's answer for any result under the
+    *     target size);
+    *   - a shuffle under adaptive execution, in the plan or in a subquery:
+    *     AQE sizes its read side at run time, so the probe would run every
+    *     shuffle stage; `repartition(n)` unprobed — the round-robin
+    *     shuffle of the result is cheaper than running the stages twice;
+    *   - otherwise the count is known from planning (a broadcast's stage
+    *     still runs, but it is small): probe, shuffle-free `coalesce` to
+    *     shrink, `repartition` only to grow.
+    *
+    * Measured in BASELINE.md ("Sizing exchange-plan reads"). Only the
+    * partition layout is guaranteed, not the row order of an `ORDER BY`
+    * result: `repartition` deals rows round-robin, and `coalesce` may
+    * group partitions out of order. */
   private def resize(df: DataFrame, n: Int): DataFrame =
-    if (hasExchange(df)) df.repartition(n)
+    if (n == 1) df.coalesce(1)
+    else if (probeRunsShuffles(df.queryExecution.executedPlan)) df.repartition(n)
     else {
       val cur = df.rdd.getNumPartitions
       if (n < cur) df.coalesce(n)
@@ -94,11 +108,11 @@ object Read {
       else df
     }
 
-  private def hasExchange(df: DataFrame): Boolean = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan // the unexecuted initial plan
-      case p => p
-    }
-    plan.collectWithSubqueries { case e: Exchange => e }.nonEmpty
-  }
+  /** An adaptive plan (or subquery, each wrapped in its own — a leaf to
+    * the tree walk) whose unexecuted initial plan holds a shuffle. */
+  private def probeRunsShuffles(plan: SparkPlan): Boolean = plan.collectWithSubqueries {
+    case a: AdaptiveSparkPlanExec =>
+      a.executedPlan.exists(_.isInstanceOf[ShuffleExchangeLike]) ||
+        probeRunsShuffles(a.executedPlan)
+  }.contains(true)
 }

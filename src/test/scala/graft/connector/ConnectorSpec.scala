@@ -195,14 +195,24 @@ class ConnectorSpec extends SparkSpec {
     seen.toArray(Array.empty[String]).toSeq.filterNot(_ == marker)
   }
 
-  test("an aggregating read runs no Spark job before the caller's action") {
+  test("a read with a shuffle or a subquery runs no Spark job before the caller's action") {
     Tables.register(spark, sfDir)
     val grouped = """SELECT l_suppkey, count(*) AS n, sum(l_extendedprice) AS s
                     |FROM lineitem GROUP BY l_suppkey""".stripMargin
-    var df: org.apache.spark.sql.DataFrame = null
-    val jobs = jobsDuring { df = graft.Graft.read(spark, sfDir, grouped, npartitions = Some(2)) }
-    assert(jobs.isEmpty, s"Graft.read ran ${jobs.size} job(s) before any action")
-    assert(df.rdd.getNumPartitions == 2)
-    assertSameRows(df, spark.sql(grouped))
+    // AQE plans the subquery in its own adaptive plan, a leaf to the outer tree
+    val subquery = """SELECT o_orderkey, o_totalprice FROM orders
+                     |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders)""".stripMargin
+    // a broadcast-only plan still probes for n > 1 (its stage is small);
+    // one partition needs no probe at all
+    val joined = """SELECT l_orderkey, l_quantity, o_orderdate FROM lineitem
+                   |JOIN orders ON l_orderkey = o_orderkey""".stripMargin
+    val cases = Seq(grouped -> Seq(1, 2), subquery -> Seq(1, 2), joined -> Seq(1))
+    for ((q, ns) <- cases; n <- ns) {
+      var df: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsDuring { df = graft.Graft.read(spark, sfDir, q, npartitions = Some(n)) }
+      assert(jobs.isEmpty, s"Graft.read(npartitions = $n) ran ${jobs.size} job(s) before any action: $q")
+      assert(df.rdd.getNumPartitions == n)
+      assertSameRows(df, spark.sql(q))
+    }
   }
 }
