@@ -10,18 +10,24 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, FileMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
-import org.apache.parquet.schema.LogicalTypeAnnotation.{IntLogicalTypeAnnotation, TimestampLogicalTypeAnnotation, TimeUnit}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.parquet.schema.{MessageType, Type}
+import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.QuotingUtils
+import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter, VectorizedParquetRecordReader}
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.execution.datasources.parquet.{GraftFooterAggregates, ParquetFilters, ParquetReadSupport, ParquetToSparkSchemaConverter, VectorizedParquetRecordReader}
+import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -58,6 +64,14 @@ import graft.connector.Partitioner
   * `write_pandas` stages) plus one nesting level — array<leaf>
   * (embeddings), map<leaf,leaf> and struct<leaf…> (multimodal metadata);
   * deeper nesting is rejected at schema inference.
+  *
+  * Pruning and pushdown run Spark's and parquet-mr's own code, like the
+  * decode: pushed and runtime filters become parquet predicates through
+  * Spark's `ParquetFilters`, and a row group is planned iff parquet-mr's
+  * `RowGroupFilter` keeps it on its footer statistics
+  * ([[BatchSource.prune]]); global COUNT(*)/MIN/MAX come from the footers
+  * through Spark's `ParquetUtils.createAggInternalRowFromFooter`, one row
+  * per file, merged by Spark's own final aggregate ([[BatchScanBuilder]]).
   *
   * Usage: `spark.read.format("graft").option("npartitions", 8).load(dir)`.
   */
@@ -234,176 +248,76 @@ private[sources] object BatchSource {
     schema
   }
 
-  /** One lazy batch handle = one row group (path + index + stats only);
+  /** One lazy batch handle = one row group (path + index + row count);
     * the row group's column chunks occupy bytes [start, start + bytes). */
   case class BatchHandle(path: String, rowGroup: Int, rows: Long, bytes: Long,
       start: Long)
 
-  /** Driver-only per-column row-group statistics for batch pruning:
-    * (min, max, nullCount) as comparable values; None when the footer has
-    * no usable stats for the column. */
-  type ColStats = Map[String, (Any, Any, Long)]
+  /** A row group as the footer sweep keeps it on the driver: its handle,
+    * the file's schema (one instance per distinct schema) and the row
+    * group's column-chunk metadata cut down to the swept columns — the
+    * min/max/null counts parquet-mr's `RowGroupFilter` reads. */
+  case class RowGroup(handle: BatchHandle, schema: MessageType, chunks: BlockMetaData)
 
   /** Test hook: each discoverBatches call is one full footer sweep (it
     * opens EVERY staged file's footer) — specs pin how many a query runs. */
   private[sources] val footerSweeps = new java.util.concurrent.atomic.AtomicLong
 
+  /** Every row group of `files`, keeping the chunks of the columns named
+    * in `cols` — quoted column paths, as Spark's source filters and
+    * `ParquetFilters` name them. */
   def discoverBatches(
       files: Seq[FileStatus], conf: Configuration,
-      statCols: Set[String] = Set.empty): Seq[(BatchHandle, ColStats)] = {
+      cols: Set[String] = Set.empty): Seq[RowGroup] = {
     footerSweeps.incrementAndGet()
+    val schemas = mutable.HashMap.empty[MessageType, MessageType]
     files.flatMap { f =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      try reader.getFooter.getBlocks.asScala.zipWithIndex.map { case (b, i) =>
-        val stats: ColStats =
-          if (statCols.isEmpty) Map.empty
-          else b.getColumns.asScala.flatMap { c =>
-            val name = c.getPath.toDotString
-            val s = c.getStatistics
-            if (statCols.contains(name) && s != null && s.hasNonNullValue &&
-                !unsignedInt(c.getPrimitiveType))
-              Some(name -> ((statValue(s.genericGetMin, c.getPrimitiveType),
-                statValue(s.genericGetMax, c.getPrimitiveType), s.getNumNulls)))
-            else None
-          }.toMap
-        (BatchHandle(f.getPath.toString, i, b.getRowCount, b.getCompressedSize,
-          b.getStartingPos), stats)
-      }.toIndexedSeq
-      finally reader.close()
+      try {
+        val footer = reader.getFooter
+        val fileSchema = footer.getFileMetaData.getSchema
+        val schema = schemas.getOrElseUpdate(fileSchema, fileSchema)
+        footer.getBlocks.asScala.zipWithIndex.map { case (b, i) =>
+          val chunks = new BlockMetaData
+          chunks.setRowCount(b.getRowCount)
+          if (cols.nonEmpty) b.getColumns.asScala
+            .filter(c => cols(QuotingUtils.quoted(c.getPath.toArray)))
+            .foreach(chunks.addColumn(_))
+          RowGroup(BatchHandle(f.getPath.toString, i, b.getRowCount,
+            b.getCompressedSize, b.getStartingPos), schema, chunks)
+        }.toIndexedSeq
+      } finally reader.close()
     }
   }
 
-  /** Unsigned ints keep footer min/max in unsigned order and Spark widens
-    * their values, so their stats are never used. */
-  private def unsignedInt(p: PrimitiveType): Boolean = p.getLogicalTypeAnnotation match {
-    case i: IntLogicalTypeAnnotation => !i.isSigned
-    case _ => false
+  /** `In` lists up to this length prune per value (`ParquetFilters` makes
+    * them an OR of equalities); longer ones prune by their value range.
+    * parquet-mr walks the OR chain recursively, and 5,000 values overflow
+    * a 1 MiB thread stack. */
+  private val InThreshold = 1000
+
+  /** The row groups some row of which may satisfy every filter. Spark's
+    * `ParquetFilters` converts the filters against each file's schema
+    * (a filter it cannot convert prunes nothing), and parquet-mr's
+    * `RowGroupFilter` keeps a row group unless its statistics rule the
+    * predicate out. */
+  def prune(filters: Seq[Filter], groups: Seq[RowGroup]): Seq[RowGroup] = {
+    if (filters.isEmpty) return groups
+    val kept = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[BlockMetaData, java.lang.Boolean])
+    groups.groupBy(_.schema).foreach { case (schema, gs) =>
+      val pf = new ParquetFilters(schema, true, true, true, true, InThreshold, true,
+        RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
+      val blocks = gs.map(_.chunks).asJava
+      kept.addAll(filters.flatMap(pf.createFilter).reduceOption(FilterApi.and) match {
+        // the schema overload: the other one needs an open file reader,
+        // and cached sweeps re-prune without reopening files
+        case Some(p) => RowGroupFilter.filterRowGroups(FilterCompat.get(p), blocks, schema)
+        case None => blocks
+      })
+    }
+    groups.filter(g => kept.contains(g.chunks))
   }
-
-  /** Footer min/max → the value SPARK sees for that cell: decimal unscaled
-    * ints become BigDecimal at the annotated scale, INT(8)/INT(16) become
-    * Byte/Short, DATE day numbers stay Int (= Spark's internal days),
-    * timestamps normalize to µs, strings decode from Binary. Pruning
-    * comparisons against filter literals are then exact in the value
-    * domain the reader materializes. */
-  private def statValue(v: Any, p: PrimitiveType): Any = p.getLogicalTypeAnnotation match {
-    case i: IntLogicalTypeAnnotation => (i.getBitWidth, v) match {
-      case (8, n: java.lang.Integer) => java.lang.Byte.valueOf(n.byteValue)
-      case (16, n: java.lang.Integer) => java.lang.Short.valueOf(n.shortValue)
-      case _ => v
-    }
-    case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => v match {
-      case i: java.lang.Integer => java.math.BigDecimal.valueOf(i.longValue, d.getScale)
-      case l: java.lang.Long => java.math.BigDecimal.valueOf(l.longValue, d.getScale)
-      case b: org.apache.parquet.io.api.Binary =>
-        new java.math.BigDecimal(new java.math.BigInteger(b.getBytes), d.getScale)
-      case other => other
-    }
-    case t: TimestampLogicalTypeAnnotation => v match {
-      case l: java.lang.Long =>
-        java.lang.Long.valueOf(t.getUnit match {
-          case TimeUnit.MILLIS => Math.multiplyExact(l.longValue, 1000L)
-          case _ => l.longValue
-        })
-      case other => other
-    }
-    case _ => v match {
-      case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
-      case other => other
-    }
-  }
-
-  /** Spark source-filter literal → a JVM value in the same domain as
-    * [[statValue]]: dates to epoch days, timestamps to µs, Scala decimals
-    * unwrapped. */
-  private def literalValue(v: Any): Any = {
-    import org.apache.spark.sql.catalyst.util.DateTimeUtils
-    v match {
-      case d: java.sql.Date => Int.box(DateTimeUtils.fromJavaDate(d))
-      case ld: java.time.LocalDate => Int.box(DateTimeUtils.localDateToDays(ld))
-      case t: java.sql.Timestamp => Long.box(DateTimeUtils.fromJavaTimestamp(t))
-      case i: java.time.Instant => Long.box(DateTimeUtils.instantToMicros(i))
-      case ldt: java.time.LocalDateTime => Long.box(DateTimeUtils.localDateTimeToMicros(ldt))
-      case bd: scala.math.BigDecimal => bd.bigDecimal
-      case other => other
-    }
-  }
-
-  /** EXACT comparison of a footer stat against a filter literal (or two
-    * stats). Longs compare as longs — `doubleValue` rounding made values
-    * beyond 2⁵³ (warehouse surrogate keys) collide and could prune row
-    * groups that still contained matches; mixed numeric widths go through
-    * BigDecimal, which is exact for every JVM numeric. None = incomparable
-    * → callers keep the batch (conservative). */
-  private[sources] def exactCmp(a0: Any, b0: Any): Option[Int] =
-    (literalValue(a0), literalValue(b0)) match {
-      case (x: Number, y: Number) => numCmp(x, y)
-      case (x: String, y: String) => Some(x.compareTo(y))
-      case (x: java.lang.Boolean, y: java.lang.Boolean) => Some(x.compareTo(y))
-      case _ => None
-    }
-
-  private def numCmp(x: Number, y: Number): Option[Int] = {
-    def nonFinite(n: Number): Boolean = n match {
-      case d: java.lang.Double => d.isNaN || d.isInfinite
-      case f: java.lang.Float => f.isNaN || f.isInfinite
-      case _ => false
-    }
-    if (nonFinite(x) || nonFinite(y)) {
-      val (xd, yd) = (x.doubleValue(), y.doubleValue())
-      if (xd.isNaN || yd.isNaN) None // NaN is unordered — never prune on it
-      else Some(java.lang.Double.compare(xd, yd))
-    } else (x, y) match {
-      case (a: java.lang.Long, b: java.lang.Long) => Some(java.lang.Long.compare(a, b))
-      case (a: java.lang.Integer, b: java.lang.Integer) => Some(Integer.compare(a, b))
-      case _ => Some(toBig(x).compareTo(toBig(y)))
-    }
-  }
-
-  private def toBig(n: Number): java.math.BigDecimal = n match {
-    case bd: java.math.BigDecimal => bd
-    case sd: scala.math.BigDecimal => sd.bigDecimal
-    case bi: java.math.BigInteger => new java.math.BigDecimal(bi)
-    case d: java.lang.Double => new java.math.BigDecimal(d.doubleValue) // exact binary value
-    case f: java.lang.Float => new java.math.BigDecimal(f.doubleValue) // float→double widening is exact
-    case other => java.math.BigDecimal.valueOf(other.longValue)
-  }
-
-  /** Can `filter` provably match NO row of a batch with these stats?
-    * (conservative: unknown columns/shapes → keep the batch) */
-  def excludes(filter: org.apache.spark.sql.sources.Filter, stats: ColStats,
-      rows: Long): Boolean = {
-    import org.apache.spark.sql.sources._
-
-    def cmp(a: Any, b: Any): Option[Int] = exactCmp(a, b)
-
-    filter match {
-      case EqualTo(c, v) => stats.get(c).exists { case (mn, mx, _) =>
-        cmp(v, mn).exists(_ < 0) || cmp(v, mx).exists(_ > 0) }
-      // the shape runtime (DPP-style) filters arrive in: the batch is
-      // excluded only if EVERY candidate value falls outside [min, max]
-      case In(c, vs) => stats.get(c).exists { case (mn, mx, _) =>
-        vs.nonEmpty && vs.forall(v =>
-          cmp(v, mn).exists(_ < 0) || cmp(v, mx).exists(_ > 0)) }
-      case GreaterThan(c, v) => stats.get(c).exists { case (_, mx, _) =>
-        cmp(mx, v).exists(_ <= 0) }
-      case GreaterThanOrEqual(c, v) => stats.get(c).exists { case (_, mx, _) =>
-        cmp(mx, v).exists(_ < 0) }
-      case LessThan(c, v) => stats.get(c).exists { case (mn, _, _) =>
-        cmp(mn, v).exists(_ >= 0) }
-      case LessThanOrEqual(c, v) => stats.get(c).exists { case (mn, _, _) =>
-        cmp(mn, v).exists(_ > 0) }
-      case IsNull(c) => stats.get(c).exists { case (_, _, nulls) => nulls == 0 }
-      case IsNotNull(c) => stats.get(c).exists { case (_, _, nulls) => nulls == rows }
-      case And(l, r) => excludes(l, stats, rows) || excludes(r, stats, rows)
-      case Or(l, r) => excludes(l, stats, rows) && excludes(r, stats, rows)
-      case _ => false
-    }
-  }
-
-  /** Column names a filter references (for targeted stats collection). */
-  def filterCols(f: org.apache.spark.sql.sources.Filter): Set[String] =
-    f.references.toSet
 }
 
 private[sources] class BatchTable(
@@ -437,6 +351,10 @@ private[sources] class BatchTable(
   }
 }
 
+/** Pushdown into graft scans: column pruning, filters (row-group pruning
+  * by Spark's `ParquetFilters` and parquet-mr's `RowGroupFilter`, exact
+  * partition pruning by [[Partitions]]), LIMIT on footer row counts, and
+  * global COUNT(*)/MIN/MAX from footers through Spark's `ParquetUtils`. */
 private[sources] class BatchScanBuilder(
     fullSchema: StructType, options: CaseInsensitiveStringMap)
     extends ScanBuilder with SupportsPushDownRequiredColumns
@@ -478,7 +396,8 @@ private[sources] class BatchScanBuilder(
       }
     })
 
-  /** Accept filters for ROW-GROUP PRUNING via footer min/max stats —
+  /** Accept filters for ROW-GROUP PRUNING via footer min/max stats
+    * (`ParquetFilters` + `RowGroupFilter`, [[BatchSource.prune]]) —
     * whole batches whose stats exclude the predicate are never planned,
     * never opened, never read. Filters over only PARTITION columns are
     * absorbed COMPLETELY (file-level evaluation is exact — a partition
@@ -503,91 +422,88 @@ private[sources] class BatchScanBuilder(
   // -------- aggregate pushdown: COUNT(*)/MIN/MAX answered from footers --
   import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 
-  private var aggValues: Option[(StructType, Array[Any])] = None
+  private var aggRows: Option[(StructType, Seq[InternalRow])] = None
 
   /** Global COUNT(*)/MIN/MAX need no data at all: row counts and column
     * min/max live in the parquet footers (the warehouse-connector trick —
     * Snowflake answers these from metadata too). Only attempted by Spark
-    * when no residual filters exist, so metadata is authoritative. */
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    translateAgg(agg).isDefined
-
-  override def pushAggregation(agg: Aggregation): Boolean =
-    translateAgg(agg) match {
-      case Some(v) => aggValues = Some(v); true
-      case None => false
-    }
-
-  private def translateAgg(agg: Aggregation): Option[(StructType, Array[Any])] = {
-    if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty) return None
-    val conf = BatchSource.hadoopConf()
-    val statCols = agg.aggregateExpressions.flatMap {
-      case m: Min => m.column.references.headOption.map(_.fieldNames.head)
-      case m: Max => m.column.references.headOption.map(_.fieldNames.head)
-      case _ => None
-    }.toSet
-    lazy val listed = BatchSource.listFiles(options, conf)
-    lazy val discovered = BatchSource.discoverBatches(listed, conf, statCols)
-
-    /** MIN/MAX of a PARTITION column comes from the paths alone — exact
-      * (a partition value is constant per file) and zero IO beyond the
-      * listing: the warehouse-metadata trick extended to the layout. */
-    lazy val qroot = BatchSource.qualifiedDir(options, conf)
-    def partMinMax(f: StructField, wantMin: Boolean): Option[(StructField, Any)] = {
-      val vals = listed.flatMap(file =>
-        Option(Partitions.valuesOf(file.getPath.toString, qroot, Seq(f))
-          .getOrElse(f.name, null)))
-      if (vals.isEmpty) None // all-null / no files: let Spark scan
-      else {
-        val cmp = new Ordering[Any] {
-          def compare(a: Any, b: Any): Int =
-            BatchSource.exactCmp(a, b).getOrElse(0)
-        }
-        Some((f.copy(nullable = true), if (wantMin) vals.min(cmp) else vals.max(cmp)))
-      }
-    }
-
-    def minMax(name: String, wantMin: Boolean): Option[(StructField, Any)] = {
-      partCols.find(_.name == name) match {
-        case Some(pf) => return partMinMax(pf, wantMin)
-        case None => ()
-      }
-      // a BINARY column's footer stats decode as strings (statValue), not
-      // as the bytes Spark expects: let Spark scan it
-      fullSchema.fields.find(f => f.name == name && f.dataType != BinaryType).flatMap { field =>
-        val stats = discovered.map(_._2.get(name))
-        if (stats.exists(_.isEmpty)) None // a batch without stats → bail out
-        else {
-          val vals = stats.flatten.map(s => if (wantMin) s._1 else s._2)
-          // exact ordering (Long as Long, BigDecimal across widths) — an
-          // incomparable pair means the metadata answer would be a guess,
-          // so refuse the pushdown and let Spark scan the data
-          if (vals.sliding(2).exists(p =>
-              p.length == 2 && BatchSource.exactCmp(p(0), p(1)).isEmpty)) None
-          else {
-            val cmp = new Ordering[Any] {
-              def compare(a: Any, b: Any): Int =
-                BatchSource.exactCmp(a, b).getOrElse(0)
-            }
-            Some((field.copy(nullable = true),
-              if (wantMin) vals.min(cmp) else vals.max(cmp)))
-          }
-        }
-      }
-    }
-
-    val translated = agg.aggregateExpressions.map {
-      case _: CountStar =>
-        Some((StructField("count_star", LongType, nullable = false),
-          discovered.map(_._1.rows).sum: Any))
-      case m: Min => minMax(m.column.references.head.fieldNames.head, wantMin = true)
-      case m: Max => minMax(m.column.references.head.fieldNames.head, wantMin = false)
-      case _ => None
-    }
-    if (translated.exists(_.isEmpty)) None
-    else Some((StructType(translated.flatten.map(_._1)),
-      translated.flatten.map(_._2).toArray))
+    * when no residual filters exist, so metadata is authoritative. The
+    * pushdown is PARTIAL: the scan yields one row per file and Spark's
+    * own final aggregate merges them. */
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    aggRows = translateAgg(agg)
+    aggRows.isDefined
   }
+
+  /** One row per file: data columns through Spark's
+    * `ParquetUtils.createAggInternalRowFromFooter`, partition columns from
+    * the file's path (constant per file). None = let Spark scan: a shape
+    * other than global COUNT(*)/MIN/MAX of a top-level column, footer
+    * min/max that are not exact ([[footerExact]]), or a
+    * row group without them. */
+  private def translateAgg(agg: Aggregation): Option[(StructType, Seq[InternalRow])] = {
+    if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty) return None
+    def column(e: org.apache.spark.sql.connector.expressions.Expression) = e match {
+      case r: NamedReference if r.fieldNames.length == 1 =>
+        fullSchema.find(_.name == r.fieldNames.head)
+      case _ => None
+    }
+    // each aggregate's output field and the column it reads (None: COUNT(*))
+    val outs = agg.aggregateExpressions.toSeq.map {
+      case _: CountStar => Some((StructField("count(*)", LongType, nullable = false), None))
+      case m: Min => column(m.column).map(f => (f.copy(s"min(${f.name})", nullable = true), Some(f.name)))
+      case m: Max => column(m.column).map(f => (f.copy(s"max(${f.name})", nullable = true), Some(f.name)))
+      case _ => None
+    }
+    if (outs.exists(_.isEmpty)) return None
+    val (outFields, cols) = outs.flatten.unzip
+    val partNames = partCols.map(_.name).toSet
+    // COUNT(*) and data-column MIN/MAX come from the footers
+    val fromFooter = cols.map(!_.exists(partNames))
+    val dataCols = cols.flatten.toSet -- partNames
+    val dataAgg = new Aggregation(
+      agg.aggregateExpressions.zip(fromFooter).collect { case (a, true) => a }, Array.empty)
+    val dataAggSchema = StructType(outFields.zip(fromFooter).collect { case (f, true) => f })
+    val conf = BatchSource.hadoopConf()
+    val qroot = BatchSource.qualifiedDir(options, conf)
+    val groups = BatchSource.discoverBatches(
+      BatchSource.listFiles(options, conf), conf, dataCols.map(QuotingUtils.quoteIfNeeded))
+    val rows = groups.groupBy(_.handle.path).toSeq.map { case (path, gs) =>
+      // Spark's footer code indexes chunks and schema fields by the data
+      // schema's positions: hand it exactly the aggregated columns
+      val fields = gs.head.schema.getFields.asScala.filter(f => dataCols(f.getName))
+      if (fields.size != dataCols.size || !fields.forall(footerExact)) return None
+      val footer = new ParquetMetadata(new FileMetaData(
+          new MessageType("agg", fields.asJava), util.Map.of(), null),
+        gs.map(_.chunks).asJava)
+      val footerRow =
+        try GraftFooterAggregates.row(footer, path,
+          StructType(fields.map(f => fullSchema(f.getName)).toSeq), dataAgg, dataAggSchema)
+        catch { case _: UnsupportedOperationException => return None } // no min/max
+      val footerValues = dataAggSchema.fields.indices.iterator
+        .map(i => footerRow.get(i, dataAggSchema(i).dataType))
+      val parts = Partitions.valuesOf(path, qroot, partCols)
+      new GenericInternalRow(cols.zip(fromFooter).map[Any] {
+        case (_, true) => footerValues.next()
+        case (c, false) => CatalystTypeConverters.convertToCatalyst(parts.getOrElse(c.get, null))
+      }.toArray): InternalRow
+    }
+    // all files empty: no row would leave COUNT(*) NULL, not 0
+    if (rows.isEmpty) None else Some((StructType(outFields), rows))
+  }
+
+  /** Footer min/max that Spark's row converter turns into the exact
+    * value: BOOLEAN, FLOAT, DOUBLE and signed INT32/INT64 (ints, DATE,
+    * DECIMAL up to 18 digits, timestamps). Byte-ordered BINARY and
+    * FIXED_LEN_BYTE_ARRAY (strings, binary, wider decimals; parquet may
+    * truncate them), INT96 (no statistics) and unsigned ints (unsigned
+    * order) decline to a scan. */
+  private def footerExact(t: Type): Boolean = t.isPrimitive &&
+    Set(BOOLEAN, INT32, INT64, FLOAT, DOUBLE)(t.asPrimitiveType.getPrimitiveTypeName) &&
+    (t.getLogicalTypeAnnotation match {
+      case i: IntLogicalTypeAnnotation => i.isSigned
+      case _ => true
+    })
 
   /** LIMIT pushdown — footer row counts make a filterless LIMIT a
     * metadata question: the scan keeps only a PREFIX of row-group
@@ -604,16 +520,17 @@ private[sources] class BatchScanBuilder(
   override def pushLimit(n: Int): Boolean =
     if (pushed.isEmpty && n >= 0) { limit = Some(n); true } else false
 
-  override def build(): Scan = aggValues match {
-    case Some((schema, values)) => new MetadataAggScan(schema, values, options)
+  override def build(): Scan = aggRows match {
+    case Some((schema, rows)) => new MetadataAggScan(schema, rows, options)
     case None => new BatchScan(required, options, pushed, partCols, limit)
   }
 }
 
 /** A scan whose entire result was computed from footer metadata on the
-  * driver: one partition, one row, zero data files opened. */
+  * driver: one partition holding one aggregate row per file, zero data
+  * files opened. */
 private[sources] class MetadataAggScan(
-    aggSchema: StructType, values: Array[Any], options: CaseInsensitiveStringMap)
+    aggSchema: StructType, rows: Seq[InternalRow], options: CaseInsensitiveStringMap)
     extends Scan with Batch {
 
   override def readSchema(): StructType = aggSchema
@@ -625,30 +542,22 @@ private[sources] class MetadataAggScan(
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] =
-    Array(MetadataAggPartition(values.map {
-      case s: String => s; case other => other // already plain JVM values
-    }))
+    Array(MetadataAggPartition(rows))
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
       override def createReader(p: InputPartition): PartitionReader[InternalRow] =
         new PartitionReader[InternalRow] {
-          private var done = false
-          private val vals = p.asInstanceOf[MetadataAggPartition].values.map {
-            case s: String => UTF8String.fromString(s)
-            // decimal footer stats travel as BigDecimal; DATE stats are
-            // already internal days (Int) and timestamps internal µs (Long)
-            case bd: java.math.BigDecimal => Decimal(bd)
-            case other => other
-          }
-          override def next(): Boolean = if (done) false else { done = true; true }
-          override def get(): InternalRow = new GenericInternalRow(vals.toArray[Any])
+          private val it = p.asInstanceOf[MetadataAggPartition].rows.iterator
+          private var row: InternalRow = _
+          override def next(): Boolean = it.hasNext && { row = it.next(); true }
+          override def get(): InternalRow = row
           override def close(): Unit = ()
         }
     }
 }
 
-private[sources] case class MetadataAggPartition(values: Array[Any])
+private[sources] case class MetadataAggPartition(rows: Seq[InternalRow])
     extends InputPartition
 
 private[sources] class BatchScan(
@@ -713,23 +622,18 @@ private[sources] class BatchScan(
   // a few replans held megabytes of strings per entry), and the cache is
   // capped: a replan-heavy workload cycling through distinct runtime
   // filters evicts oldest-first instead of growing without bound.
-  private val discoveryCache = new BoundedCache[
-    (Set[String], String),
-    Seq[(BatchSource.BatchHandle, BatchSource.ColStats)]](max = 8)
+  private val discoveryCache =
+    new BoundedCache[(Set[String], String), Seq[BatchSource.RowGroup]](max = 8)
 
   private def pruned: (Seq[BatchSource.BatchHandle], Int) = {
     val fs = allFilters
     val keptFiles = files // partition-pruned listing — before any footer IO
     // partition columns have no footer stats: never sweep for them
-    val statCols: Set[String] =
-      fs.flatMap(BatchSource.filterCols).toSet -- partColNames
+    val statCols = fs.flatMap(_.references).toSet -- partColNames
     val discovered = discoveryCache.getOrElseUpdate(
       (statCols, BatchSource.pathDigest(keptFiles.map(_.getPath.toString))),
       BatchSource.discoverBatches(keptFiles, conf, statCols))
-    val kept = discovered.filterNot { case (h, stats) =>
-      fs.exists(BatchSource.excludes(_, stats, h.rows))
-    }
-    (kept.map(_._1), discovered.length)
+    (BatchSource.prune(fs.toSeq, discovered).map(_.handle), discovered.length)
   }
 
   private lazy val batches = pruned._1 // for stats; re-pruned at plan time

@@ -345,7 +345,7 @@ private[sources] class BatchMicroBatchStream(
         None
       }
     }
-    val batches = BatchSource.discoverBatches(statuses, conf).map(_._1)
+    val batches = BatchSource.discoverBatches(statuses, conf).map(_.handle)
     if (batches.isEmpty) return Array.empty
     val target = Partitioner.parseBytes(
       Option(options.get("partition_size")).getOrElse(Partitioner.DefaultPartitionSize))

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
@@ -171,13 +173,22 @@ private[sources] object Partitions {
 
   private def eval3(f: Filter, vals: Map[String, Any]): Tri = {
     // comparison leaf: missing column → per-row; NULL operand → UNKNOWN;
-    // incomparable types → conservative per-row keep
+    // otherwise both sides become Catalyst literals of the partition
+    // value's type and compare under Catalyst's ordering for it (strings
+    // by code point, NaN largest, as Spark compares the column's rows);
+    // a literal of another type → conservative per-row keep
     def cmp3(c: String, v: Any)(p: Int => Boolean): Tri =
       if (!vals.contains(c)) PerRow
       else if (vals(c) == null || v == null) Unknown
-      else BatchSource.exactCmp(vals(c), v) match {
-        case Some(r) => if (p(r)) KnownTrue else KnownFalse
-        case None => PerRow
+      else {
+        val a = Literal(vals(c))
+        scala.util.Try(Literal(v)).toOption.filter(_.dataType == a.dataType) match {
+          case Some(b) =>
+            if (p(TypeUtils.getInterpretedOrdering(a.dataType).compare(a.value, b.value)))
+              KnownTrue
+            else KnownFalse
+          case None => PerRow
+        }
       }
     f match {
       case EqualTo(c, v) => cmp3(c, v)(_ == 0)

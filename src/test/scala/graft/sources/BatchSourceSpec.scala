@@ -627,8 +627,10 @@ class BatchSourceSpec extends SparkSpec {
       BatchSource.listFiles(opts, conf), conf, Set("o_orderkey"))
     assert(groups.length >= 3, s"need ≥ 3 row groups, got ${groups.length}")
     val mid = groups.length / 2
-    def stat(i: Int, k: Int) =
-      groups(i)._2("o_orderkey").productElement(k).asInstanceOf[Long]
+    def stat(i: Int, k: Int) = {
+      val st = groups(i).chunks.getColumns.get(0).getStatistics
+      (if (k == 0) st.genericGetMin else st.genericGetMax).asInstanceOf[Long]
+    }
     val (lo, hi) = (stat(mid - 1, 1), stat(mid + 1, 0))
     val pred = col("o_orderkey") <= lo || col("o_orderkey") >= hi
     val df = spark.read.format("graft").option("npartitions", 1).load(dir)
@@ -714,6 +716,61 @@ class BatchSourceSpec extends SparkSpec {
     assert(agg.queryExecution.executedPlan.toString.contains("METADATA-ONLY"))
     val ref = spark.read.parquet(dir).agg(min("price").as("mn"), max("d").as("mx"))
     assertSameRows(agg, ref)
+  }
+
+  /** The `batches=k/n` (and `files=`) notes of every graft scan in the
+    * executed plan. */
+  private def batchNotes(df: org.apache.spark.sql.DataFrame): Set[String] = {
+    df.collect()
+    "batches=\\d+/\\d+(, files=\\d+/\\d+)?".r
+      .findAllIn(df.queryExecution.executedPlan.toString).toSet
+  }
+
+  test("scan descriptions pin the planned batches of runtime, partition and typed filters") {
+    Tables.register(spark, sfDir)
+    def key(k: String) = batchNotes(graft.SparkEntry.queries(k)(spark, sfDir))
+    assert(key("q_dsv2_runtime_prune") == Set("batches=2/2"))
+    assert(key("q_dsv2_partition_prune") == Set("batches=1/1, files=1/5"))
+    // the staging of "DATE, DECIMAL and TIMESTAMP filters prune row groups"
+    val dir = Files.createTempDirectory("graft_prune_pins").toString
+    Tables.table(spark, sfDir, "orders")
+      .selectExpr("o_orderkey", "o_orderdate AS ts", "CAST(o_orderdate AS DATE) AS d",
+        "CAST(o_totalprice AS DECIMAL(14,2)) AS price")
+      .orderBy("d").coalesce(1)
+      .write.option("parquet.block.size", 8 * 1024).mode("overwrite").parquet(dir)
+    val base = spark.read.format("graft").option("partition_size", "8 KiB").load(dir)
+    val native = spark.read.parquet(dir)
+    val maxD = native.agg(max("d")).head.getDate(0)
+    val maxTs = native.agg(max("ts")).head.get(0)
+    assert(batchNotes(base.filter(col("d") >= lit(maxD))) == Set("batches=1/6"))
+    assert(batchNotes(base.filter(col("ts") >= lit(maxTs))) == Set("batches=1/6"))
+    assert(batchNotes(base.filter(
+      col("price") > lit(new java.math.BigDecimal("99999999.99")))) == Set("batches=0/6"))
+  }
+
+  // U+FF61 and U+1F600: UTF-16 code units order them one way, code points
+  // (parquet's unsigned byte order for UTF-8) the other
+  private val (halfwidth, emoji) = ("\uFF61", "\uD83D\uDE00")
+
+  test("an equality filter on a non-BMP string keeps its row group") {
+    val dir = Files.createTempDirectory("graft_non_bmp").toString
+    import spark.implicits._
+    Seq(halfwidth, emoji).toDF("s").coalesce(1).write.mode("overwrite").parquet(dir)
+    assertSameRows(spark.read.format("graft").load(dir).filter(col("s") === emoji),
+      spark.read.parquet(dir).filter(col("s") === emoji))
+    assert(spark.read.format("graft").load(dir).filter(col("s") === emoji).count() == 1)
+  }
+
+  test("MIN/MAX of a string column across files match the native reader") {
+    val dir = Files.createTempDirectory("graft_non_bmp_agg").toString
+    import spark.implicits._
+    Seq(halfwidth).toDF("s").coalesce(1).write.mode("append").parquet(dir)
+    Seq(emoji).toDF("s").coalesce(1).write.mode("append").parquet(dir)
+    val got = spark.read.format("graft").load(dir).agg(min("s"), max("s"))
+    assertSameRows(got, spark.read.parquet(dir).agg(min("s"), max("s")))
+    assert(got.head.getString(0) == halfwidth && got.head.getString(1) == emoji)
+    // string footer min/max are byte-ordered and may be truncated: scanned
+    assert(!got.queryExecution.executedPlan.toString.contains("METADATA-ONLY"))
   }
 
   test("aggregations and joins work through the source") {

@@ -104,35 +104,54 @@ class PartitionsLogicSpec extends AnyFunSuite {
   }
 
   test("row-group stats pruning soundness: a batch with a satisfying row is never excluded") {
-    // same safety property one layer down: [[BatchSource.excludes]]
-    // prunes row groups from footer (min, max, nullCount) stats — if any
+    // same safety property one layer down: [[BatchSource.prune]] drops
+    // row groups by footer (min, max, nullCount) statistics through
+    // Spark's ParquetFilters and parquet-mr's RowGroupFilter — if any
     // generated row satisfies the filter, exclusion loses result rows
+    import org.apache.parquet.column.statistics.{LongStatistics, Statistics}
+    import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData, ColumnPath, CompressionCodecName}
+    import org.apache.parquet.schema.{MessageType, PrimitiveType, Types}
+    val cols = Seq("p", "d")
+    val types = cols.map(c => Types.optional(PrimitiveType.PrimitiveTypeName.INT64).named(c))
+    val schema = new MessageType("batch", types: _*)
     val rnd = new scala.util.Random(21)
     var exercised = 0
     (0 until 5000).foreach { _ =>
       val nRows = 1 + rnd.nextInt(6)
-      val cols = Seq("p", "d")
       val batch: Seq[Map[String, Any]] = (0 until nRows).map { _ =>
         cols.map(c => c -> domain(rnd.nextInt(domain.length))).toMap
       }
-      // exact footer stats; an all-null column carries no min/max in a
-      // real footer, so it is simply absent (excludes keeps, conservative)
-      val stats: BatchSource.ColStats = cols.flatMap { c =>
-        val vs = batch.map(_(c))
-        val nonNull = vs.filter(_ != null).map(_.asInstanceOf[Long])
-        if (nonNull.isEmpty) None
-        else Some(c ->
-          ((nonNull.min: Any, nonNull.max: Any, vs.count(_ == null).toLong)))
-      }.toMap
+      // the footer a writer would leave: exact statistics per column; an
+      // all-null column has a null count and no min/max
+      val block = new BlockMetaData
+      block.setRowCount(nRows)
+      cols.zip(types).foreach { case (c, t) =>
+        val stats = Statistics.createStats(t).asInstanceOf[LongStatistics]
+        batch.map(_(c)).foreach {
+          case null => stats.incrementNumNulls()
+          case v: Long => stats.updateStats(v)
+        }
+        block.addColumn(ColumnChunkMetaData.get(ColumnPath.get(c), t,
+          CompressionCodecName.UNCOMPRESSED, null, java.util.Set.of(), stats,
+          0L, 0L, nRows.toLong, 0L, 0L))
+      }
+      val group = BatchSource.RowGroup(
+        BatchSource.BatchHandle("batch", 0, nRows, 0L, 0L), schema, block)
       val f = genFilter(rnd, 3, IndexedSeq("p", "d"))
       if (batch.exists(row => eval(f, row).contains(true))) {
         exercised += 1
-        assert(!BatchSource.excludes(f, stats, nRows),
+        assert(BatchSource.prune(Seq(f), Seq(group)).nonEmpty,
           s"UNSOUND ROW-GROUP PRUNE: $f excluded a batch containing a " +
-            s"satisfying row; stats=$stats batch=$batch")
+            s"satisfying row; stats=${block.getColumns} batch=$batch")
       }
     }
     assert(exercised > 1000, s"generator sanity: only $exercised satisfiable cases")
+  }
+
+  test("string partition values compare by code point, as Spark compares strings") {
+    // U+1F600 sorts before U+FF61 in UTF-16 units, after it in code points
+    assert(Partitions.matches(GreaterThan("p", "\uFF61"), Map("p" -> "\uD83D\uDE00")))
+    assert(!Partitions.matches(LessThan("p", "\uFF61"), Map("p" -> "\uD83D\uDE00")))
   }
 
   test("precision: partition-only filters exclude exactly the 3VL non-TRUE files") {
