@@ -1,137 +1,206 @@
 package graft
 
-/** Snowflake scalar-function dialect shim for the SQL front door — the
-  * round-13 verdict's last "missing" item. The reference's UX is
-  * query-string pass-through to the warehouse (dask_snowflake/
-  * core.py:143), so a user migrating real Snowflake SQL types
-  * Snowflake-isms; Spark 4.1 already speaks most of them natively
-  * (verified this round against the 4.1.2 registry: NVL, NVL2, IFNULL,
-  * DECODE, ZEROIFNULL, NULLIFZERO, TO_NUMBER/TRY_TO_NUMBER, 3-arg
-  * DATEADD/DATEDIFF, LISTAGG … WITHIN GROUP, SPLIT_PART, REGEXP_COUNT,
-  * REGEXP_SUBSTR, DAYNAME, MONTHNAME, STARTSWITH, CONTAINS, MEDIAN —
-  * all pass through untouched), and this shim rewrites the small
-  * remainder that Spark lacks, each with EXACTLY matching semantics:
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
+
+/** Snowflake scalar functions that Spark 4.1 lacks, as Catalyst function
+  * builders. The reference's UX is query-string pass-through to the
+  * warehouse (dask_snowflake/core.py:143), so a user migrating real
+  * Snowflake SQL types Snowflake-isms; Spark 4.1 already speaks most of
+  * them natively (NVL, NVL2, IFNULL, DECODE, ZEROIFNULL, NULLIFZERO,
+  * TO_NUMBER/TRY_TO_NUMBER, 3-arg DATEADD/DATEDIFF, LISTAGG … WITHIN
+  * GROUP, SPLIT_PART, REGEXP_COUNT, REGEXP_SUBSTR, DAYNAME, MONTHNAME,
+  * STARTSWITH, CONTAINS, MEDIAN), and [[functions]] builds the small
+  * remainder, each as the Catalyst expression of its exact Spark twin:
   *
-  *   - `IFF(c, t, f)`            → `if(c, t, f)`
-  *   - `SQUARE(x)`               → `power((x), 2)` (double, as Snowflake)
-  *   - `CHARINDEX(sub, s[, p])`  → `locate(sub, s[, p])` (same arg order,
-  *                                  same 1-based/0-absent contract)
-  *   - `TO_VARCHAR(x)`           → `CAST((x) AS STRING)` (1-arg form)
-  *   - `EDITDISTANCE(a, b)`      → `levenshtein(a, b)` (2-arg form)
-  *   - `DIV0(a, b)`              → `CASE WHEN (b) = 0 THEN 0 ELSE (a)/(b) END`
-  *   - `DIV0NULL(a, b)`          → as DIV0 with the `OR (b) IS NULL` arm
-  *   - `BITAND/BITOR/BITXOR`     → `&` / `|` / `^`
-  *   - `BITNOT(a)`               → `~(a)`
-  *   - `BITSHIFTLEFT/RIGHT`      → `shiftleft` / `shiftright`
-  *
-  * Round 15 closes the three forms that previously loud-failed, each
-  * with an exact (or exactly-scoped) twin:
-  *
-  *   - `TO_VARCHAR(x, 'fmt')` with a LITERAL format: date formats built
+  *   - `IFF(c, t, f)`            → `If`
+  *   - `SQUARE(x)`               → `Pow(x, 2)` (double, as Snowflake)
+  *   - `CHARINDEX(sub, s[, p])`  → `StringLocate` (same arg order, same
+  *                                  1-based/0-absent contract)
+  *   - `TO_VARCHAR(x)`           → `Cast(x, STRING)`
+  *   - `EDITDISTANCE(a, b)`      → `Levenshtein`
+  *   - `DIV0(a, b)`              → `CASE WHEN b = 0 THEN 0 ELSE a / b END`
+  *   - `DIV0NULL(a, b)`          → as DIV0 with the `OR b IS NULL` arm
+  *   - `BITAND/BITOR/BITXOR`     → `BitwiseAnd` / `BitwiseOr` / `BitwiseXor`
+  *   - `BITNOT(a)`               → `BitwiseNot`
+  *   - `BITSHIFTLEFT/RIGHT`      → `ShiftLeft` / `ShiftRight`
+  *   - `TO_VARCHAR(x, 'fmt')` with a constant format: date formats built
   *     from the unambiguous numeric tokens (YYYY YY MM DD HH24 HH12 HH
   *     MI SS FF[1-9] AM PM + `-/:. ,` separators) translate token-wise
-  *     to a `date_format` pattern; the NAME tokens MON/DY (round 16)
-  *     translate with Snowflake's case-of-the-keyword output contract
-  *     (`MON`→JAN, `Mon`→Jan, `mon`→jan; likewise DY) — a capitalized
-  *     token folds into the plain pattern (Spark's MMM/EEE emit
-  *     capitalized), upper/lower tokens emit as their own
-  *     `upper(date_format(..))`/`lower(..)` segment inside a `concat`;
-  *     numeric formats over `9 0 , . $` translate char-wise (9 → #) to
-  *     a `format_number` DecimalFormat pattern. Remaining exotics
-  *     (`"…"` literal sections; TZ*; full MMMM/DAY names) still
-  *     loud-fail, as does a non-literal format. One DOCUMENTED divergence on the mapped
-  *     numeric forms: Snowflake space-fills a 9-position that
+  *     to a `DateFormatClass` pattern; the NAME tokens MON/DY translate
+  *     with Snowflake's case-of-the-keyword output contract (`MON`→JAN,
+  *     `Mon`→Jan, `mon`→jan; likewise DY) — a capitalized token folds
+  *     into the plain pattern (Spark's MMM/EEE emit capitalized),
+  *     upper/lower tokens become their own `Upper`/`Lower` segment of a
+  *     `Concat`; numeric formats over `9 0 , . $` translate char-wise
+  *     (9 → #) to a `FormatNumber` DecimalFormat pattern. Remaining
+  *     exotics (`"…"` literal sections; TZ*; full MMMM/DAY names) and a
+  *     non-constant format fail at analysis. One DOCUMENTED divergence on
+  *     the numeric forms: Snowflake space-fills a 9-position that
   *     DecimalFormat's # simply omits (underwidth values lose leading
   *     spaces); formats made of 0s (zero-pad) are exact.
-  *   - `EDITDISTANCE(a, b, max)` → `CASE WHEN levenshtein(a, b, max) =
-  *     -1 THEN max ELSE … END`: Spark's 3-arg levenshtein returns -1
-  *     past the threshold where Snowflake clamps to max — the CASE is
-  *     an exact twin (d = max passes through both). `max` must be a
-  *     non-negative expression, as in Snowflake.
-  *   - `STRTOK(s[, delim[, part]])` with a LITERAL delimiter →
-  *     `try_element_at(filter(split(s, rx), t -> t != ''), part)`,
-  *     where rx is the escaped character for a 1-char delimiter and an
-  *     escaped `[class]` for Snowflake's multi-character character-SET
-  *     (any-of) form (round 16) — exact including Snowflake's
-  *     empty-token collapse (consecutive delimiters yield no token)
-  *     and NULL past the last token, which `split_part`'s
-  *     empty-string-on-miss contract would NOT match. Non-literal and
-  *     EMPTY delimiters still loud-fail (the empty delimiter is
-  *     whole-string-as-token, its own semantics).
+  *   - `EDITDISTANCE(a, b, max)` → `coalesce(nullif(levenshtein(a, b,
+  *     max), -1), max)`: Spark's 3-arg levenshtein returns -1 past the
+  *     threshold where Snowflake clamps to max; one evaluation of the
+  *     banded O(len·max) distance, and d = max passes through both.
+  *   - `STRTOK(s[, delim[, part]])` with a constant delimiter →
+  *     `try_element_at(array_remove(split(s, rx, -1), ''), part)`, where
+  *     rx is the escaped character for a 1-char delimiter and an escaped
+  *     `[class]` for Snowflake's multi-character character-SET (any-of)
+  *     form — exact including Snowflake's empty-token collapse
+  *     (consecutive delimiters yield no token) and NULL past the last
+  *     token, which `split_part`'s empty-string-on-miss contract would
+  *     NOT match. Non-constant and EMPTY delimiters fail at analysis
+  *     (the empty delimiter is whole-string-as-token, its own semantics).
   *
-  * `INSERT(s, pos, len, r)` remains deliberately unrecognized:
-  * rewriting the `INSERT` token risks the DML keyword inside MERGE
-  * text; use `overlay` (Spark-native, same semantics).
+  * `INSERT(s, pos, len, r)` is deliberately not provided; use `overlay`
+  * (Spark-native, same semantics).
   *
-  * The rewriter is a quote/comment-aware single pass, not a regex:
-  * `'…'` literals (with `''` doubling), `"…"`/backtick identifiers and
-  * line/block comments pass through byte-for-byte; call detection
-  * requires an immediate `(` and no preceding `.` (so `alias.iff` is
-  * never touched); arguments are split at top-level commas only and
-  * rewritten recursively, so `IFF(DIV0(a,b) > 0, SQUARE(x), …)` nests.
-  * [[SqlText]] applies it at the leaf positions of its grammar — the
-  * pass-through statement, QUALIFY's head/predicate, ASOF's projection
-  * and tail, and each MERGE AND-gate AFTER clause splitting, so a
-  * DIV0-generated `CASE WHEN` can never confuse the WHEN-splitter.
-  * Oracle-checked as `q_sql_dialect_scalar` / `q_sql_dialect_bitwise` /
-  * `q_sql_dialect_passthrough`.
+  * The builders are session functions, so they work wherever Spark
+  * resolves a function name: `spark.sql`, temporary views, `expr()`,
+  * and every leaf of [[SqlText]]'s grammar. They reach a session two
+  * ways: [[register]] on an existing one (both SQL front doors,
+  * `Read.readTable` and [[SqlText.sql]], call it), or
+  * `graft.functions.GraftExtensions` at build time. Spark treats them
+  * as temporary functions, so a permanent view cannot reference them.
+  * Oracle-checked as `q_sql_dialect_scalar` / `_bitwise` /
+  * `_passthrough` / `_listagg` / `_to_varchar` / `_editdistance` /
+  * `_strtok`.
+  *
+  * [[maskLiterals]] and [[splitTopLevel]] are [[SqlText]]'s
+  * literal-aware statement tools.
   */
 object SqlDialect {
 
-  private val Names: Set[String] = Set(
-    "iff", "square", "charindex", "to_varchar", "editdistance",
-    "div0", "div0null", "bitand", "bitor", "bitxor", "bitnot",
-    "bitshiftleft", "bitshiftright", "strtok")
-
-  /** Rewrite every recognized Snowflake call site in `sql`; text not
-    * in the mapped set (including all the natively-supported functions
-    * above) passes through untouched.
-    *
-    * `isUserFn` declares names the CALLER has claimed — [[SqlText]]
-    * passes the session's temporary-function registry, so a user who
-    * `spark.udf.register`s a function sharing a mapped name (e.g. a
-    * session UDF named `iff` or `div0`) keeps THEIR function: the call
-    * passes through untouched and Spark's resolver binds the UDF,
-    * exactly as it would in a plain `spark.sql` (round-14 ADVICE —
-    * without the check the rewrite silently swapped which function
-    * executes). The default claims nothing, preserving the pure-text
-    * contract for direct callers. */
-  def rewrite(sql: String, isUserFn: String => Boolean = _ => false): String = {
-    val out = new StringBuilder
-    val n = sql.length
-    var i = 0
-    def isIdentChar(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'') { val j = pastString(sql, i); out.append(sql.substring(i, j)); i = j }
-      else if (c == '"' || c == '`') {
-        val j = pastDelim(sql, i, c); out.append(sql.substring(i, j)); i = j
-      } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        val j = sql.indexOf('\n', i) match { case -1 => n; case k => k }
-        out.append(sql.substring(i, j)); i = j
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val j = sql.indexOf("*/", i) match { case -1 => n; case k => k + 2 }
-        out.append(sql.substring(i, j)); i = j
-      } else if ((c.isLetter || c == '_') &&
-          (i == 0 || !isIdentChar(sql.charAt(i - 1)))) {
-        var j = i
-        while (j < n && isIdentChar(sql.charAt(j))) j += 1
-        val word = sql.substring(i, j)
-        var k = j
-        while (k < n && sql.charAt(k).isWhitespace) k += 1
-        val qualified = out.reverseIterator.find(!_.isWhitespace).contains('.')
-        if (Names.contains(word.toLowerCase) && !qualified &&
-            k < n && sql.charAt(k) == '(' && !isUserFn(word)) {
-          val close = matchParen(sql, k)
-          val args = splitTopLevel(sql.substring(k + 1, close))
-            .map(a => rewrite(a, isUserFn).trim)
-          out.append(emit(word, args, sql.substring(i, close + 1)))
-          i = close + 1
-        } else { out.append(word); i = j }
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
+  /** Every dialect function, in the form `SparkSessionExtensions.injectFunction`
+    * takes. */
+  private[graft] val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    "iff" -> fixed("IFF", 3) { case Seq(c, t, f) => If(c, t, f) },
+    "square" -> fixed("SQUARE", 1) { case Seq(x) => Pow(x, Literal(2)) },
+    "charindex" -> ranged("CHARINDEX", 2, 3) {
+      case Seq(sub, s) => new StringLocate(sub, s)
+      case Seq(sub, s, p) => StringLocate(sub, s, p)
+    },
+    "to_varchar" -> ranged("TO_VARCHAR", 1, 2) {
+      case Seq(x) => Cast(x, StringType)
+      case args => toVarchar(args)
+    },
+    "editdistance" -> ranged("EDITDISTANCE", 2, 3) {
+      case Seq(a, b) => new Levenshtein(a, b)
+      case Seq(a, b, max) =>
+        Coalesce(Seq(new NullIf(Levenshtein(a, b, Some(max)), Literal(-1)), max))
+    },
+    "div0" -> fixed("DIV0", 2) { case Seq(a, b) =>
+      CaseWhen(Seq(EqualTo(b, Literal(0)) -> Literal(0)), Divide(a, b))
+    },
+    "div0null" -> fixed("DIV0NULL", 2) { case Seq(a, b) =>
+      CaseWhen(Seq(Or(EqualTo(b, Literal(0)), IsNull(b)) -> Literal(0)), Divide(a, b))
+    },
+    "bitand" -> fixed("BITAND", 2) { case Seq(a, b) => BitwiseAnd(a, b) },
+    "bitor" -> fixed("BITOR", 2) { case Seq(a, b) => BitwiseOr(a, b) },
+    "bitxor" -> fixed("BITXOR", 2) { case Seq(a, b) => BitwiseXor(a, b) },
+    "bitnot" -> fixed("BITNOT", 1) { case Seq(a) => BitwiseNot(a) },
+    "bitshiftleft" -> fixed("BITSHIFTLEFT", 2) { case Seq(a, n) => ShiftLeft(a, n) },
+    "bitshiftright" -> fixed("BITSHIFTRIGHT", 2) { case Seq(a, n) => ShiftRight(a, n) },
+    "strtok" -> ranged("STRTOK", 1, 3)(strtok)
+  ).map { case (name, builder) =>
+    (FunctionIdentifier(name), new ExpressionInfo(getClass.getName, name), builder)
   }
+
+  /** Put [[functions]] into the session's function registry (idempotent).
+    * A name the session already binds to something other than Spark's
+    * own builtin is the user's and keeps its function; once the user
+    * drops it, the next call restores the dialect function. Spark's
+    * own builtin `to_varchar`, whose formats are not Snowflake's, is
+    * replaced. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, builder) =>
+      if (registry.lookupFunctionBuilder(id) == FunctionRegistry.builtin.lookupFunctionBuilder(id))
+        registry.registerFunction(id, info, builder)
+    }
+  }
+
+  /** The text of a call, for error messages. */
+  private def call(name: String, args: Seq[Expression]): String =
+    s"$name(${args.map(_.sql).mkString(", ")})"
+
+  private def ranged(name: String, min: Int, max: Int)(
+      build: Seq[Expression] => Expression): FunctionBuilder = { args =>
+    require(args.size >= min && args.size <= max,
+      s"$name takes ${if (min == max) s"$min argument(s)" else s"$min to $max arguments"}, " +
+        s"got ${args.size}: '${call(name, args)}'")
+    build(args)
+  }
+
+  private def fixed(name: String, n: Int)(
+      build: Seq[Expression] => Expression): FunctionBuilder =
+    ranged(name, n, n)(build)
+
+  /** The value of a constant string argument of the call `text`;
+    * analysis fails on any other expression. */
+  private def constantString(e: Expression, what: String, text: String): String = {
+    require(e.foldable && e.dataType.isInstanceOf[StringType] && e.eval() != null,
+      s"$what must be a string literal (a computed one cannot be " +
+        s"translated at analysis time): '$text'")
+    e.eval().toString
+  }
+
+  private def toVarchar(args: Seq[Expression]): Expression = {
+    val (x, text) = (args.head, call("TO_VARCHAR", args))
+    val fmt = constantString(args(1), "TO_VARCHAR's format", text)
+    numericFormat(fmt).map(p => FormatNumber(x, Literal(p)))
+      .orElse(dateFormatPieces(fmt).map { pieces =>
+        val segs = pieces.map {
+          case (p, None) => new DateFormatClass(x, Literal(p))
+          case (p, Some("upper")) => Upper(new DateFormatClass(x, Literal(p)))
+          case (p, Some(_)) => Lower(new DateFormatClass(x, Literal(p)))
+        }
+        if (segs.size == 1) segs.head else Concat(segs)
+      })
+      .getOrElse(throw new IllegalArgumentException(
+        s"TO_VARCHAR format '$fmt' uses tokens outside the mapped set " +
+          "(dates: YYYY YY MM DD HH24 HH12 HH MI SS FF[1-9] AM PM " +
+          "MON DY with -/:. , separators; numbers: 9 0 , . $ with " +
+          "9s before 0s ahead of the point and 0s before 9s after " +
+          s"it) — write date_format/format_number directly: '$text'"))
+  }
+
+  private def strtok(args: Seq[Expression]): Expression = {
+    val text = call("STRTOK", args)
+    val delim = args.lift(1).fold(" ")(constantString(_, "STRTOK's delimiter", text))
+    val part = args.lift(2).getOrElse(Literal(1))
+    require(delim.nonEmpty, "STRTOK with an EMPTY delimiter is not " +
+      s"supported (whole-string token semantics): '$text'")
+    // a non-positive part is an ERROR in Snowflake, while Spark's
+    // try_element_at(-1) would silently serve the LAST token — reject
+    // literal values at analysis, guard computed ones at execution
+    part match {
+      case Literal(p: Number, _) => require(p.longValue >= 1,
+        s"STRTOK part must be >= 1 (Snowflake errors on $p): '$text'")
+      case _ =>
+    }
+    val guarded = CaseWhen(Seq(GreaterThanOrEqual(part, Literal(1)) -> part),
+      Cast(new RaiseError(Literal("STRTOK part must be >= 1")), IntegerType))
+    // Snowflake's delimiter is a character SET (any-of): one char
+    // coincides with plain splitting, two or more become a regex class
+    val pattern =
+      if (delim.length == 1) regexEscape(delim.head)
+      else s"[${delim.map(regexEscape).mkString}]"
+    // drop empty tokens (Snowflake collapses consecutive delimiters),
+    // NULL past the last token (try_element_at)
+    new TryElementAt(
+      ArrayRemove(StringSplit(args.head, Literal(pattern), Literal(-1)), Literal("")), guarded)
+  }
+
+  /** The delimiter character as a Java-regex atom: regex specials get a
+    * backslash. */
+  private def regexEscape(c: Char): String =
+    if ("\\.[]{}()*+-?^$|".contains(c)) s"\\$c" else c.toString
 
   /** Same-length copy of `sql` with the CONTENT of `'…'` string
     * literals (with `''` doubling), `"…"`/backtick identifiers and
@@ -199,26 +268,6 @@ object SqlDialect {
   private def pastDelim(s: String, i: Int, d: Char): Int =
     s.indexOf(d, i + 1) match { case -1 => s.length; case k => k + 1 }
 
-  /** Index of the `)` matching the `(` at `open`, skipping literals. */
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var j = open
-    while (j < s.length) {
-      s.charAt(j) match {
-        case '\'' => j = pastString(s, j) - 1
-        case '"' => j = pastDelim(s, j, '"') - 1
-        case '`' => j = pastDelim(s, j, '`') - 1
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return j
-        case _ =>
-      }
-      j += 1
-    }
-    sys.error(s"unbalanced parentheses after position $open in: '$s'")
-  }
-
   /** Split an argument list at top-level commas (quotes and nested
     * parens respected); an all-whitespace list is zero arguments. */
   private[graft] def splitTopLevel(argText: String): Seq[String] = {
@@ -244,122 +293,6 @@ object SqlDialect {
     parts.toList
   }
 
-  private def emit(name: String, args: Seq[String], call: String): String = {
-    def arity(want: Int): Unit = require(args.size == want,
-      s"${name.toUpperCase} takes $want argument(s), got ${args.size}: '$call'")
-    name.toLowerCase match {
-      case "iff" => arity(3); s"if(${args.mkString(", ")})"
-      case "square" => arity(1); s"power((${args.head}), 2)"
-      case "charindex" =>
-        require(args.size == 2 || args.size == 3,
-          s"CHARINDEX takes 2 or 3 arguments, got ${args.size}: '$call'")
-        s"locate(${args.mkString(", ")})"
-      case "to_varchar" =>
-        require(args.size == 1 || args.size == 2,
-          s"TO_VARCHAR takes 1 or 2 arguments, got ${args.size}: '$call'")
-        if (args.size == 1) s"CAST((${args.head}) AS STRING)"
-        else {
-          val fmt = stringLiteral(args(1)).getOrElse(sys.error(
-            "TO_VARCHAR's format must be a string literal " +
-              s"(a computed format cannot be translated at rewrite time): '$call'"))
-          numericFormat(fmt)
-            .map(p => s"format_number((${args.head}), '$p')")
-            .orElse(dateFormatPieces(fmt).map { pieces =>
-              val segs = pieces.map {
-                case (p, None) => s"date_format((${args.head}), '$p')"
-                case (p, Some(w)) => s"$w(date_format((${args.head}), '$p'))"
-              }
-              if (segs.size == 1) segs.head
-              else segs.mkString("concat(", ", ", ")")
-            })
-            .getOrElse(sys.error(
-              s"TO_VARCHAR format '$fmt' uses tokens outside the mapped set " +
-                "(dates: YYYY YY MM DD HH24 HH12 HH MI SS FF[1-9] AM PM " +
-                "MON DY with -/:. , separators; numbers: 9 0 , . $ with " +
-                "9s before 0s ahead of the point and 0s before 9s after " +
-                s"it) — write date_format/format_number directly: '$call'"))
-        }
-      case "editdistance" =>
-        require(args.size == 2 || args.size == 3,
-          s"EDITDISTANCE takes 2 or 3 arguments, got ${args.size}: '$call'")
-        if (args.size == 2) s"levenshtein(${args.mkString(", ")})"
-        else {
-          // Snowflake clamps to max; Spark's 3-arg levenshtein returns -1
-          // past the threshold — nullif(-1) + coalesce maps it back to
-          // max with ONE evaluation of the banded O(len·max) distance
-          // (the first cut's CASE evaluated it twice), and a distance of
-          // exactly max passes through both engines identically.
-          val (a, b, m) = (args(0), args(1), args(2))
-          s"coalesce(nullif(levenshtein(($a), ($b), ($m)), -1), ($m))"
-        }
-      case "div0" =>
-        arity(2)
-        s"(CASE WHEN (${args(1)}) = 0 THEN 0 ELSE (${args(0)}) / (${args(1)}) END)"
-      case "div0null" =>
-        arity(2)
-        s"(CASE WHEN (${args(1)}) = 0 OR (${args(1)}) IS NULL " +
-          s"THEN 0 ELSE (${args(0)}) / (${args(1)}) END)"
-      case "bitand" => arity(2); s"((${args(0)}) & (${args(1)}))"
-      case "bitor" => arity(2); s"((${args(0)}) | (${args(1)}))"
-      case "bitxor" => arity(2); s"((${args(0)}) ^ (${args(1)}))"
-      case "bitnot" => arity(1); s"(~(${args.head}))"
-      case "bitshiftleft" => arity(2); s"shiftleft(${args(0)}, ${args(1)})"
-      case "bitshiftright" => arity(2); s"shiftright(${args(0)}, ${args(1)})"
-      case "strtok" =>
-        require(args.size >= 1 && args.size <= 3,
-          s"STRTOK takes 1 to 3 arguments, got ${args.size}: '$call'")
-        val delim =
-          if (args.size < 2) " "
-          else stringLiteral(args(1)).getOrElse(sys.error(
-            "STRTOK's delimiter must be a string literal (its character-" +
-              s"SET semantics cannot be checked at rewrite time otherwise): '$call'"))
-        // Snowflake's delimiter is a character SET (any-of). One char
-        // coincides with plain splitting; two or more become a regex
-        // character class with every member escaped (round 16 — closes
-        // the last STRTOK loud-fail). The empty delimiter (whole string
-        // as the single token) stays a loud-fail: it is its own
-        // semantics, not a split.
-        require(delim.nonEmpty, "STRTOK with an EMPTY delimiter is not " +
-          s"supported (whole-string token semantics): '$call'")
-        val part = if (args.size == 3) args(2) else "1"
-        // a non-positive part is an ERROR in Snowflake, while Spark's
-        // try_element_at(-1) would silently serve the LAST token —
-        // reject literal values at rewrite time, guard computed ones
-        // at execution (round-15 review catch)
-        part.trim.toLongOption.foreach(p => require(p >= 1,
-          s"STRTOK part must be >= 1 (Snowflake errors on $p): '$call'"))
-        val guarded = s"(CASE WHEN ($part) >= 1 THEN ($part) ELSE " +
-          s"CAST(raise_error('STRTOK part must be >= 1') AS INT) END)"
-        // split on the (regex-escaped) delimiter — a [class] for sets —
-        // drop empty tokens (Snowflake collapses consecutive
-        // delimiters), NULL past the last token (try_element_at) —
-        // split_part would return '' for both cases, diverging from
-        // Snowflake.
-        val pattern =
-          if (delim.length == 1) regexEscape(delim.head)
-          else s"[${delim.map(regexEscape).mkString}]"
-        s"try_element_at(filter(split((${args.head}), " +
-          s"'$pattern', -1), __tk -> __tk != ''), $guarded)"
-    }
-  }
-
-  /** Decode `arg` as a single-quoted SQL string literal (with `''`
-    * doubling); None when it is any other expression. */
-  private[graft] def stringLiteral(arg: String): Option[String] = {
-    val t = arg.trim
-    if (t.length < 2 || t.charAt(0) != '\'' || pastString(t, 0) != t.length)
-      None
-    else Some(t.substring(1, t.length - 1).replace("''", "'"))
-  }
-
-  /** The delimiter character as a Java-regex atom INSIDE a Spark SQL
-    * single-quoted literal: regex specials get a backslash (doubled —
-    * the SQL string parser eats one level), `'` doubles per SQL. */
-  private[graft] def regexEscape(c: Char): String =
-    if ("\\.[]{}()*+-?^$|".contains(c)) s"\\\\$c"
-    else if (c == '\'') "''"
-    else c.toString
-
   /** Snowflake numeric format over `9 0 , . $` → a DecimalFormat
     * pattern for `format_number` (9 → #, rest verbatim; `$` must lead;
     * one decimal point; at least one digit position). None = not a
@@ -367,9 +300,8 @@ object SqlDialect {
     * rejects ('9' after '0' in the integer part, '0' after... the
     * mirror in the fraction): mapping '9.90' to '#.#0' would die at
     * execution with a raw 'Malformed pattern' carrying no pointer back
-    * to the TO_VARCHAR call, violating the loud-fail contract
-    * (round-15 review catch) — returning None routes it to the
-    * rewrite-time error instead. */
+    * to the TO_VARCHAR call — returning None routes it to the
+    * analysis-time error instead. */
   private[graft] def numericFormat(fmt: String): Option[String] = {
     if (fmt.isEmpty || !fmt.forall(c => "90,.$".contains(c))) return None
     if (!fmt.exists(c => c == '9' || c == '0')) return None
@@ -403,13 +335,6 @@ object SqlDialect {
     "FF3" -> "SSS", "FF2" -> "SS", "FF1" -> "S", "FF" -> "S" * 9,
     "AM" -> "a", "PM" -> "a")
 
-  /** Snowflake date/time format (numeric tokens case-insensitive,
-    * `-/:. ,` separators) → Spark `date_format` pattern, as long as no
-    * case-wrapped NAME token is present; None otherwise. Kept as the
-    * single-plain-piece view of [[dateFormatPieces]]. */
-  private[graft] def dateFormat(fmt: String): Option[String] =
-    dateFormatPieces(fmt).collect { case Seq((p, None)) => p }
-
   /** Snowflake date/time format → ordered segments of Spark pattern
     * text: `(pattern, None)` = plain `date_format` segment;
     * `(pattern, Some("upper"|"lower"))` = a MON/DY segment whose output
@@ -417,8 +342,7 @@ object SqlDialect {
     * `Mon`→Jan — capitalized folds into the plain segment because
     * Spark's MMM/EEE already emit capitalized — `mon`→jan).
     * Consecutive plain spans merge, so a format with no case-wrapped
-    * token always yields exactly one plain piece (the pre-round-16
-    * emission, byte-identical). None when any span is not a mapped
+    * token always yields exactly one plain piece. None when any span is not a mapped
     * token (TZ-family, full MMMM/DAY names, quoted sections → caller
     * fails loudly). */
   private[graft] def dateFormatPieces(

@@ -17,12 +17,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * front door, not a second implementation, and the scale story (one
   * key-shuffle merge; union+window as-of with no range explosion) is
   * exactly the API one's. Everything else passes through to
-  * `spark.sql` — after [[SqlDialect]] rewrites the handful of
-  * Snowflake scalar-isms Spark 4.1 lacks (IFF, SQUARE, CHARINDEX,
-  * TO_VARCHAR, EDITDISTANCE, DIV0/DIV0NULL, the BIT* family) at every
-  * leaf position of this grammar: pass-through statements, QUALIFY,
-  * ASOF projections/tails, and MERGE AND-gates (post-split, so a
-  * DIV0-generated CASE WHEN never meets the WHEN-splitter).
+  * `spark.sql`. The Snowflake scalar functions Spark 4.1 lacks (IFF,
+  * SQUARE, CHARINDEX, TO_VARCHAR, EDITDISTANCE, DIV0/DIV0NULL, the BIT*
+  * family, STRTOK) are [[SqlDialect]]'s session functions, registered
+  * on every call, so they resolve at every leaf of this grammar like
+  * any other function.
   *
   * MERGE supports the CDC verb set: full (`SET *`) and partial
   * (`SET col = s.col, …`) updates, `DELETE`, MULTIPLE `WHEN MATCHED
@@ -60,9 +59,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * original at the match offsets, so a string literal or comment
   * containing ` WHERE `, ` WHEN `, `QUALIFY`, an alias qualifier, or
   * a comment-opening sequence can never split a statement at the
-  * wrong token. A session UDF registered under a mapped dialect name (e.g.
-  * `iff`) takes precedence over the [[SqlDialect]] rewrite — the
-  * user's function runs, as it would under plain `spark.sql`.
+  * wrong token. A session UDF registered under a dialect function's
+  * name (e.g. `iff`) keeps running: [[SqlDialect.register]] leaves it
+  * in place.
   *
   * Restrictions are LOUD (`require`/analysis errors), never silent:
   * expression-RHS VALUES entries (only `s.col` references), a branch
@@ -150,11 +149,10 @@ object SqlText {
   // semantics: `SET a = b, b = a` swaps), because every assignment
   // lands in ONE projection over the source columns. WHERE follows
   // SQL's three-valued logic: rows where the predicate is NULL are
-  // NOT updated. RHS/pred go through [[SqlDialect]] and Spark's
-  // expression parser — anything unresolvable fails loudly at
-  // analysis. DELETE FROM <t> [WHERE <pred>]: removes rows where the
-  // predicate is TRUE (NULL keeps the row, ANSI); no WHERE empties
-  // the relation. Oracle-checked as `q_sql_update` / `q_sql_delete`.
+  // NOT updated. RHS/pred go through Spark's expression parser —
+  // anything unresolvable fails loudly at analysis. DELETE FROM <t>
+  // [WHERE <pred>]: removes rows where the predicate is TRUE (NULL
+  // keeps the row, ANSI); no WHERE empties the relation. Oracle-checked as `q_sql_update` / `q_sql_delete`.
   // SELECT * EXCLUDE (cols) FROM <t> [tail] — Snowflake/DuckDB's
   // projection-complement sugar (no Spark syntax): rewrites to the
   // explicit column list from the table's schema. Canonical single
@@ -294,19 +292,7 @@ object SqlText {
     * mutate without a v2 catalog) the result IS the merged relation,
     * which the caller writes wherever the target lives. */
   def sql(spark: SparkSession, text: String): DataFrame = {
-    // a session UDF sharing a mapped dialect name keeps the USER's
-    // function (round-14 ADVICE): the dialect shim skips names present
-    // in the temporary-function registry, so the call passes through
-    // and Spark's resolver binds the UDF exactly as plain spark.sql
-    // would. Builtins don't trip this — isTemporaryFunction is
-    // registration-only. Resolved per statement, not cached, so a
-    // registration made between calls is honored.
-    val isUserFn: String => Boolean = name =>
-      try spark.sessionState.catalog.isTemporaryFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(
-          name.toLowerCase(java.util.Locale.ROOT)))
-      catch { case scala.util.control.NonFatal(_) => false }
-    def dialect(s: String): String = SqlDialect.rewrite(s, isUserFn)
+    SqlDialect.register(spark)
     stmtOf(text) match {
     case MergeHeadM(target, tAliasOrNull, source, sAliasOrNull, cond,
         whenTail) =>
@@ -373,11 +359,9 @@ object SqlText {
       val batch = spark.table(source)
       // AND-gates reference the user's aliases; the engine operators
       // fix theirs as c (target) / b (source)
-      // dialect-rewrite AFTER clause splitting, so a DIV0-generated
-      // CASE WHEN can never confuse the WHEN-splitter above
       def predCol(p: String): org.apache.spark.sql.Column =
         org.apache.spark.sql.functions.expr(
-          mapAliases(dialect(p), Seq(tAlias -> "c", sAlias -> "b")))
+          mapAliases(p, Seq(tAlias -> "c", sAlias -> "b")))
       def parseAssigns(assigns: String): Seq[(String, String)] =
         assigns.split(",").toSeq.map {
           case AssignRe(lhsAliasOrNull, tc, rhsAlias, sc) =>
@@ -474,7 +458,7 @@ object SqlText {
         Seq(lAlias, rAlias))
       // the analyzed plan holds the view's resolved child directly, so
       // the scratch view can drop as soon as analysis is done
-      val out = spark.sql(dialect(rewritten))
+      val out = spark.sql(rewritten)
       spark.catalog.dropTempView(view)
       out
 
@@ -485,8 +469,8 @@ object SqlText {
         s"EXCLUDE names unknown column '$c' of '$target'"))
       val kept = t.columns.filterNot(excluded.contains)
       require(kept.nonEmpty, s"EXCLUDE removes every column of '$target'")
-      spark.sql(dialect(s"SELECT ${kept.mkString(", ")} " +
-        s"FROM $target${Option(tailOrNull).getOrElse("")}"))
+      spark.sql(s"SELECT ${kept.mkString(", ")} " +
+        s"FROM $target${Option(tailOrNull).getOrElse("")}")
 
     case UpdateM(target, assignsTxt, predOrNull) =>
       import org.apache.spark.sql.functions.{coalesce, expr, lit, when}
@@ -495,7 +479,7 @@ object SqlText {
         case UpdateAssignRe(c, rhs) =>
           require(t.columns.contains(c),
             s"UPDATE SET targets unknown column '$c' of '$target'")
-          c -> expr(dialect(rhs.trim))
+          c -> expr(rhs.trim)
         case other => sys.error(
           s"only 'col = <expr>' assignments are supported in UPDATE SET, " +
             s"got: '$other'")
@@ -503,7 +487,7 @@ object SqlText {
       require(assigns.map(_._1).distinct.size == assigns.size,
         s"duplicate UPDATE SET target in: '$assignsTxt'")
       val gate = Option(predOrNull)
-        .map(p => coalesce(expr(dialect(p)), lit(false)))
+        .map(p => coalesce(expr(p), lit(false)))
         .getOrElse(lit(true))
       val byName = assigns.toMap
       // ONE projection over the source columns: every RHS sees the
@@ -522,16 +506,15 @@ object SqlText {
         // DELETE removes rows where the predicate is TRUE; a NULL
         // predicate keeps the row (ANSI three-valued logic)
         case Some(p) => t.filter(
-          not(coalesce(expr(dialect(p)), lit(false))))
+          not(coalesce(expr(p), lit(false))))
         case None => t.limit(0)
       }
 
     case QualifyM(head, pred, orderOrNull) =>
-      spark.sql(dialect(
-        s"SELECT * FROM ($head) __graft_qualify WHERE $pred" +
-          Option(orderOrNull).getOrElse("")))
+      spark.sql(s"SELECT * FROM ($head) __graft_qualify WHERE $pred" +
+        Option(orderOrNull).getOrElse(""))
 
-    case other => spark.sql(dialect(other.original))
+    case other => spark.sql(other.original)
   }
   }
 }

@@ -45,7 +45,8 @@ object Partitioner {
 
   /** Exactly-one-of guard (dask_snowflake/core.py:164-167): `npartitions`
     * and `partitionSize` are mutually exclusive; neither → size mode with
-    * the 100 MiB default. Returns the effective (npartitions, sizeBytes). */
+    * the 100 MiB default; either must be positive. Returns the effective
+    * (npartitions, sizeBytes). */
   def resolveSpec(
       npartitions: Option[Int],
       partitionSize: Option[String]): (Option[Int], Option[Long]) =
@@ -57,7 +58,10 @@ object Partitioner {
         require(n > 0, s"npartitions must be positive, got $n")
         (Some(n), None)
       case (None, ps) =>
-        (None, Some(parseBytes(ps.getOrElse(DefaultPartitionSize))))
+        val size = ps.getOrElse(DefaultPartitionSize)
+        val bytes = parseBytes(size)
+        require(bytes > 0, s"partition_size must be positive, got '$size'")
+        (None, Some(bytes))
     }
 
   /** Greedy order-preserving first-fit pack (dask_snowflake/core.py:183-195):

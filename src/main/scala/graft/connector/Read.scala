@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
+import graft.SqlDialect
 import graft.warehouse.Tables
 
 /** The read side of the connector — the Spark-native re-expression of
@@ -23,6 +24,9 @@ import graft.warehouse.Tables
   *     (core.py:164-167, 259-260) — validated by [[Partitioner.resolveSpec]]
   *   - parameterized queries (`execute_params`, core.py:143) → Spark's
   *     named-parameter SQL API (injection-safe engine-side binding)
+  *   - the query text may call Snowflake's scalar functions that Spark
+  *     lacks (IFF, DIV0, TO_VARCHAR, …): [[graft.SqlDialect.register]]
+  *     makes them session functions before the query is planned
   *   - count mode → exact partition count; size mode → partition count
   *     derived from the plan's size estimate (the analogue of the
   *     reference's sampled row width, core.py:172-179)
@@ -55,6 +59,7 @@ object Read {
       partitionSize: Option[String] = None,
       emptyAsZeroColumns: Boolean = false): DataFrame = {
     Tables.register(spark, sfDir)
+    SqlDialect.register(spark)
     val (countMode, sizeMode) = Partitioner.resolveSpec(npartitions, partitionSize)
     val df =
       if (params.isEmpty) spark.sql(query)

@@ -95,7 +95,8 @@ object CosineSimilarity {
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` injects the
   * function library at session build time — the standard plugin path for
-  * a library shipping Catalyst extensions. */
+  * a library shipping Catalyst extensions — together with the Snowflake
+  * dialect functions of [[graft.SqlDialect]]. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -106,5 +107,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
       DotProduct.builder))
+    graft.SqlDialect.functions.foreach(ext.injectFunction)
   }
 }

@@ -439,8 +439,8 @@ private[sources] class BatchScanBuilder(
     * `ParquetUtils.createAggInternalRowFromFooter`, partition columns from
     * the file's path (constant per file). None = let Spark scan: a shape
     * other than global COUNT(*)/MIN/MAX of a top-level column, footer
-    * min/max that are not exact ([[footerExact]]), or a
-    * row group without them. */
+    * min/max that are not exact ([[footerExact]], [[zeroFloatBound]]),
+    * or a row group without them. */
   private def translateAgg(agg: Aggregation): Option[(StructType, Seq[InternalRow])] = {
     if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty) return None
     def column(e: org.apache.spark.sql.connector.expressions.Expression) = e match {
@@ -472,7 +472,8 @@ private[sources] class BatchScanBuilder(
       // Spark's footer code indexes chunks and schema fields by the data
       // schema's positions: hand it exactly the aggregated columns
       val fields = gs.head.schema.getFields.asScala.filter(f => dataCols(f.getName))
-      if (fields.size != dataCols.size || !fields.forall(footerExact)) return None
+      if (fields.size != dataCols.size || !fields.forall(footerExact) ||
+          gs.exists(g => zeroFloatBound(g.chunks))) return None
       val footer = new ParquetMetadata(new FileMetaData(
           new MessageType("agg", fields.asJava), util.Map.of(), null),
         gs.map(_.chunks).asJava)
@@ -504,6 +505,19 @@ private[sources] class BatchScanBuilder(
       case i: IntLogicalTypeAnnotation => i.isSigned
       case _ => true
     })
+
+  /** A FLOAT/DOUBLE chunk whose min or max is zero: parquet-mr widens a
+    * zero min to -0.0 and a zero max to +0.0 when it reads statistics
+    * (safe for pruning), so the footer no longer says which zero the
+    * data holds and `min`/`max` would answer -0.0 where the data says
+    * 0.0. Such aggregates scan. */
+  private def zeroFloatBound(chunks: BlockMetaData): Boolean =
+    chunks.getColumns.asScala.exists { c =>
+      val st = c.getStatistics
+      Set(FLOAT, DOUBLE)(c.getPrimitiveType.getPrimitiveTypeName) &&
+        st != null && st.hasNonNullValue &&
+        Seq(st.genericGetMin, st.genericGetMax).exists(_.asInstanceOf[Number].doubleValue == 0.0)
+    }
 
   /** LIMIT pushdown — footer row counts make a filterless LIMIT a
     * metadata question: the scan keeps only a PREFIX of row-group

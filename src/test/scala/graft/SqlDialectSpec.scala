@@ -1,185 +1,191 @@
 package graft
 
-/** The Snowflake scalar-dialect shim ([[SqlDialect]]): mapped calls
-  * rewrite exactly, divergent forms fail LOUDLY, and everything else —
-  * strings, comments, quoted identifiers, natively-supported
-  * functions — passes through byte-for-byte. The oracle-checked twins
-  * are `q_sql_dialect_scalar` / `_bitwise` / `_passthrough` /
-  * `_listagg`; this spec covers the rewriter's edges. */
+/** The Snowflake dialect functions ([[SqlDialect]]) as session
+  * functions: each call returns what its Spark spelling returns through
+  * plain `spark.sql`, divergent forms fail LOUDLY at analysis, and
+  * strings, comments and natively-supported functions are left alone.
+  * The oracle-checked twins are `q_sql_dialect_scalar` / `_bitwise` /
+  * `_passthrough` / `_listagg` / `_to_varchar` / `_editdistance` /
+  * `_strtok`. */
 class SqlDialectSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Plain `spark.sql` on a session holding the dialect functions. */
+  private def sql(text: String) = {
+    SqlDialect.register(spark)
+    spark.sql(text)
+  }
+
+  /** `dialect` and `ansi` select lists return the same types and rows. */
+  private def same(dialect: String, ansi: String): Unit = {
+    val (d, a) = (sql(s"SELECT $dialect"), sql(s"SELECT $ansi"))
+    assert(d.schema.map(_.dataType) == a.schema.map(_.dataType), s"$dialect vs $ansi")
+    assert(d.collect().toSeq.map(_.toSeq) == a.collect().toSeq.map(_.toSeq),
+      s"$dialect vs $ansi")
+  }
+
+  /** Every message along an exception's cause chain. */
+  private def msgs(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+
+  private def failsWith(text: String, message: String): Unit = {
+    val e = intercept[Exception](sql(s"SELECT $text").collect())
+    assert(msgs(e).exists(_.contains(message)), s"$text: ${msgs(e)}")
+  }
+
   test("simple renames and wraps") {
-    assert(SqlDialect.rewrite("SELECT IFF(a > 1, 'x', 'y')") ==
-      "SELECT if(a > 1, 'x', 'y')")
-    assert(SqlDialect.rewrite("SELECT SQUARE(x)") ==
-      "SELECT power((x), 2)")
-    assert(SqlDialect.rewrite("SELECT charindex('b', s)") ==
-      "SELECT locate('b', s)")
-    assert(SqlDialect.rewrite("SELECT TO_VARCHAR(n)") ==
-      "SELECT CAST((n) AS STRING)")
-    assert(SqlDialect.rewrite("SELECT EditDistance(a, b)") ==
-      "SELECT levenshtein(a, b)")
-    assert(SqlDialect.rewrite("SELECT BITAND(a, 255)") ==
-      "SELECT ((a) & (255))")
-    assert(SqlDialect.rewrite("SELECT BITNOT(a)") == "SELECT (~(a))")
-    assert(SqlDialect.rewrite("SELECT BITSHIFTLEFT(a, 3)") ==
-      "SELECT shiftleft(a, 3)")
+    same("IFF(2 > 1, 'x', 'y'), IFF(NULL, 'x', 'y')",
+      "if(2 > 1, 'x', 'y'), if(NULL, 'x', 'y')")
+    same("SQUARE(3), SQUARE(CAST(1.5 AS DOUBLE))", "power(3, 2), power(1.5D, 2)")
+    same("charindex('b', 'abcb'), CHARINDEX('b', 'abcb', 3), CHARINDEX('z', 'abc')",
+      "locate('b', 'abcb'), locate('b', 'abcb', 3), locate('z', 'abc')")
+    same("TO_VARCHAR(42), TO_VARCHAR(DATE'1996-01-02')",
+      "CAST(42 AS STRING), CAST(DATE'1996-01-02' AS STRING)")
+    same("EditDistance('kitten', 'sitting')", "levenshtein('kitten', 'sitting')")
+    same("BITAND(1023L, 255), BITOR(5, 8), BITXOR(6, 3), BITNOT(5)",
+      "1023L & 255, 5 | 8, 6 ^ 3, ~5")
+    same("BITSHIFTLEFT(5, 3), BITSHIFTRIGHT(-64, 2)", "shiftleft(5, 3), shiftright(-64, 2)")
   }
 
   test("DIV0 becomes the zero-guarded CASE, DIV0NULL adds the NULL arm") {
-    assert(SqlDialect.rewrite("DIV0(a, b)") ==
-      "(CASE WHEN (b) = 0 THEN 0 ELSE (a) / (b) END)")
-    assert(SqlDialect.rewrite("DIV0NULL(a, b)") ==
-      "(CASE WHEN (b) = 0 OR (b) IS NULL THEN 0 ELSE (a) / (b) END)")
+    Seq((10.0, Some(4.0)), (10.0, Some(0.0)), (10.0, None))
+      .toDF("a", "b").createOrReplaceTempView("sd_div")
+    def col(q: String) = sql(s"SELECT $q FROM sd_div").collect().map(r =>
+      if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
+    assert(col("DIV0(a, b)") == col("CASE WHEN b = 0 THEN 0 ELSE a / b END"))
+    assert(col("DIV0(a, b)") == Seq(Some(2.5), Some(0.0), None))
+    assert(col("DIV0NULL(a, b)") ==
+      col("CASE WHEN b = 0 OR b IS NULL THEN 0 ELSE a / b END"))
+    assert(col("DIV0NULL(a, b)") == Seq(Some(2.5), Some(0.0), Some(0.0)))
+    spark.catalog.dropTempView("sd_div")
   }
 
   test("nested calls rewrite inside-out") {
-    assert(SqlDialect.rewrite("IFF(DIV0(a, b) > 0, SQUARE(x), y)") ==
-      "if((CASE WHEN (b) = 0 THEN 0 ELSE (a) / (b) END) > 0, " +
-        "power((x), 2), y)")
+    same("IFF(DIV0(6, 3) > 0, SQUARE(4), 0)",
+      "if(CASE WHEN 3 = 0 THEN 0 ELSE 6 / 3 END > 0, power(4, 2), 0)")
+    same("BITSHIFTLEFT(BITAND(13, 3), 2)", "shiftleft(13 & 3, 2)")
   }
 
   test("commas inside nested parens and strings don't split arguments") {
-    assert(SqlDialect.rewrite("IFF(f(a, b) = 1, 'x,y', concat(c, d))") ==
-      "if(f(a, b) = 1, 'x,y', concat(c, d))")
+    same("IFF(length(concat('a', 'b')) = 2, 'x,y', concat('c', 'd'))", "'x,y'")
   }
 
   test("string literals, comments, and quoted identifiers pass through") {
-    assert(SqlDialect.rewrite("SELECT 'IFF(a,b,c)' AS t") ==
-      "SELECT 'IFF(a,b,c)' AS t")
-    assert(SqlDialect.rewrite("SELECT 'it''s IFF(x,y,z)'") ==
-      "SELECT 'it''s IFF(x,y,z)'")
-    assert(SqlDialect.rewrite("SELECT x -- IFF(a,b,c)\nFROM t") ==
-      "SELECT x -- IFF(a,b,c)\nFROM t")
-    assert(SqlDialect.rewrite("SELECT /* IFF(a,b,c) */ x") ==
-      "SELECT /* IFF(a,b,c) */ x")
-    assert(SqlDialect.rewrite("SELECT \"IFF\"(a, b, c)") ==
-      "SELECT \"IFF\"(a, b, c)")
+    same("'IFF(a,b,c)' AS t, 'it''s IFF(x,y,z)' AS u",
+      "'IFF(a,b,c)' AS t, 'it''s IFF(x,y,z)' AS u")
+    same("1 -- IFF(a,b,c)\n", "1")
+    same("/* IFF(a,b,c) */ 1", "1")
+    // a backticked name resolves to the same function
+    same("`IFF`(true, 1, 2)", "1")
   }
 
   test("a bare identifier or qualified reference named like a mapping is untouched") {
-    assert(SqlDialect.rewrite("SELECT iff FROM t") == "SELECT iff FROM t")
-    assert(SqlDialect.rewrite("SELECT s.iff(a, b, c)") ==
-      "SELECT s.iff(a, b, c)")
-    // suffix/prefix words that merely contain a mapped name
-    assert(SqlDialect.rewrite("SELECT diff(a, b), squarex(y)") ==
-      "SELECT diff(a, b), squarex(y)")
+    Seq((1, 2)).toDF("iff", "square").createOrReplaceTempView("sd_cols")
+    assert(sql("SELECT iff, square FROM sd_cols").collect().map(r =>
+      (r.getInt(0), r.getInt(1))).toSeq == Seq((1, 2)))
+    // a qualified name is a catalog function, not the session one
+    intercept[Exception](sql("SELECT sd_cols.iff(true, 1, 2) FROM sd_cols").collect())
+    spark.catalog.dropTempView("sd_cols")
   }
 
   test("divergent forms fail loudly with the offending call") {
     // residual exotics only — the frequent 2-arg TO_VARCHAR / 3-arg
-    // EDITDISTANCE / STRTOK forms (incl. MON/DY and character sets,
-    // round 16) map exactly
-    val e1 = intercept[RuntimeException](
-      SqlDialect.rewrite("TO_VARCHAR(d, 'MONTH DD, YYYY')")) // full name
-    assert(e1.getMessage.contains("tokens outside the mapped set"))
-    val e2 = intercept[RuntimeException](
-      SqlDialect.rewrite("TO_VARCHAR(d, fmt_col)")) // computed format
-    assert(e2.getMessage.contains("string literal"))
-    val e3 = intercept[IllegalArgumentException](
-      SqlDialect.rewrite("STRTOK(s, '', 2)")) // whole-string-as-token form
-    assert(e3.getMessage.contains("EMPTY delimiter"))
-    val e4 = intercept[IllegalArgumentException](
-      SqlDialect.rewrite("IFF(a, b)"))
-    assert(e4.getMessage.contains("3 argument"))
+    // EDITDISTANCE / STRTOK forms (incl. MON/DY and character sets)
+    // map exactly
+    failsWith("TO_VARCHAR(DATE'1996-01-02', 'MONTH DD, YYYY')", // full name
+      "tokens outside the mapped set")
+    Seq(("2024-01-01", "YYYY")).toDF("d", "fmt").createOrReplaceTempView("sd_fmt")
+    val e = intercept[Exception](sql("SELECT TO_VARCHAR(d, fmt) FROM sd_fmt")) // computed
+    assert(msgs(e).exists(_.contains("string literal")), msgs(e))
+    spark.catalog.dropTempView("sd_fmt")
+    failsWith("STRTOK('a', '', 2)", "EMPTY delimiter") // whole-string-as-token form
+    failsWith("IFF(true, 1)", "3 argument")
+    failsWith("CHARINDEX('a')", "CHARINDEX takes 2 to 3 arguments")
   }
 
   test("2-arg TO_VARCHAR maps literal date and numeric formats") {
-    assert(SqlDialect.rewrite("TO_VARCHAR(d, 'YYYY-MM-DD')") ==
-      "date_format((d), 'yyyy-MM-dd')")
-    assert(SqlDialect.rewrite("TO_VARCHAR(d, 'DD/MM/YYYY HH24:MI:SS')") ==
-      "date_format((d), 'dd/MM/yyyy HH:mm:ss')")
+    val d = "TIMESTAMP'1996-01-02 15:04:05.678'"
+    same(s"TO_VARCHAR($d, 'YYYY-MM-DD')", s"date_format($d, 'yyyy-MM-dd')")
+    same(s"TO_VARCHAR($d, 'DD/MM/YYYY HH24:MI:SS')",
+      s"date_format($d, 'dd/MM/yyyy HH:mm:ss')")
     // case-insensitive tokens, 12-hour + meridiem, fractional seconds
-    assert(SqlDialect.rewrite("TO_VARCHAR(d, 'hh12:mi am')") ==
-      "date_format((d), 'hh:mm a')")
-    assert(SqlDialect.rewrite("TO_VARCHAR(d, 'SS.FF3')") ==
-      "date_format((d), 'ss.SSS')")
-    assert(SqlDialect.rewrite("TO_VARCHAR(x, '9,999,990.00')") ==
-      "format_number((x), '#,###,##0.00')")
-    assert(SqlDialect.rewrite("TO_VARCHAR(x, '0000')") ==
-      "format_number((x), '0000')")
-    assert(SqlDialect.rewrite("TO_VARCHAR(x, '$9,990.00')") ==
-      "format_number((x), '$#,##0.00')")
-    // MON/DY (round 16): output case follows the keyword's case —
-    // capitalized folds into the plain pattern (no concat), upper/lower
-    // emit their own wrapped segment
-    assert(SqlDialect.rewrite("TO_VARCHAR(d, 'Mon DD, YYYY')") ==
-      "date_format((d), 'MMM dd, yyyy')")
-    assert(SqlDialect.rewrite("TO_VARCHAR(d, 'MON DD')") ==
-      "concat(upper(date_format((d), 'MMM')), date_format((d), ' dd'))")
-    assert(SqlDialect.rewrite("TO_VARCHAR(d, 'dy')") ==
-      "lower(date_format((d), 'EEE'))")
-    // behavioral: the wrapped segments really produce Snowflake's case
-    val mon = spark.sql("SELECT " +
-      SqlDialect.rewrite("TO_VARCHAR(DATE'1996-01-02', 'MON DD, YYYY')") +
-      " AS u, " +
-      SqlDialect.rewrite("TO_VARCHAR(DATE'1996-01-02', 'Mon')") + " AS c, " +
-      SqlDialect.rewrite("TO_VARCHAR(DATE'1996-01-02', 'dy')") + " AS l")
-      .collect().head
+    same(s"TO_VARCHAR($d, 'hh12:mi am')", s"date_format($d, 'hh:mm a')")
+    same(s"TO_VARCHAR($d, 'SS.FF3')", s"date_format($d, 'ss.SSS')")
+    same("TO_VARCHAR(1234567.5D, '9,999,990.00')",
+      "format_number(1234567.5D, '#,###,##0.00')")
+    same("TO_VARCHAR(42, '0000')", "format_number(42, '0000')")
+    same("TO_VARCHAR(1234.5D, '$9,990.00')", "format_number(1234.5D, '$#,##0.00')")
+    // MON/DY: output case follows the keyword's case — capitalized
+    // folds into the plain pattern, upper/lower wrap their own segment
+    same(s"TO_VARCHAR($d, 'Mon DD, YYYY')", s"date_format($d, 'MMM dd, yyyy')")
+    same(s"TO_VARCHAR($d, 'MON DD')",
+      s"concat(upper(date_format($d, 'MMM')), date_format($d, ' dd'))")
+    same(s"TO_VARCHAR($d, 'dy')", s"lower(date_format($d, 'EEE'))")
+    val mon = sql("SELECT TO_VARCHAR(DATE'1996-01-02', 'MON DD, YYYY') AS u, " +
+      "TO_VARCHAR(DATE'1996-01-02', 'Mon') AS c, " +
+      "TO_VARCHAR(DATE'1996-01-02', 'dy') AS l").collect().head
     assert(mon.getString(0) == "JAN 02, 1996")
     assert(mon.getString(1) == "Jan")
     assert(mon.getString(2) == "tue")
     // '$' only leads; two decimal points are not a numeric format
-    intercept[RuntimeException](SqlDialect.rewrite("TO_VARCHAR(x, '9$9')"))
-    intercept[RuntimeException](SqlDialect.rewrite("TO_VARCHAR(x, '9.9.9')"))
-    // 9/0 orderings DecimalFormat rejects must fail AT REWRITE TIME,
-    // not as a raw Malformed-pattern error mid-execution: integer part
+    failsWith("TO_VARCHAR(1, '9$9')", "tokens outside the mapped set")
+    failsWith("TO_VARCHAR(1, '9.9.9')", "tokens outside the mapped set")
+    // 9/0 orderings DecimalFormat rejects must fail at analysis, not
+    // as a raw Malformed-pattern error mid-execution: integer part
     // needs 9s before 0s, fraction the mirror
-    intercept[RuntimeException](SqlDialect.rewrite("TO_VARCHAR(x, '099')"))
-    intercept[RuntimeException](SqlDialect.rewrite("TO_VARCHAR(x, '9.90')"))
+    failsWith("TO_VARCHAR(1, '099')", "tokens outside the mapped set")
+    failsWith("TO_VARCHAR(1, '9.90')", "tokens outside the mapped set")
   }
 
   test("3-arg EDITDISTANCE clamps to max via nullif, ONE evaluation") {
-    assert(SqlDialect.rewrite("EDITDISTANCE(a, b, 3)") ==
-      "coalesce(nullif(levenshtein((a), (b), (3)), -1), (3))")
-    // behavioral: clamp at max, exact at/below max (Spark end-to-end)
-    val r = spark.sql("SELECT " +
-      SqlDialect.rewrite("EDITDISTANCE('kitten', 'sitting', 2)") + " AS c, " +
-      SqlDialect.rewrite("EDITDISTANCE('kitten', 'sitting', 3)") + " AS e, " +
-      SqlDialect.rewrite("EDITDISTANCE('kitten', 'sitting', 9)") + " AS f")
-      .collect().head
+    same("EDITDISTANCE('kitten', 'sitting', 2), EDITDISTANCE('kitten', 'sitting', 3), " +
+      "EDITDISTANCE('kitten', 'sitting', 9)",
+      "coalesce(nullif(levenshtein('kitten', 'sitting', 2), -1), 2), " +
+      "coalesce(nullif(levenshtein('kitten', 'sitting', 3), -1), 3), " +
+      "coalesce(nullif(levenshtein('kitten', 'sitting', 9), -1), 9)")
+    // clamp at max, exact at/below max
+    val r = sql("SELECT EDITDISTANCE('kitten', 'sitting', 2) AS c, " +
+      "EDITDISTANCE('kitten', 'sitting', 3) AS e, " +
+      "EDITDISTANCE('kitten', 'sitting', 9) AS f").collect().head
     assert((r.getInt(0), r.getInt(1), r.getInt(2)) == ((2, 3, 3)))
+    // one levenshtein per call in the analyzed plan
+    Seq(("kitten", "sitting")).toDF("a", "b").createOrReplaceTempView("sd_ed")
+    val plan = sql("SELECT EDITDISTANCE(a, b, 3) FROM sd_ed").queryExecution.analyzed
+    assert(plan.expressions.flatMap(_.collect {
+      case l: org.apache.spark.sql.catalyst.expressions.Levenshtein => l
+    }).size == 1, plan)
+    spark.catalog.dropTempView("sd_ed")
   }
 
   test("single-char STRTOK collapses empties and NULLs past the end") {
-    val got = spark.sql("SELECT " +
-      SqlDialect.rewrite("STRTOK('a  b   c', ' ', 3)") + " AS c3, " +
-      SqlDialect.rewrite("STRTOK('a  b', ' ', 9)") + " AS miss, " +
-      SqlDialect.rewrite("STRTOK('x.y.z', '.', 2)") + " AS dot, " +
-      SqlDialect.rewrite("STRTOK('one two')") + " AS dflt")
-      .collect().head
+    val got = sql("SELECT STRTOK('a  b   c', ' ', 3) AS c3, " +
+      "STRTOK('a  b', ' ', 9) AS miss, STRTOK('x.y.z', '.', 2) AS dot, " +
+      "STRTOK('one two') AS dflt").collect().head
     assert(got.getString(0) == "c")
     assert(got.isNullAt(1), "past-the-end must be NULL, not ''")
     assert(got.getString(2) == "y", "regex-special delimiter must escape")
     assert(got.getString(3) == "one")
-    // character-SET form (round 16): any-of splitting, empty-token
-    // collapse across MIXED consecutive delimiters, regex metas in the
-    // class escaped, NULL past the end — Snowflake's documented
-    // STRTOK('a.b,c', '.,', k) behavior
-    val set = spark.sql("SELECT " +
-      SqlDialect.rewrite("STRTOK('a.b,c', '.,', 2)") + " AS s2, " +
-      SqlDialect.rewrite("STRTOK('x-.y', '.-', 2)") + " AS mixed, " +
-      SqlDialect.rewrite("STRTOK('p1]q2[r3', '[]', 3)") + " AS bracket, " +
-      SqlDialect.rewrite("STRTOK('a.b,c', '.,', 4)") + " AS miss")
+    // character-SET form: any-of splitting, empty-token collapse across
+    // MIXED consecutive delimiters, regex metas in the class escaped,
+    // NULL past the end — Snowflake's documented STRTOK('a.b,c', '.,', k)
+    val set = sql("SELECT STRTOK('a.b,c', '.,', 2) AS s2, " +
+      "STRTOK('x-.y', '.-', 2) AS mixed, STRTOK('p1]q2[r3', '[]', 3) AS bracket, " +
+      "STRTOK('a.b,c', '.,', 4) AS miss, STRTOK('it''s', '''', 2) AS quote")
       .collect().head
     assert(set.getString(0) == "b")
     assert(set.getString(1) == "y",
       "mixed consecutive set delimiters must collapse to no token")
-    assert(set.getString(2) == "r3",
-      "regex metas inside the class must escape")
+    assert(set.getString(2) == "r3", "regex metas inside the class must escape")
     assert(set.isNullAt(3), "set form past-the-end must be NULL")
+    assert(set.getString(4) == "s", "a quote delimiter splits like any other")
     // Snowflake ERRORS on part <= 0; try_element_at(-1) would silently
-    // serve the LAST token — literal parts reject at rewrite time,
-    // computed parts raise at execution
-    val e = intercept[IllegalArgumentException](
-      SqlDialect.rewrite("STRTOK('a-b', '-', 0)"))
-    assert(e.getMessage.contains("part must be >= 1"))
-    val e2 = intercept[Exception](spark.sql("SELECT " +
-      SqlDialect.rewrite("STRTOK('a-b', '-', 1 - 2)")).collect())
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
-    assert(msgs(e2).exists(m => m != null && m.contains("part must be >= 1")))
+    // serve the LAST token — literal parts fail at analysis, computed
+    // parts raise at execution
+    failsWith("STRTOK('a-b', '-', 0)", "part must be >= 1")
+    Seq(-1).toDF("p").createOrReplaceTempView("sd_part")
+    val e2 = intercept[Exception](sql("SELECT STRTOK('a-b', '-', p) FROM sd_part").collect())
+    assert(msgs(e2).exists(_.contains("part must be >= 1")), msgs(e2))
+    spark.catalog.dropTempView("sd_part")
   }
 
   test("rewritten SQL actually runs through the front door") {

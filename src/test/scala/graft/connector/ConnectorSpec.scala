@@ -97,6 +97,32 @@ class ConnectorSpec extends SparkSpec {
     assert(none.count() == 0)
   }
 
+  test("Graft.read resolves Snowflake dialect functions, as do temp views and expr()") {
+    val where = "FROM orders WHERE o_orderkey < 600"
+    val dialect = graft.Graft.read(spark, sfDir,
+      s"""SELECT o_orderkey, IFF(o_totalprice > 100000, 'big', 'small') AS tag,
+         |  DIV0(o_totalprice, o_orderkey % 3) AS per, BITAND(o_orderkey, 255) AS low,
+         |  TO_VARCHAR(o_orderdate, 'YYYY-MM-DD') AS day $where""".stripMargin)
+    val ansi = graft.Graft.read(spark, sfDir,
+      s"""SELECT o_orderkey,
+         |  CASE WHEN o_totalprice > 100000 THEN 'big' ELSE 'small' END AS tag,
+         |  CASE WHEN o_orderkey % 3 = 0 THEN 0 ELSE o_totalprice / (o_orderkey % 3) END AS per,
+         |  o_orderkey & 255 AS low, date_format(o_orderdate, 'yyyy-MM-dd') AS day
+         |$where""".stripMargin)
+    assert(dialect.count() > 0)
+    assertSameRows(dialect, ansi)
+    // the read left them in the session: plain spark.sql and expr() resolve them
+    spark.sql(s"CREATE OR REPLACE TEMP VIEW cs_dialect AS SELECT o_orderkey, " +
+      s"IFF(o_orderkey % 2 = 0, 'even', 'odd') AS parity $where")
+    assertSameRows(spark.table("cs_dialect"), spark.sql("SELECT o_orderkey, " +
+      s"CASE WHEN o_orderkey % 2 = 0 THEN 'even' ELSE 'odd' END AS parity $where"))
+    spark.catalog.dropTempView("cs_dialect")
+    val orders = spark.table("orders").filter("o_orderkey < 600")
+    assertSameRows(
+      orders.select(col("o_orderkey"), expr("DIV0(o_totalprice, o_orderkey % 3)").as("per")),
+      ansi.select("o_orderkey", "per"))
+  }
+
   test("deferred write: DDL eager, rows only on compute (core.py:116-124)") {
     val df = Tables.table(spark, sfDir, "region")
     val name = s"t_deferred_${System.nanoTime()}"

@@ -58,6 +58,11 @@ class PartitionerSpec extends AnyFunSuite {
       ((None, Some(100L * 1024 * 1024))))
     assert(Partitioner.resolveSpec(Some(4), None) === ((Some(4), None)))
     intercept[IllegalArgumentException] { Partitioner.resolveSpec(Some(0), None) }
+    // a size that parses to zero bytes would divide by zero in size mode
+    val e = intercept[IllegalArgumentException] {
+      Partitioner.resolveSpec(None, Some("0 KiB"))
+    }
+    assert(e.getMessage.contains("0 KiB"), e.getMessage)
   }
 
   test("parseBytes handles dask-style size strings") {

@@ -1376,6 +1376,33 @@ class BatchSourceSpec extends SparkSpec {
     assert(back.filter(col("b8") === 42).count() == src.filter(col("b8") === 42).count())
   }
 
+  test("a zero FLOAT/DOUBLE footer bound scans, so MIN/MAX keep the data's signed zero") {
+    import spark.implicits._
+    def stage(xs: Seq[Double]): String = {
+      val dir = Files.createTempDirectory("graft_signed_zero").toString
+      xs.toDF("d").selectExpr("d", "CAST(d AS FLOAT) AS f")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      dir
+    }
+    def bits(df: org.apache.spark.sql.DataFrame): Seq[Long] = {
+      val r = df.agg(min("d"), max("d"), min("f"), max("f")).head
+      Seq(java.lang.Double.doubleToRawLongBits(r.getDouble(0)),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+        java.lang.Float.floatToRawIntBits(r.getFloat(2)).toLong,
+        java.lang.Float.floatToRawIntBits(r.getFloat(3)).toLong)
+    }
+    // parquet-mr reads a zero min back as -0.0 and a zero max as +0.0
+    for (xs <- Seq(Seq(0.0, 1.0), Seq(-1.0, -0.0))) {
+      val dir = stage(xs)
+      assert(bits(spark.read.format("graft").load(dir)) == bits(spark.read.parquet(dir)), xs)
+    }
+    // non-zero bounds still come from the footers
+    val dir = stage(Seq(-2.5, 0.5, 1.0))
+    val agg = spark.read.format("graft").load(dir).agg(min("d"), max("d"), min("f"), max("f"))
+    assert(agg.collect().toSeq.map(_.toSeq) == Seq(Seq(-2.5, 1.0, -2.5f, 1.0f)))
+    assert(agg.queryExecution.executedPlan.toString.contains("METADATA-ONLY"))
+  }
+
   test("MIN/MAX over a BINARY column are computed from the data, not the footers") {
     val dir = Files.createTempDirectory("graft_bin_minmax").toString
     val src = spark.range(0, 40).selectExpr("id", "CAST(concat('b', id) AS BINARY) AS bin")
