@@ -42,7 +42,15 @@ object Graft {
     * exercised at test_core.py:106-123): a source-type → target-type
     * mapping, e.g. `{ case DoubleType => Some(FloatType); case _ => None }`
     * narrows every float64 column on arrival. `None` (the default mapping)
-    * leaves the schema untouched and adds no projection to the plan. */
+    * leaves the schema untouched and adds no projection to the plan.
+    *
+    * Known limits of the read path:
+    *   - size mode sizes a join from Catalyst's estimate, which multiplies
+    *     the sizes of its inputs: lineitem ⋈ orders at sf0.1 asks for
+    *     69,015 partitions for a ~600,000-row result;
+    *   - an `ORDER BY` result resized to more than one partition is not
+    *     returned in order (`coalesce` groups non-adjacent partitions and
+    *     `repartition` shuffles). */
   def read(
       spark: SparkSession,
       sfDir: String,

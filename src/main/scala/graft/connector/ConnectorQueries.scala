@@ -448,8 +448,9 @@ object ConnectorQueries {
     // Arrow IPC interchange round-trip — the reference's wire format
     // (ArrowResultBatch, core.py:127-130) as an oracle-checked surface:
     // every partition serializes to ONE executor-local Arrow IPC stream
-    // (opaque binary rows — shippable to a stage, a queue, another
-    // engine), then decodes back partition-parallel; the oracle is the
+    // with Spark's own ArrowWriter (opaque binary rows — shippable to a
+    // stage, a queue, another engine), then decodes back
+    // partition-parallel with Spark's ArrowConverters; the oracle is the
     // original table, so the key proves byte-faithful round-tripping of
     // the full relational row set with zero driver materialization.
     QueryDef("q_arrow_roundtrip",

@@ -5,12 +5,13 @@ package graft.connector
   * (dask_snowflake/core.py:149-197): greedy, order-preserving first-fit
   * packing of result batches into right-sized partitions.
   *
-  * In Spark the same job is normally done by `spark.sql.files.maxPartitionBytes`
-  * (scan-side bin packing) and AQE advisory sizes (post-shuffle); this class
-  * exists to (a) reproduce the reference's exact semantics — exactly-one-of
-  * validation (core.py:164-167), 100 MiB default (core.py:259-260), row
-  * targets from a sampled row width (core.py:172-179) — and (b) drive the
-  * `coalesce`/`repartition` decision in [[Read]].
+  * It does two things: [[resolveSpec]] resolves a read's partition spec
+  * with the reference's semantics (exactly-one-of validation,
+  * core.py:164-167; 100 MiB default, core.py:259-260), and [[pack]] is the
+  * first-fit packer (with its count-mode row target, [[rowsPerPartition]])
+  * that groups row groups into scan partitions for `BatchSource` and
+  * `BatchStream`. The sizing of a [[Read]] result is
+  * `Read.partitionsForBytes` plus `Read.resize`, not this object.
   */
 object Partitioner {
 
@@ -21,7 +22,7 @@ object Partitioner {
     * Decimal (kB/MB/GB = 1000ⁿ) and binary (KiB/MiB/GiB = 1024ⁿ) units,
     * matching dask.utils.parse_bytes semantics used by the reference. */
   def parseBytes(s: String): Long = {
-    val t = s.trim.toLowerCase
+    val t = s.trim.toLowerCase(java.util.Locale.ROOT)
     val m = raw"([0-9]*\.?[0-9]+)\s*([a-z]*)".r
     t match {
       case m(num, unit) =>

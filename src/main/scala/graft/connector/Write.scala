@@ -1,5 +1,7 @@
 package graft.connector
 
+import java.util.Locale
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -27,7 +29,7 @@ object Write {
   def toTable(df: DataFrame, name: String, overwrite: Boolean = false): Unit =
     df.write
       .mode(if (overwrite) SaveMode.Overwrite else SaveMode.Append)
-      .saveAsTable(name.toUpperCase)
+      .saveAsTable(name.toUpperCase(Locale.ROOT))
 
   /** Distributed write to a parquet directory (the stage-file analogue of
     * `write_pandas`'s parquet upload, core.py:32-40). */
@@ -64,7 +66,7 @@ object Write {
     * session catalog; no rows are written. */
   def createTableIfNotExists(
       spark: SparkSession, name: String, schema: StructType): Unit = {
-    val upper = name.toUpperCase
+    val upper = name.toUpperCase(Locale.ROOT)
     if (!spark.catalog.tableExists(upper)) {
       spark.catalog.createTable(upper, "parquet", schema, Map.empty[String, String])
       ()

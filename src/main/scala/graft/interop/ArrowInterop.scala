@@ -3,16 +3,12 @@ package graft.interop
 import java.io.ByteArrayOutputStream
 import java.nio.channels.Channels
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
-import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit => ATimeUnit}
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ASchema}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
-import org.apache.spark.sql.types._
+import org.apache.arrow.vector.VectorSchemaRoot
+import org.apache.arrow.vector.ipc.ArrowStreamWriter
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.arrow.{ArrowWriter, GraftArrow}
+import org.apache.spark.sql.types.StructType
 
 /** Arrow IPC interchange — the reference's wire format made first-class
   * (SURVEY §1.1: `ArrowResultBatch` carries Arrow IPC from the warehouse
@@ -24,10 +20,11 @@ import org.apache.spark.sql.types._
   * [[fromArrowBatches]] is the worker-side `_fetch_batches` analogue:
   * decode IPC bytes back into rows, partition-parallel.
   *
-  * Scope: the relational schemas the reference round-trips (its Arrow
-  * surface carried int/float/string/timestamp — SURVEY §1.1 types) plus
-  * the connector's nested surface: list columns, struct columns (the
-  * multimodal metadata shape) and map columns (canonical entries layout).
+  * Scope: every type Spark's `ArrowWriter` supports, encoded and decoded
+  * by Spark's own Arrow code (`ArrowUtils.toArrowSchema`, `ArrowWriter`,
+  * `ArrowConverters`): timestamps carry the "UTC" zone, TIMESTAMP_NTZ
+  * none; list children are named `element`, maps use the canonical
+  * `entries`/`key`/`value` layout.
   */
 object ArrowInterop {
 
@@ -36,309 +33,42 @@ object ArrowInterop {
     val schema = df.schema
     val spark = df.sparkSession
     import spark.implicits._
-    df.mapPartitions { rows =>
+    spark.createDataset(df.queryExecution.toRdd.mapPartitions { rows =>
+      val arrowSchema = GraftArrow.arrowSchema(schema)
       val allocator = new RootAllocator(Long.MaxValue)
+      val root = VectorSchemaRoot.create(arrowSchema, allocator)
       try {
-        val root = VectorSchemaRoot.create(toArrowSchema(schema), allocator)
         val out = new ByteArrayOutputStream()
         val writer = new ArrowStreamWriter(root, null, Channels.newChannel(out))
+        val arrow = ArrowWriter.create(root)
         writer.start()
         var n = 0L
-        val it = rows.grouped(4096)
-        while (it.hasNext) {
-          val chunk = it.next()
-          root.allocateNew()
-          chunk.zipWithIndex.foreach { case (row, i) => setRow(root, schema, row, i) }
-          root.setRowCount(chunk.length)
+        while (rows.hasNext) {
+          var k = 0
+          while (k < 4096 && rows.hasNext) { arrow.write(rows.next()); k += 1 }
+          arrow.finish()
           writer.writeBatch()
-          n += chunk.length
+          arrow.reset()
+          n += k
         }
         writer.end()
-        root.close()
         Iterator.single((n, out.toByteArray))
-      } finally allocator.close()
-    }
+      } finally {
+        root.close()
+        allocator.close()
+      }
+    })
   }
 
   /** Decode IPC batches back to rows — runs on whichever executor holds
     * each batch row; output partitioning follows the batch dataset.
-    * Decoding STREAMS: rows are yielded per loaded Arrow batch (getRow
-    * copies values out of the reused root), so memory holds one batch at a
-    * time instead of the whole stream twice. Reader/allocator close when
-    * the stream is drained — or at task completion if the consumer stops
-    * early (limit). */
+    * Decoding STREAMS: rows are yielded per loaded Arrow batch, so memory
+    * holds one batch at a time; reader and allocator close when the
+    * stream is drained, or at task completion if the consumer stops early
+    * (limit). */
   def fromArrowBatches(
-      batches: Dataset[(Long, Array[Byte])], schema: StructType): DataFrame = {
-    val enc = RowEncoder.encoderFor(schema)
-    // the RowEncoder's external date/timestamp classes follow the session's
-    // java8API setting (LocalDate/Instant vs java.sql.*) — capture it on
-    // the driver so executor-side getRow emits the flavor the encoder expects
-    val java8 = batches.sparkSession.conf
-      .get("spark.sql.datetime.java8API.enabled", "false").toBoolean
-    batches.mapPartitions { it =>
-      it.flatMap { case (_, bytes) =>
-        new Iterator[Row] {
-          private val allocator = new RootAllocator(Long.MaxValue)
-          private val reader = new ArrowStreamReader(
-            new java.io.ByteArrayInputStream(bytes), allocator)
-          private var root: VectorSchemaRoot = _
-          private var idx = 0
-          private var rowCount = 0
-          private var closed = false
-          Option(org.apache.spark.TaskContext.get())
-            .foreach(_.addTaskCompletionListener[Unit](_ => closeAll()))
-
-          private def closeAll(): Unit = if (!closed) {
-            closed = true
-            reader.close()
-            allocator.close()
-          }
-          private def advance(): Boolean = {
-            if (closed) return false
-            while (idx >= rowCount) {
-              if (!reader.loadNextBatch()) { closeAll(); return false }
-              root = reader.getVectorSchemaRoot
-              rowCount = root.getRowCount
-              idx = 0
-            }
-            true
-          }
-          override def hasNext: Boolean = advance()
-          override def next(): Row = {
-            if (!advance()) throw new NoSuchElementException("drained IPC stream")
-            val r = getRow(root, schema, idx, java8)
-            idx += 1
-            r
-          }
-        }
-      }
-    }(enc)
-  }
-
-  /** Spark → Arrow schema for the interchange subset. */
-  def toArrowSchema(schema: StructType): ASchema = new ASchema(
-    schema.fields.map(f => toArrowField(f.name, f.dataType, f.nullable))
-      .toList.asJava)
-
-  private def toArrowField(name: String, dt: DataType, nullable: Boolean): Field =
-    dt match {
-      // ArrayType → Arrow List with a typed child ("item" per convention):
-      // embeddings' ArrayType(Float) rides the IPC stream first-class
-      case ArrayType(elem, containsNull) =>
-        new Field(name, new FieldType(nullable, ArrowType.List.INSTANCE, null),
-          List(toArrowField("item", elem, containsNull)).asJava)
-      // StructType → Arrow Struct with recursive children: the multimodal
-      // metadata shape travels the wire like it travels the connector
-      case st: StructType =>
-        new Field(name, new FieldType(nullable, ArrowType.Struct.INSTANCE, null),
-          st.fields.map(f => toArrowField(f.name, f.dataType, f.nullable))
-            .toList.asJava)
-      // MapType → canonical Arrow Map layout: list of non-null "entries"
-      // structs with a required key and an optionally-null value
-      case MapType(kt, vt, valueContainsNull) =>
-        val entries = new Field("entries",
-          new FieldType(false, ArrowType.Struct.INSTANCE, null),
-          List(toArrowField(complex.MapVector.KEY_NAME, kt, nullable = false),
-            toArrowField(complex.MapVector.VALUE_NAME, vt, valueContainsNull)).asJava)
-        new Field(name, new FieldType(nullable, new ArrowType.Map(false), null),
-          List(entries).asJava)
-      case _ =>
-        val t: ArrowType = dt match {
-          case BooleanType => ArrowType.Bool.INSTANCE
-          case IntegerType => new ArrowType.Int(32, true)
-          case LongType => new ArrowType.Int(64, true)
-          case FloatType => new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE)
-          case DoubleType => new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE)
-          case StringType => ArrowType.Utf8.INSTANCE
-          case TimestampType => new ArrowType.Timestamp(ATimeUnit.MICROSECOND, "UTC")
-          case TimestampNTZType => new ArrowType.Timestamp(ATimeUnit.MICROSECOND, null)
-          // the reference's wire format carries Snowflake NUMBER as Arrow
-          // decimal (core.py:127-130; its tests are dtype-lax precisely
-          // because NUMBER comes back, tests/test_core.py:63-65) and DATE
-          // as date32 — both first-class on our wire too
-          case dt: DecimalType => new ArrowType.Decimal(dt.precision, dt.scale, 128)
-          case DateType => new ArrowType.Date(org.apache.arrow.vector.types.DateUnit.DAY)
-          case other => throw new IllegalArgumentException(
-            s"unsupported type $other for Arrow interchange ('$name')")
-        }
-        new Field(name, new FieldType(nullable, t, null), Nil.asJava)
-    }
-
-  /** Write one non-null PRIMITIVE external value into `v(i)` — shared by
-    * top-level columns, struct children and map key/value children. */
-  private def setPrim(v: FieldVector, dt: DataType, x: Any, i: Int): Unit = dt match {
-    case BooleanType => v.asInstanceOf[BitVector].setSafe(i, if (x.asInstanceOf[Boolean]) 1 else 0)
-    case IntegerType => v.asInstanceOf[IntVector].setSafe(i, x.asInstanceOf[Int])
-    case LongType => v.asInstanceOf[BigIntVector].setSafe(i, x.asInstanceOf[Long])
-    case FloatType => v.asInstanceOf[Float4Vector].setSafe(i, x.asInstanceOf[Float])
-    case DoubleType => v.asInstanceOf[Float8Vector].setSafe(i, x.asInstanceOf[Double])
-    case StringType => v.asInstanceOf[VarCharVector].setSafe(i,
-      x.asInstanceOf[String].getBytes("UTF-8"))
-    case TimestampType =>
-      // accept both external flavors (java8API on → Instant)
-      val micros = x match {
-        case t: java.sql.Timestamp =>
-          // µs = whole seconds + the full sub-second from nanos
-          // (getTime's millis and getNanos overlap — don't double-count)
-          Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
-        case inst: java.time.Instant =>
-          Math.addExact(Math.multiplyExact(inst.getEpochSecond, 1000000L),
-            inst.getNano / 1000L)
-        case other => throw new IllegalArgumentException(s"not a timestamp: $other")
-      }
-      v.asInstanceOf[TimeStampMicroTZVector].setSafe(i, micros)
-    case TimestampNTZType => v.asInstanceOf[TimeStampMicroVector].setSafe(i,
-      java.time.temporal.ChronoUnit.MICROS.between(
-        java.time.Instant.EPOCH,
-        x.asInstanceOf[java.time.LocalDateTime].toInstant(java.time.ZoneOffset.UTC)))
-    case d: DecimalType =>
-      // DecimalVector requires the vector's exact scale
-      v.asInstanceOf[DecimalVector].setSafe(i,
-        x.asInstanceOf[java.math.BigDecimal].setScale(d.scale))
-    case DateType =>
-      import org.apache.spark.sql.catalyst.util.DateTimeUtils
-      val days = x match {
-        case d: java.sql.Date => DateTimeUtils.fromJavaDate(d)
-        case ld: java.time.LocalDate => DateTimeUtils.localDateToDays(ld)
-        case other => throw new IllegalArgumentException(s"not a date: $other")
-      }
-      v.asInstanceOf[DateDayVector].setSafe(i, days)
-    case other => throw new IllegalArgumentException(
-      s"unsupported nested type $other for Arrow interchange")
-  }
-
-  private def setRow(root: VectorSchemaRoot, schema: StructType, row: Row, i: Int): Unit = {
-    var c = 0
-    while (c < schema.length) {
-      val v = root.getVector(c)
-      if (row.isNullAt(c)) v.asInstanceOf[FieldVector].setNull(i)
-      else schema.fields(c).dataType match {
-        case st: StructType =>
-          val sv = v.asInstanceOf[complex.StructVector]
-          val sub = row.getStruct(c)
-          while (sv.getValueCapacity <= i) sv.reAlloc()
-          sv.setIndexDefined(i)
-          var k = 0
-          while (k < st.length) {
-            val child = sv.getChildByOrdinal(k).asInstanceOf[FieldVector]
-            if (sub.isNullAt(k)) child.setNull(i)
-            else setPrim(child, st.fields(k).dataType, sub.get(k), i)
-            k += 1
-          }
-        case MapType(kt, vt, _) =>
-          // canonical layout: offsets over an "entries" struct of
-          // (key, value); entry slots index the CHILD vector, rows the map
-          val mv = v.asInstanceOf[complex.MapVector]
-          val entries = mv.getDataVector.asInstanceOf[complex.StructVector]
-          val keys = entries.getChildByOrdinal(0).asInstanceOf[FieldVector]
-          val vals = entries.getChildByOrdinal(1).asInstanceOf[FieldVector]
-          val start = mv.startNewValue(i)
-          var j = 0
-          row.getMap[Any, Any](c).foreach { case (mk, mvv) =>
-            val p = start + j
-            while (entries.getValueCapacity <= p) entries.reAlloc()
-            entries.setIndexDefined(p)
-            setPrim(keys, kt, mk, p)
-            if (mvv == null) vals.setNull(p) else setPrim(vals, vt, mvv, p)
-            j += 1
-          }
-          mv.endValue(i, j)
-        case ArrayType(elem, _) =>
-          val w = v.asInstanceOf[complex.ListVector].getWriter
-          w.setPosition(i)
-          w.startList()
-          row.getSeq[Any](c).foreach {
-            case null => w.writeNull()
-            case x => elem match {
-              case FloatType => w.float4().writeFloat4(x.asInstanceOf[Float])
-              case DoubleType => w.float8().writeFloat8(x.asInstanceOf[Double])
-              case IntegerType => w.integer().writeInt(x.asInstanceOf[Int])
-              case LongType => w.bigInt().writeBigInt(x.asInstanceOf[Long])
-              case other => throw new IllegalArgumentException(
-                s"unsupported array element $other")
-            }
-          }
-          w.endList()
-        case dt => setPrim(v.asInstanceOf[FieldVector], dt, row.get(c), i)
-      }
-      c += 1
-    }
-  }
-
-  /** Read one non-null PRIMITIVE value from `v(i)` in the external flavor
-    * the RowEncoder expects — shared by top-level columns, struct children
-    * and map key/value children. */
-  private def getPrim(v: FieldVector, dt: DataType, i: Int, java8: Boolean): Any =
-    dt match {
-      case BooleanType => v.asInstanceOf[BitVector].get(i) == 1
-      case IntegerType => v.asInstanceOf[IntVector].get(i)
-      case LongType => v.asInstanceOf[BigIntVector].get(i)
-      case FloatType => v.asInstanceOf[Float4Vector].get(i)
-      case DoubleType => v.asInstanceOf[Float8Vector].get(i)
-      case StringType => new String(v.asInstanceOf[VarCharVector].get(i), "UTF-8")
-      case TimestampType =>
-        // floor semantics so pre-epoch values keep sub-second precision
-        val micros = v.asInstanceOf[TimeStampMicroTZVector].get(i)
-        if (java8)
-          java.time.Instant.ofEpochSecond(Math.floorDiv(micros, 1000000L),
-            Math.floorMod(micros, 1000000L) * 1000L)
-        else {
-          val t = new java.sql.Timestamp(Math.floorDiv(micros, 1000L))
-          t.setNanos((Math.floorMod(micros, 1000000L) * 1000).toInt)
-          t
-        }
-      case TimestampNTZType =>
-        val micros = v.asInstanceOf[TimeStampMicroVector].get(i)
-        java.time.LocalDateTime.ofEpochSecond(
-          Math.floorDiv(micros, 1000000L),
-          (Math.floorMod(micros, 1000000L) * 1000).toInt,
-          java.time.ZoneOffset.UTC)
-      case _: DecimalType =>
-        v.asInstanceOf[DecimalVector].getObject(i)
-      case DateType =>
-        val days = v.asInstanceOf[DateDayVector].get(i)
-        if (java8) java.time.LocalDate.ofEpochDay(days.toLong)
-        else org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaDate(days)
-      case other => throw new IllegalArgumentException(
-        s"unsupported nested type $other for Arrow interchange")
-    }
-
-  private def getRow(
-      root: VectorSchemaRoot, schema: StructType, i: Int, java8: Boolean): Row = {
-    val vals = new Array[Any](schema.length)
-    var c = 0
-    while (c < schema.length) {
-      val v = root.getVector(c)
-      vals(c) =
-        if (v.isNull(i)) null
-        else schema.fields(c).dataType match {
-          case st: StructType =>
-            val sv = v.asInstanceOf[complex.StructVector]
-            val sub = new Array[Any](st.length)
-            var k = 0
-            while (k < st.length) {
-              val child = sv.getChildByOrdinal(k).asInstanceOf[FieldVector]
-              sub(k) = if (child.isNull(i)) null
-                else getPrim(child, st.fields(k).dataType, i, java8)
-              k += 1
-            }
-            new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(sub, st)
-          case MapType(kt, vt, _) =>
-            val mv = v.asInstanceOf[complex.MapVector]
-            val entries = mv.getDataVector.asInstanceOf[complex.StructVector]
-            val keys = entries.getChildByOrdinal(0).asInstanceOf[FieldVector]
-            val mvals = entries.getChildByOrdinal(1).asInstanceOf[FieldVector]
-            (mv.getElementStartIndex(i) until mv.getElementEndIndex(i)).map { j =>
-              getPrim(keys, kt, j, java8) ->
-                (if (mvals.isNull(j)) null else getPrim(mvals, vt, j, java8))
-            }.toMap
-          case ArrayType(_, _) =>
-            // getObject yields the boxed element list (child-typed values)
-            v.asInstanceOf[complex.ListVector].getObject(i).asScala.toSeq
-          case dt => getPrim(v.asInstanceOf[FieldVector], dt, i, java8)
-        }
-      c += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(vals, schema)
-  }
+      batches: Dataset[(Long, Array[Byte])], schema: StructType): DataFrame =
+    GraftArrow.dataFrame(batches.sparkSession,
+      batches.rdd.flatMap { case (_, bytes) => GraftArrow.rows(bytes) },
+      schema)
 }

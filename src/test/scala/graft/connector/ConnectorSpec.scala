@@ -141,6 +141,20 @@ class ConnectorSpec extends SparkSpec {
     assert(spark.catalog.tableExists(name.toUpperCase))
   }
 
+  test("table names uppercase the same under a Turkish default locale") {
+    // Turkish uppercases "i" to a dotted "İ": "line_items" became "LİNE_İTEMS"
+    val df = Tables.table(spark, sfDir, "region")
+    val suffix = System.nanoTime()
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+      Write.createTableIfNotExists(spark, s"line_items_ddl_$suffix", df.schema)
+      Write.toTable(df, s"line_items_$suffix")
+    } finally java.util.Locale.setDefault(saved)
+    assert(spark.catalog.tableExists(s"LINE_ITEMS_DDL_$suffix"))
+    assert(spark.table(s"LINE_ITEMS_$suffix").count() == df.count())
+  }
+
   test("compactSmallFiles: file count follows total/target, content survives, no shuffle") {
     import spark.implicits._
     val in = java.nio.file.Files.createTempDirectory("graft_cmp_in").toString

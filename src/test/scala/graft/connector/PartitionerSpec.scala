@@ -73,4 +73,14 @@ class PartitionerSpec extends AnyFunSuite {
     assert(Partitioner.parseBytes("1024") == 1024L)
     intercept[IllegalArgumentException] { Partitioner.parseBytes("10 parsecs") }
   }
+
+  test("parseBytes does not depend on the default locale") {
+    // Turkish lowercases "I" to a dotless "ı", so "MIB" became "mıb"
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+      assert(Partitioner.parseBytes("100 MIB") == 100L * 1024 * 1024)
+      assert(Partitioner.parseBytes("2 KIB") == 2048L)
+    } finally java.util.Locale.setDefault(saved)
+  }
 }

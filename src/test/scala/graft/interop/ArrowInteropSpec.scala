@@ -133,4 +133,73 @@ class ArrowInteropSpec extends SparkSpec {
     reader.close(); alloc.close()
     assert(rows == 5)
   }
+
+  test("shapes past the old hand mapping: BINARY, SMALLINT, TINYINT, nested containers, NTZ, pre-epoch µs") {
+    // every level carries nulls: null columns, null elements, null structs,
+    // null struct fields, null map values, null arrays inside maps
+    val src = Tables.table(spark, sfDir, "customer").limit(300).selectExpr(
+      "c_custkey",
+      "IF(c_custkey % 7 = 0, NULL, CAST(c_name AS BINARY)) AS bin",
+      "IF(c_custkey % 5 = 0, NULL, CAST(c_custkey * 7 - 500 AS SMALLINT)) AS small",
+      "IF(c_custkey % 3 = 0, NULL, CAST(c_custkey % 256 - 128 AS TINYINT)) AS tiny",
+      """CASE WHEN c_custkey % 11 = 0 THEN NULL
+        |  ELSE array(c_name, IF(c_custkey % 2 = 0, NULL, c_mktsegment)) END AS strs""".stripMargin,
+      """CASE WHEN c_custkey % 13 = 0 THEN NULL ELSE array(
+        |  named_struct('k', c_nationkey, 's', IF(c_custkey % 3 = 0, NULL, c_mktsegment)),
+        |  IF(c_custkey % 4 = 0, NULL, named_struct('k', -1, 's', 'x'))) END AS structs""".stripMargin,
+      """CASE WHEN c_custkey % 17 = 0 THEN NULL ELSE named_struct(
+        |  'name', c_name,
+        |  'bals', IF(c_custkey % 2 = 0, NULL,
+        |    array(CAST(c_acctbal AS DOUBLE), CAST(NULL AS DOUBLE)))) END AS holder""".stripMargin,
+      """CASE WHEN c_custkey % 19 = 0 THEN NULL ELSE map(
+        |  c_mktsegment, IF(c_custkey % 3 = 0, NULL,
+        |    array(CAST(c_acctbal AS DOUBLE), IF(c_custkey % 2 = 0, NULL, 1.5D))),
+        |  'empty', array()) END AS m""".stripMargin,
+      """IF(c_custkey % 23 = 0, NULL,
+        |  CAST(timestamp_micros(c_custkey * 86400000123) AS TIMESTAMP_NTZ)) AS ntz""".stripMargin,
+      """IF(c_custkey % 29 = 0, NULL,
+        |  timestamp_micros(-(c_custkey * 1000003 + 123457))) AS pre_epoch""".stripMargin)
+      .repartition(2)
+    assert(src.schema("ntz").dataType.typeName === "timestamp_ntz")
+    val back = ArrowInterop.fromArrowBatches(
+      ArrowInterop.toArrowBatches(src), src.schema)
+    // compare BINARY by content: Array[Byte] rows compare by reference
+    val asHex = (df: org.apache.spark.sql.DataFrame) =>
+      df.withColumn("bin", org.apache.spark.sql.functions.hex(df("bin")))
+    assertSameRows(asHex(src), asHex(back))
+  }
+
+  test("the wire schema: UTC-zoned timestamps, element-named list children, entries/key/value maps") {
+    val src = Tables.table(spark, sfDir, "region").selectExpr(
+      "r_regionkey",
+      "array(r_name) AS names",
+      "map(r_name, r_regionkey) AS m",
+      "TIMESTAMP'2001-02-03 04:05:06' AS ts",
+      "TIMESTAMP_NTZ'2001-02-03 04:05:06' AS ntz")
+    val bytes = ArrowInterop.toArrowBatches(src.coalesce(1)).collect().head._2
+    val alloc = new org.apache.arrow.memory.RootAllocator(Long.MaxValue)
+    val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+      new java.io.ByteArrayInputStream(bytes), alloc)
+    try {
+      val schema = reader.getVectorSchemaRoot.getSchema
+      assert(schema.findField("names").getChildren.get(0).getName === "element")
+      val entries = schema.findField("m").getChildren.get(0)
+      assert(entries.getName === "entries")
+      assert(entries.getChildren.get(0).getName === "key")
+      assert(entries.getChildren.get(1).getName === "value")
+      assert(schema.findField("ts").getType.toString === "Timestamp(MICROSECOND, UTC)")
+      assert(schema.findField("ntz").getType.toString === "Timestamp(MICROSECOND, null)")
+    } finally { reader.close(); alloc.close() }
+  }
+
+  test("an error while encoding surfaces as itself, not as an allocator leak") {
+    // the failing row comes after a full 4,096-row batch, so the root
+    // holds buffers when the error is thrown
+    val src = spark.range(0, 6000, 1, 1)
+      .selectExpr("IF(id = 5000, raise_error('boom at 5000'), id) AS id")
+    val e = intercept[Exception] {
+      ArrowInterop.toArrowBatches(src).collect()
+    }
+    assert(e.getMessage.contains("boom at 5000"), e.getMessage)
+  }
 }
