@@ -467,7 +467,7 @@ object ConnectorQueries {
     QueryDef("q_rename_upper",
       (s, d) => {
         val df = Tables.table(s, d, "region")
-        df.toDF(df.columns.map(_.toUpperCase).toIndexedSeq: _*)
+        df.toDF(df.columns.map(_.toUpperCase(java.util.Locale.ROOT)).toIndexedSeq: _*)
           .orderBy("R_REGIONKEY")
       },
       Some("""SELECT r_regionkey AS R_REGIONKEY, r_name AS R_NAME

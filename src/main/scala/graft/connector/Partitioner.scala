@@ -96,9 +96,4 @@ object Partitioner {
   /** Row target for count mode (core.py:169-171): total // npartitions. */
   def rowsPerPartition(totalRows: Long, npartitions: Int): Long =
     math.max(1L, totalRows / npartitions)
-
-  /** Row target for size mode (core.py:172-179): partitionBytes divided by
-    * the approximate bytes-per-row sampled from a representative batch. */
-  def rowsForSize(partitionBytes: Long, approxRowBytes: Double): Long =
-    math.max(1L, (partitionBytes / math.max(approxRowBytes, 1e-9)).toLong)
 }

@@ -5,25 +5,33 @@ import java.util.Comparator
 
 import scala.collection.concurrent.TrieMap
 
-/** Memoized staging directories for query keys that write-then-read a
-  * result set (the DSv2 connector keys).
+/** Memoized staging directories: the DSv2 connector keys' write-then-read
+  * fixtures and the warehouse's micro-partitioned copies
+  * (`graft.warehouse.WarehouseIndex`).
   *
   * Without this, every `queries()` invocation created a fresh temp dir and
   * re-ran the full stage write — bench timed a write+read per key, and
   * repeated runs accumulated orphan directories. [[getOrStage]] runs the
   * stage write ONCE per (key, input) and returns the same directory
   * afterwards; [[clearAll]] deletes everything (the Verify/Bench mains call
-  * it on exit, next to `CacheRegistry.releaseAll()`).
+  * it on exit, next to `CacheRegistry.releaseAll()`), and a shutdown hook
+  * deletes whatever is left when the JVM exits.
   */
 object StageCache {
 
   private val dirs = TrieMap.empty[(String, String), String]
-  private val lock = new Object
+  private val locks = TrieMap.empty[(String, String), Object]
+
+  // no lock: a write still running at exit must not hold the hook up
+  sys.addShutdownHook(dirs.values.foreach(d => deleteTree(java.nio.file.Paths.get(d))))
 
   /** The staged directory for `(key, input)`, running `write` into a fresh
-    * temp dir on first use. Serialized: concurrent callers never double-stage. */
+    * temp dir on first use. Serialized per `(key, input)`: concurrent
+    * callers never double-stage, and a write may wait on another key's
+    * stage running in a different thread (a broadcast's, when its scan
+    * stages a warehouse copy) without deadlocking. */
   def getOrStage(key: String, input: String)(write: String => Unit): String =
-    lock.synchronized {
+    locks.getOrElseUpdate((key, input), new Object).synchronized {
       dirs.getOrElseUpdate((key, input), {
         val out = Files.createTempDirectory(s"graft_stage_$key")
         // a failed stage write must not orphan the temp dir: the mapping is
@@ -41,9 +49,10 @@ object StageCache {
   }
 
   /** Delete every staged directory and forget the mappings. */
-  def clearAll(): Unit = lock.synchronized {
-    dirs.values.foreach(d => deleteTree(java.nio.file.Paths.get(d)))
-    dirs.clear()
+  def clearAll(): Unit = dirs.keys.foreach { k =>
+    locks.getOrElseUpdate(k, new Object).synchronized {
+      dirs.remove(k).foreach(d => deleteTree(java.nio.file.Paths.get(d)))
+    }
   }
 
   /** Number of live staged directories (test surface). */

@@ -18,8 +18,8 @@ class GraftSpec extends SparkSpec {
     val statsBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
     val totalRows = df.count()
     val rowBytes = statsBytes.toDouble / totalRows
-    val targetRows = graft.connector.Partitioner.rowsForSize(
-      graft.connector.Partitioner.parseBytes(target), rowBytes)
+    val targetRows = math.max(1L,
+      (graft.connector.Partitioner.parseBytes(target) / rowBytes).toLong)
     val counts = df.rdd.mapPartitions(it => Iterator.single(it.length)).collect()
     assert(counts.length > 1, "a small size target must yield multiple partitions")
     assert(counts.forall(_ <= 2 * targetRows),

@@ -155,6 +155,19 @@ class ConnectorSpec extends SparkSpec {
     assert(spark.table(s"LINE_ITEMS_$suffix").count() == df.count())
   }
 
+  test("q_rename_upper uppercases column names the same under a Turkish default locale") {
+    // Turkish uppercases "r_regionkey" to "R_REGİONKEY", a column name the
+    // oracle's R_REGIONKEY does not match
+    val saved = java.util.Locale.getDefault
+    val rows = try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+      val df = graft.SparkEntry.queries("q_rename_upper")(spark, sfDir)
+      assert(df.columns.toSeq == Seq("R_REGIONKEY", "R_NAME"))
+      df.collect()
+    } finally java.util.Locale.setDefault(saved)
+    assert(rows.length == 5)
+  }
+
   test("compactSmallFiles: file count follows total/target, content survives, no shuffle") {
     import spark.implicits._
     val in = java.nio.file.Files.createTempDirectory("graft_cmp_in").toString
@@ -192,6 +205,11 @@ class ConnectorSpec extends SparkSpec {
     val fresh = spark.newSession()
     Tables.register(fresh, sfDir)
     assert(StageCache.size == 0, "register must not stage DSv2 fixtures")
+    // nor copy a warehouse table: sf0.1 lineitem and orders are copied on
+    // their first scan, not here
+    Tables.register(spark.newSession(),
+      new java.io.File(new java.io.File(sfDir).getParent, "sf0.1").toString)
+    assert(StageCache.size == 0, "register must not copy warehouse tables")
     // DATE/DECIMAL stage (written after the pin), nested stage, catalog tables
     val keys = Seq("q_dsv2_decimal", "q_layout_compact", "q_bucket_join")
     val lazily = keys.map(k => k -> rowsOf(fresh, k)).toMap

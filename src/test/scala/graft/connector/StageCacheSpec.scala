@@ -62,4 +62,38 @@ class StageCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     val again = StageCache.getOrStage("broken", input)(_ => ())
     assert(again != tmp && Files.isDirectory(Paths.get(again)))
   }
+
+  test("a writer may wait on another key staged in a different thread") {
+    // a stage whose write joins a warehouse table that a broadcast thread
+    // scans, and so copies, while the write waits for it
+    val input = s"threads_${System.nanoTime()}"
+    var inner = ""
+    val outer = withPool(1) { pool =>
+      StageCache.getOrStage("outer", input) { _ =>
+        inner = pool.submit(new Callable[String] {
+          def call(): String = StageCache.getOrStage("inner", input)(_ => ())
+        }).get(30, TimeUnit.SECONDS)
+      }
+    }
+    assert(Files.isDirectory(Paths.get(outer)) && Files.isDirectory(Paths.get(inner)))
+  }
+
+  test("staged directories are removed when the JVM exits") {
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val p = new ProcessBuilder(java, "-cp", System.getProperty("java.class.path"),
+      "graft.connector.StageAndExit").redirectErrorStream(true).start()
+    val out = new String(p.getInputStream.readAllBytes()).trim
+    assert(p.waitFor(60, TimeUnit.SECONDS) && p.exitValue == 0, out)
+    val dir = out.linesIterator.toSeq.last
+    assert(dir.contains("graft_stage_exit"), out)
+    assert(!Files.exists(Paths.get(dir)), s"$dir survived the JVM")
+  }
+}
+
+/** Stages one directory, prints it and exits: the shutdown hook deletes it. */
+object StageAndExit {
+  def main(args: Array[String]): Unit =
+    println(StageCache.getOrStage("exit", "x") { dir =>
+      Files.writeString(Paths.get(dir, "part"), "x")
+    })
 }
