@@ -279,7 +279,7 @@ private[sources] object BatchSink {
     * says: INT64 µs timestamps (not legacy INT96), snappy, Spark's standard
     * (non-legacy) list, map and decimal layout, and CORRECTED rebase
     * (values stored as given, no calendar shift — the mode
-    * [[BatchPartitionReader]] decodes with). */
+    * [[BatchSource.readerFactory]] decodes with). */
   def writeConf(): SQLConf = {
     val c = new SQLConf
     Seq(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE -> "TIMESTAMP_MICROS",

@@ -7,9 +7,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.hadoop.mapred.FileSplit
-import org.apache.hadoop.mapreduce.TaskAttemptID
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
@@ -18,6 +15,8 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{MessageType, Type}
 import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.QuotingUtils
@@ -25,13 +24,14 @@ import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.parquet.{GraftFooterAggregates, ParquetFilters, ParquetReadSupport, ParquetToSparkSchemaConverter, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.parquet.{GraftFooterAggregates, ParquetFilters, ParquetOptions, ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.connector.Partitioner
@@ -48,12 +48,12 @@ import graft.connector.Partitioner
   *   - `planInputPartitions` greedy-packs batches into size- or
   *     count-targeted partitions with the SAME [[Partitioner.pack]]
   *     algorithm the reference implements (core.py:149-197);
-  *   - each [[BatchPartitionReader]] decodes only its own row groups on
-  *     the executor with Spark's own `VectorizedParquetRecordReader` (one
-  *     byte-range split per run of consecutive row groups, hive partition
-  *     values as constant columns) — the parallel worker↔stage data plane
-  *     of SURVEY §3.1 stage 10, columnar end to end like the reference's
-  *     Arrow batches.
+  *   - each partition is read on the executor by Spark's own
+  *     `ParquetPartitionReaderFactory` ([[BatchSource.readerFactory]]):
+  *     one byte-range `PartitionedFile` per run of consecutive planned row
+  *     groups, hive partition values as its partition values — the
+  *     parallel worker↔stage data plane of SURVEY §3.1 stage 10, decoded
+  *     columnar or by row as the session decodes `spark.read.parquet`.
   *
   * Options: `partition_size` (default 100 MiB) / `npartitions`, exactly
   * one (core.py:164-167). Column pruning is pushed into the parquet reads
@@ -317,6 +317,69 @@ private[sources] object BatchSource {
       })
     }
     groups.filter(g => kept.contains(g.chunks))
+  }
+
+  /** The partition columns `required` reads, in its order. */
+  def partSchema(required: StructType, partCols: Seq[StructField]): StructType =
+    StructType(required.fields.filter(f => partCols.exists(_.name == f.name)))
+
+  /** One packed group as an input partition: a `PartitionedFile` per
+    * maximal run of consecutive row groups of one file, spanning
+    * [first start, last start + bytes). Parquet keeps a row group iff its
+    * midpoint falls in the range, so the range selects exactly the run and
+    * a pruned row group between two runs stays unread. The file's hive
+    * values ride as its partition values. */
+  def inputPartition(handles: Seq[BatchHandle], partSchema: StructType,
+      rootDir: String): InputPartition =
+    BatchInputPartition(runs(handles).map { run =>
+      val (first, last) = (run.head, run.last)
+      val vals = Partitions.valuesOf(first.path, rootDir, partSchema.fields.toSeq)
+      val values = InternalRow.fromSeq(partSchema.fields.toSeq.map(f =>
+        CatalystTypeConverters.convertToCatalyst(vals.getOrElse(f.name, null))))
+      PlannedRun(PartitionedFile(values, SparkPath.fromPathString(first.path),
+          first.start, last.start + last.bytes - first.start),
+        run.map(_.rowGroup), run.map(_.rows).sum)
+    }.toArray)
+
+  /** Handles grouped into maximal runs of consecutive row groups per file,
+    * in (path, row group) order. */
+  def runs(handles: Seq[BatchHandle]): Seq[Seq[BatchHandle]] =
+    handles.sortBy(h => (h.path, h.rowGroup))
+      .foldLeft(List.empty[List[BatchHandle]]) {
+        case ((prev :: run) :: done, h)
+            if prev.path == h.path && prev.rowGroup + 1 == h.rowGroup =>
+          (h :: prev :: run) :: done
+        case (done, h) => List(h) :: done
+      }
+      .reverse.map(_.reverse)
+
+  /** The reader of batch scans and micro-batch streams: Spark's own
+    * `ParquetPartitionReaderFactory`, built as `ParquetScan` builds it, so
+    * the session decides columnar or row decode, batch size and off-heap
+    * vectors as it does for `spark.read.parquet`. The conf is
+    * [[readConf]] plus the read-support keys, so every file reads as
+    * schema inference saw it. No filters and no aggregate: planning has
+    * pruned, and the factory's row-group filter could drop a planned
+    * group. Rebase modes are CORRECTED: values decode as stored unless a
+    * file's own metadata says it was written with the legacy calendar. */
+  def readerFactory(required: StructType, partCols: Seq[StructField],
+      hadoopConf: Configuration): PartitionReaderFactory = {
+    // the reader appends partition columns after the file's columns;
+    // inferSchema (and column pruning, which keeps its order) already
+    // puts them last
+    val parts = partSchema(required, partCols)
+    val data = StructType(required.fields.filterNot(parts.contains))
+    require(required.fields.sameElements(data.fields ++ parts.fields),
+      s"partition columns must trail the data columns: ${required.simpleString}")
+    val conf = readConf(hadoopConf)
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, data.json)
+    val sqlConf = SQLConf.get
+    PlannedRunsFactory(ParquetPartitionReaderFactory(sqlConf,
+      SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf)),
+      data, data, parts, Array.empty, None,
+      new ParquetOptions(Map(ParquetOptions.DATETIME_REBASE_MODE -> "CORRECTED",
+        ParquetOptions.INT96_REBASE_MODE -> "CORRECTED"), sqlConf)))
   }
 }
 
@@ -711,129 +774,71 @@ private[sources] class BatchScan(
       case None =>
         Partitioner.pack(kept.map(_.bytes), sizeMode.get)
     }
-    groups.map { idxs =>
-      BatchInputPartition(idxs.map(kept).toArray): InputPartition
-    }.toArray
+    val partSchema = BatchSource.partSchema(required, partCols)
+    groups.map(idxs => BatchSource.inputPartition(idxs.map(kept), partSchema, rootDir)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BatchReaderFactory(required, conf, partCols, rootDir)
+    BatchSource.readerFactory(required, partCols, conf)
 }
 
-/** Serialized to executors: only the lazy handles, never data. */
-private[sources] case class BatchInputPartition(
-    handles: Array[BatchSource.BatchHandle]) extends InputPartition
+/** Serialized to executors: byte ranges and planned row counts, never
+  * data. */
+private[sources] case class BatchInputPartition(runs: Array[PlannedRun])
+    extends InputPartition
 
-/** Columnar only: every partition decodes through [[BatchPartitionReader]].
-  * Built on the driver, so the session's reader settings
-  * (`spark.sql.parquet.columnarReaderBatchSize`,
-  * `spark.sql.columnVector.offheap.enabled`) and the parquet read-support
-  * keys `ParquetFileFormat` sets travel inside the factory. */
-private[sources] class BatchReaderFactory(
-    required: StructType, hadoopConf: Configuration,
-    partCols: Seq[StructField], rootDir: String)
+/** A maximal run of consecutive planned row groups of one file: `file`
+  * spans them, and a read of it must yield `rows` rows. */
+private[sources] case class PlannedRun(file: PartitionedFile, rowGroups: Seq[Int], rows: Long)
+
+/** Spark's parquet factory over graft's planned runs. A partition reads
+  * its runs one after another, and a run that yields other than its
+  * planned rows fails the task: its byte range selected row groups that
+  * were not planned (the file changed after planning). */
+private[sources] case class PlannedRunsFactory(parquet: ParquetPartitionReaderFactory)
     extends PartitionReaderFactory {
 
-  // the vectorized reader appends partition columns after the file's
-  // columns; inferSchema (and column pruning, which keeps its order)
-  // already puts them last
-  private val partSchema =
-    StructType(required.fields.filter(f => partCols.exists(_.name == f.name)))
-  private val fileSchema = StructType(required.fields.filterNot(partSchema.contains))
-  require(required.fields.sameElements(fileSchema.fields ++ partSchema.fields),
-    s"partition columns must trail the data columns: ${required.simpleString}")
+  private def runs(p: InputPartition) = p.asInstanceOf[BatchInputPartition].runs.toSeq
 
-  private val batchSize = SQLConf.get.parquetVectorizedReaderBatchSize
-  private val offHeap = SQLConf.get.offHeapColumnVectorEnabled
-  // the converter flags schema inference used, so the reader's view of
-  // every file matches the inferred schema
-  private val conf = new SerializableConfiguration({
-    val c = BatchSource.readConf(hadoopConf)
-    c.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
-    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, fileSchema.json)
-    c
-  })
-
-  override def supportColumnarReads(p: InputPartition): Boolean = true
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    parquet.supportColumnarReads(p)
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    throw new UnsupportedOperationException("graft scans decode columnar only")
+    new PlannedRunsReader[InternalRow](runs(p), parquet.buildReader, _ => 1L)
 
   override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    new BatchPartitionReader(p.asInstanceOf[BatchInputPartition].handles,
-      partSchema, rootDir, conf.value, batchSize, offHeap)
+    new PlannedRunsReader[ColumnarBatch](runs(p), parquet.buildColumnarReader,
+      _.get().numRows.toLong)
 }
 
-/** Executor-side decode (SURVEY §3.1 stage 10) through Spark's own
-  * `VectorizedParquetRecordReader` — the reader `spark.read.parquet` runs.
-  * Each maximal run of consecutive row groups of one file opens as ONE
-  * `FileSplit`: parquet-hadoop keeps a row group iff its midpoint falls in
-  * the split's byte range, so [first run start, last run end) selects
-  * exactly that run and a pruned row group between two runs stays unread.
-  * The requested (pruned) schema travels in the factory's conf; the file's
-  * hive partition values ride as constant columns via `initBatch`. Rebase
-  * modes are CORRECTED: values decode as stored, with no calendar shift. */
-private[sources] class BatchPartitionReader(
-    handles: Seq[BatchSource.BatchHandle], partSchema: StructType,
-    rootDir: String, conf: Configuration, batchSize: Int, offHeap: Boolean)
-    extends PartitionReader[ColumnarBatch] {
+private[sources] class PlannedRunsReader[T](
+    runs: Seq[PlannedRun], open: PartitionedFile => PartitionReader[T],
+    rows: PartitionReader[T] => Long)
+    extends PartitionReader[T] {
 
-  private val runs = BatchPartitionReader.runs(handles).iterator
-  private var reader: VectorizedParquetRecordReader = _
-  private var run: Seq[BatchSource.BatchHandle] = Seq.empty
-  private var planned, rowsRead = 0L
-
-  private def openNextRun(): Boolean = {
-    close()
-    if (!runs.hasNext) return false
-    run = runs.next()
-    val (first, last) = (run.head, run.last)
-    reader = new VectorizedParquetRecordReader(
-      null, "CORRECTED", "UTC", "CORRECTED", "UTC", offHeap, batchSize)
-    reader.initialize(
-      new FileSplit(new Path(first.path), first.start,
-        last.start + last.bytes - first.start, Array.empty[String]),
-      new TaskAttemptContextImpl(conf, new TaskAttemptID()))
-    val vals = Partitions.valuesOf(first.path, rootDir, partSchema.fields.toSeq)
-    reader.initBatch(partSchema, new GenericInternalRow(partSchema.fields.map { f =>
-      vals.getOrElse(f.name, null) match {
-        case s: String => UTF8String.fromString(s)
-        case v => v
-      }
-    }))
-    planned = run.map(_.rows).sum
-    rowsRead = 0L
-    true
-  }
+  private val todo = runs.iterator
+  private var run: PlannedRun = _
+  private var reader: PartitionReader[T] = _
+  private var read = 0L
 
   override def next(): Boolean = {
-    while (reader == null || !reader.nextBatch()) {
-      // the byte range must have selected exactly the planned row groups
-      if (reader != null && rowsRead != planned)
-        throw new IllegalStateException(s"${run.head.path}: read $rowsRead rows " +
-          s"for row groups ${run.map(_.rowGroup).mkString(",")}, planned $planned")
-      if (!openNextRun()) return false
+    while (reader == null || !reader.next()) {
+      if (reader != null) {
+        close()
+        if (read != run.rows)
+          throw new IllegalStateException(s"${run.file.toPath}: read $read rows " +
+            s"for row groups ${run.rowGroups.mkString(",")}, planned ${run.rows}")
+      }
+      if (!todo.hasNext) return false
+      run = todo.next()
+      read = 0L
+      reader = open(run.file)
     }
-    rowsRead += reader.resultBatch().numRows
+    read += rows(reader)
     true
   }
 
-  override def get(): ColumnarBatch = reader.resultBatch()
+  override def get(): T = reader.get()
 
   override def close(): Unit = if (reader != null) { reader.close(); reader = null }
-}
-
-private[sources] object BatchPartitionReader {
-
-  /** Handles grouped into maximal runs of consecutive row groups per file,
-    * in (path, row group) order. */
-  def runs(handles: Seq[BatchSource.BatchHandle]): Seq[Seq[BatchSource.BatchHandle]] =
-    handles.sortBy(h => (h.path, h.rowGroup))
-      .foldLeft(List.empty[List[BatchSource.BatchHandle]]) {
-        case ((prev :: run) :: done, h)
-            if prev.path == h.path && prev.rowGroup + 1 == h.rowGroup =>
-          (h :: prev :: run) :: done
-        case (done, h) => List(h) :: done
-      }
-      .reverse.map(_.reverse)
 }

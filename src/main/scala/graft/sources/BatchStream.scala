@@ -17,7 +17,7 @@ import graft.connector.Partitioner
   * the staged directory become the next micro-batch — the continuously-fed
   * stage scenario (a warehouse unloading result batches while the cluster
   * consumes them). Reuses the batch machinery wholesale: discovery, greedy
-  * packing, and the vectorized [[BatchPartitionReader]].
+  * packing, and Spark's parquet reader ([[BatchSource.readerFactory]]).
   *
   * Offsets index into a FILE LOG persisted under the query's checkpoint
   * (`graft-file-log/seg-<start>`, one segment per discovery that found new
@@ -349,8 +349,9 @@ private[sources] class BatchMicroBatchStream(
     if (batches.isEmpty) return Array.empty
     val target = Partitioner.parseBytes(
       Option(options.get("partition_size")).getOrElse(Partitioner.DefaultPartitionSize))
+    val partSchema = BatchSource.partSchema(required, partCols)
     Partitioner.pack(batches.map(_.bytes), target)
-      .map(idxs => BatchInputPartition(idxs.map(batches).toArray): InputPartition)
+      .map(idxs => BatchSource.inputPartition(idxs.map(batches), partSchema, rootDir))
       .toArray
   }
 
@@ -358,8 +359,7 @@ private[sources] class BatchMicroBatchStream(
     // partition columns flow through the stream too: without them a
     // partitioned stage's readers would ask the footer for a column that
     // lives only in the path
-    new BatchReaderFactory(required, conf, partCols,
-      BatchSource.qualifiedDir(options, conf))
+    BatchSource.readerFactory(required, partCols, conf)
 
   override def stop(): Unit = ()
 }

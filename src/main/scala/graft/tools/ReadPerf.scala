@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   *     times full-decode scans of that directory through (a) the native
   *     parquet source and (b) the graft connector with `npartitions` = the
   *     file count, so both sides run the same number of scan tasks. Both
-  *     decode with Spark's `VectorizedParquetRecordReader`; the difference
-  *     is the connector's planning.
+  *     decode with Spark's parquet readers (the native source through
+  *     `ParquetFileFormat`, the connector through
+  *     `ParquetPartitionReaderFactory`); the difference is the connector's
+  *     planning.
   *   - write: times `df.write.parquet` against the graft sink writing the
   *     same cached source, 4 tasks and 4 files each. Both encode with
   *     Spark's `ParquetOutputWriter`; the difference is the sink's commit

@@ -274,7 +274,7 @@ class BatchSourceSpec extends SparkSpec {
     val off1 = latest(s1)
     assert(off1 >= 1)
     val firstFiles = s1.planInputPartitions(FileCountOffset(0), FileCountOffset(off1))
-      .flatMap(_.asInstanceOf[BatchInputPartition].handles.map(_.path)).toSet
+      .flatMap(_.asInstanceOf[BatchInputPartition].runs.map(_.file.toPath.toString)).toSet
 
     // a second file lands; a RESTARTED stream (fresh instance, same
     // checkpoint) must assign it offsets AFTER the logged ones and replay
@@ -284,10 +284,10 @@ class BatchSourceSpec extends SparkSpec {
     val off2 = latest(s2, off1)
     assert(off2 > off1, "new file must extend the log")
     val replay = s2.planInputPartitions(FileCountOffset(0), FileCountOffset(off1))
-      .flatMap(_.asInstanceOf[BatchInputPartition].handles.map(_.path)).toSet
+      .flatMap(_.asInstanceOf[BatchInputPartition].runs.map(_.file.toPath.toString)).toSet
     assert(replay == firstFiles, "restart must replay the same files for the same offsets")
     val second = s2.planInputPartitions(FileCountOffset(off1), FileCountOffset(off2))
-      .flatMap(_.asInstanceOf[BatchInputPartition].handles.map(_.path)).toSet
+      .flatMap(_.asInstanceOf[BatchInputPartition].runs.map(_.file.toPath.toString)).toSet
     assert(second.nonEmpty && (second & firstFiles).isEmpty)
 
     // retention deletes an old file: later offsets must NOT shift — the
@@ -298,7 +298,7 @@ class BatchSourceSpec extends SparkSpec {
     val s3 = new BatchMicroBatchStream(schema, opts, ckpt)
     latest(s3, off2)
     val secondAfterDelete = s3.planInputPartitions(FileCountOffset(off1), FileCountOffset(off2))
-      .flatMap(_.asInstanceOf[BatchInputPartition].handles.map(_.path)).toSet
+      .flatMap(_.asInstanceOf[BatchInputPartition].runs.map(_.file.toPath.toString)).toSet
     assert(secondAfterDelete == second,
       "deleting an old staged file must not re-map later offsets")
     assert(s3.planInputPartitions(FileCountOffset(0), FileCountOffset(off1)).isEmpty)
@@ -331,9 +331,9 @@ class BatchSourceSpec extends SparkSpec {
       s2.latestOffset(FileCountOffset(3), s2.getDefaultReadLimit)
         .asInstanceOf[FileCountOffset].n == 6)
     val b2a = s.planInputPartitions(FileCountOffset(3), FileCountOffset(6))
-      .flatMap(_.asInstanceOf[BatchInputPartition].handles.map(_.path)).toSet
+      .flatMap(_.asInstanceOf[BatchInputPartition].runs.map(_.file.toPath.toString)).toSet
     val b2b = s2.planInputPartitions(FileCountOffset(3), FileCountOffset(6))
-      .flatMap(_.asInstanceOf[BatchInputPartition].handles.map(_.path)).toSet
+      .flatMap(_.asInstanceOf[BatchInputPartition].runs.map(_.file.toPath.toString)).toSet
     assert(b2a == b2b && b2a.nonEmpty)
   }
 
@@ -393,7 +393,7 @@ class BatchSourceSpec extends SparkSpec {
         .asInstanceOf[FileCountOffset].n
     def batchPaths(from: Int, to: Int) =
       s.planInputPartitions(FileCountOffset(from), FileCountOffset(to))
-        .flatMap(_.asInstanceOf[BatchInputPartition].handles.map(_.path)).distinct
+        .flatMap(_.asInstanceOf[BatchInputPartition].runs.map(_.file.toPath.toString)).distinct
     val allPaths = {
       var from = 0
       val acc = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
@@ -432,7 +432,7 @@ class BatchSourceSpec extends SparkSpec {
     val off = s.latestOffset(FileCountOffset(0), s.getDefaultReadLimit)
       .asInstanceOf[FileCountOffset].n
     val paths = s.planInputPartitions(FileCountOffset(0), FileCountOffset(off))
-      .flatMap(_.asInstanceOf[BatchInputPartition].handles.map(_.path)).toSet
+      .flatMap(_.asInstanceOf[BatchInputPartition].runs.map(_.file.toPath.toString)).toSet
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     paths.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), false))
@@ -643,6 +643,30 @@ class BatchSourceSpec extends SparkSpec {
     // the unfiltered single-partition read sees every row group once
     assertSameRows(spark.read.format("graft").option("npartitions", 1).load(dir),
       spark.read.parquet(dir))
+  }
+
+  test("a byte range that selects rows it did not plan fails the task") {
+    // a DataFrame keeps its planned partitions and footer sweep: rewriting
+    // its file under it in another row-group layout makes each planned
+    // byte range select other row groups than it planned
+    val dir = Files.createTempDirectory("graft_rows_check").toString
+    val orders = Tables.table(spark, sfDir, "orders").orderBy("o_orderkey").coalesce(1)
+    orders.write.option("parquet.block.size", 32 * 1024).mode("overwrite").parquet(dir)
+    val df = spark.read.format("graft").option("partition_size", "16 KiB").load(dir)
+    assert(df.rdd.getNumPartitions >= 3, "need one partition per row group")
+    assert(df.collect().length == orders.count())
+    val part = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val tmp = Files.createTempDirectory("graft_rows_check_one").toString
+    orders.write.mode("overwrite").parquet(tmp) // one row group
+    val one = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(one.toPath, part.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // the old checksum no longer matches the bytes
+    Files.deleteIfExists(part.toPath.resolveSibling(s".${part.getName}.crc"))
+    var rows: Array[org.apache.spark.sql.Row] = null
+    val e = intercept[Exception] { rows = df.collect() }
+    assert(rows == null)
+    assert("read \\d+ rows for row groups [\\d,]+, planned \\d+".r
+      .findFirstIn(e.getMessage).isDefined, e.getMessage)
   }
 
   test("footer pruning and MIN/MAX stay exact for BIGINT beyond 2^53") {
@@ -1340,9 +1364,22 @@ class BatchSourceSpec extends SparkSpec {
     val back = spark.read.format("graft").load(dir)
     assert(back.schema == src.schema,
       s"schema drifted:\n${src.schema.treeString}\nvs\n${back.schema.treeString}")
-    assert(jsonRows(back) == jsonRows(src))
+    val expected = jsonRows(src)
+    assert(jsonRows(back) == expected)
     // and Spark's own parquet source reads the staged files the same way
-    assert(jsonRows(spark.read.parquet(dir)) == jsonRows(src))
+    assert(jsonRows(spark.read.parquet(dir)) == expected)
+    // the session's reader settings choose how a graft scan decodes (row
+    // or columnar, codegen or not), never what it returns
+    import org.apache.spark.sql.internal.SQLConf
+    Seq(SQLConf.PARQUET_VECTORIZED_READER_ENABLED.key -> "false",
+      SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+      SQLConf.PARQUET_VECTORIZED_READER_NESTED_COLUMN_ENABLED.key -> "false",
+      SQLConf.PARQUET_REBASE_MODE_IN_READ.key -> "EXCEPTION").foreach { case (k, v) =>
+      val old = spark.conf.getOption(k)
+      spark.conf.set(k, v)
+      try assert(jsonRows(spark.read.format("graft").load(dir)) == expected, s"$k=$v")
+      finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
 
   test("a write nesting past one level is rejected at build time, on the driver") {
