@@ -62,7 +62,7 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
   *
   * The builders are session functions, so they work wherever Spark
   * resolves a function name: `spark.sql`, temporary views, `expr()`,
-  * and every leaf of [[SqlText]]'s grammar. They reach a session two
+  * and every statement [[SqlText]] runs. They reach a session two
   * ways: [[register]] on an existing one (both SQL front doors,
   * `Read.readTable` and [[SqlText.sql]], call it), or
   * `graft.functions.GraftExtensions` at build time. Spark treats them
@@ -71,8 +71,9 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
   * `_passthrough` / `_listagg` / `_to_varchar` / `_editdistance` /
   * `_strtok`.
   *
-  * [[maskLiterals]] and [[splitTopLevel]] are [[SqlText]]'s
-  * literal-aware statement tools.
+  * [[maskLiterals]] serves [[SqlText]]'s fallback grammar, the one
+  * that reads ASOF JOIN, QUALIFY and `SELECT * EXCLUDE`, which Spark's
+  * parser rejects.
   */
 object SqlDialect {
 
@@ -206,14 +207,13 @@ object SqlDialect {
     * literals (with `''` doubling), `"…"`/backtick identifiers and
     * line/block comments replaced by `#` — delimiters and newlines
     * survive, so every byte offset maps 1:1 onto the original.
-    * [[SqlText]] runs its statement grammar (the MERGE WHEN-splitter,
-    * UPDATE/DELETE WHERE boundaries, QUALIFY detection, alias
-    * stripping) against the MASK and slices the original at the match
-    * offsets, so a literal containing ` WHERE ` / ` WHEN ` / `QUALIFY`
-    * or a `--` comment inside a statement can never split at the wrong
-    * token (round-14 ADVICE: the regex grammar was the one layer not
-    * quote-aware). `#` is neither a word character nor whitespace, so
-    * masked spans can neither fake a keyword nor extend one. */
+    * [[SqlText]] runs its fallback grammar (ASOF JOIN, QUALIFY and
+    * EXCLUDE detection, alias stripping) against the MASK and slices
+    * the original at the match offsets, so a literal containing
+    * `QUALIFY` or an alias qualifier, or a `--` comment inside a
+    * statement, can never split at the wrong token. `#` is neither a
+    * word character nor whitespace, so masked spans can neither fake a
+    * keyword nor extend one. */
   private[graft] def maskLiterals(sql: String): String = {
     val out = new StringBuilder(sql.length)
     val n = sql.length
@@ -267,31 +267,6 @@ object SqlDialect {
   /** Index just past a `"…"`/backtick-delimited identifier. */
   private def pastDelim(s: String, i: Int, d: Char): Int =
     s.indexOf(d, i + 1) match { case -1 => s.length; case k => k + 1 }
-
-  /** Split an argument list at top-level commas (quotes and nested
-    * parens respected); an all-whitespace list is zero arguments. */
-  private[graft] def splitTopLevel(argText: String): Seq[String] = {
-    if (argText.trim.isEmpty) return Nil
-    val parts = scala.collection.mutable.ListBuffer.empty[String]
-    var depth = 0
-    var start = 0
-    var j = 0
-    while (j < argText.length) {
-      argText.charAt(j) match {
-        case '\'' => j = pastString(argText, j) - 1
-        case '"' => j = pastDelim(argText, j, '"') - 1
-        case '`' => j = pastDelim(argText, j, '`') - 1
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          parts += argText.substring(start, j); start = j + 1
-        case _ =>
-      }
-      j += 1
-    }
-    parts += argText.substring(start)
-    parts.toList
-  }
 
   /** Snowflake numeric format over `9 0 , . $` → a DecimalFormat
     * pattern for `format_number` (9 → #, rest verbatim; `$` must lead;

@@ -1,27 +1,39 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.classic.GraftColumns.column
+import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
 
 /** Warehouse-SQL text front-end — the reference's query-string-first UX
   * (`read_snowflake(query)`, dask_snowflake/core.py:143) for the DML
   * statements a warehouse user types that Spark SQL cannot run without
-  * extra machinery: `MERGE INTO` (Spark parses it but needs a v2 table
-  * format to analyze), single-table `UPDATE … SET` / `DELETE FROM`
-  * (same v2-catalog gap; the result is the mutated relation),
-  * Snowflake-style `ASOF JOIN … MATCH_CONDITION`
-  * (no Spark syntax at all), and the `QUALIFY` window-filter clause
-  * (no QUALIFY token in Spark 4.1's parser). Each is recognized by a
-  * restricted canonical grammar and REWRITTEN — MERGE/ASOF onto the
-  * engine's native operators ([[Graft.upsert]], [[Graft.asofJoin]]),
-  * QUALIFY onto the wrapped-subquery filter — so the SQL text is a
-  * front door, not a second implementation, and the scale story (one
-  * key-shuffle merge; union+window as-of with no range explosion) is
-  * exactly the API one's. Everything else passes through to
-  * `spark.sql`. The Snowflake scalar functions Spark 4.1 lacks (IFF,
-  * SQUARE, CHARINDEX, TO_VARCHAR, EDITDISTANCE, DIV0/DIV0NULL, the BIT*
-  * family, STRTOK) are [[SqlDialect]]'s session functions, registered
-  * on every call, so they resolve at every leaf of this grammar like
-  * any other function.
+  * extra machinery: `MERGE INTO`, single-table `UPDATE … SET` and
+  * `DELETE FROM` (Spark parses all three but needs a v2 table format to
+  * analyze them; here the result is the mutated relation),
+  * Snowflake-style `ASOF JOIN … MATCH_CONDITION`, the `QUALIFY`
+  * window-filter clause and `SELECT * EXCLUDE` (no Spark syntax for
+  * any of the last three).
+  *
+  * Every statement first goes through the session's own SQL parser
+  * (`spark.sessionState.sqlParser`). A parsed `MergeIntoTable`,
+  * `UpdateTable` or `DeleteFromTable` runs straight from the plan on
+  * the engine's native operators ([[Graft.upsert]],
+  * [[Graft.upsertPartial]], [[Graft.mergeDelete]], [[Graft.merge]], one
+  * projection for UPDATE, one filter for DELETE): its gates, SET values
+  * and WHERE predicates become Columns from the parsed expressions,
+  * with the user's MERGE aliases renamed onto the operators' `c`
+  * (target) and `b` (source). Any other parsed statement runs through
+  * `spark.sql`. Only a statement Spark's parser rejects reaches the
+  * regex grammar below, which knows ASOF JOIN, QUALIFY and EXCLUDE and
+  * otherwise rethrows Spark's positioned `ParseException`. The Snowflake
+  * scalar functions Spark 4.1 lacks (IFF, SQUARE, CHARINDEX, TO_VARCHAR,
+  * EDITDISTANCE, DIV0/DIV0NULL, the BIT* family, STRTOK) are
+  * [[SqlDialect]]'s session functions, registered on every call, so
+  * they resolve in every statement like any other function.
   *
   * MERGE supports the CDC verb set: full (`SET *`) and partial
   * (`SET col = s.col, …`) updates, `DELETE`, MULTIPLE `WHEN MATCHED
@@ -54,73 +66,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * keys cannot fan out or change the result there, so it stays
   * guard-free where the warehouse's blanket setting would raise.
   *
-  * The grammar is LITERAL-AWARE: statements are matched against a
-  * masked shadow ([[SqlDialect.maskLiterals]]) and sliced from the
-  * original at the match offsets, so a string literal or comment
-  * containing ` WHERE `, ` WHEN `, `QUALIFY`, an alias qualifier, or
-  * a comment-opening sequence can never split a statement at the
-  * wrong token. A session UDF registered under a dialect function's
-  * name (e.g. `iff`) keeps running: [[SqlDialect.register]] leaves it
-  * in place.
+  * The ASOF/QUALIFY/EXCLUDE grammar is LITERAL-AWARE: statements are
+  * matched against a masked shadow ([[SqlDialect.maskLiterals]]) and
+  * sliced from the original at the match offsets, so a string literal
+  * or comment containing ` QUALIFY `, an alias qualifier, or a
+  * comment-opening sequence can never split a statement at the wrong
+  * token. A session UDF registered under a dialect function's name
+  * (e.g. `iff`) keeps running: [[SqlDialect.register]] leaves it in
+  * place.
   *
-  * Restrictions are LOUD (`require`/analysis errors), never silent:
-  * expression-RHS VALUES entries (only `s.col` references), a branch
-  * after an ungated `WHEN MATCHED` (unreachable under
-  * first-match-wins), non-equi ON conjuncts, a MATCH_CONDITION that
-  * is not a single `l.t >= r.t` / `l.t <= r.t` comparison, or a
-  * QUALIFY predicate over an un-aliased window all fail with the
-  * offending text. KNOWN GRAMMAR LIMIT: the WHEN-tail splits at each
-  * `WHEN` token and gates parse up to the next `THEN`, so an AND-gate
-  * containing a `CASE WHEN … THEN … END` expression is cut
-  * mid-predicate and rejected — keep CASE expressions out of MERGE
-  * gates (compute the flag in the source relation instead).
-  * Oracle-checked as `q_sql_merge` / `q_sql_merge_partial` /
+  * Restrictions are LOUD (parse, `require` or analysis errors), never
+  * silent: a MERGE source that is not a table name, `WHEN NOT MATCHED
+  * BY SOURCE`, a gated or repeated `WHEN NOT MATCHED`, `WITH SCHEMA
+  * EVOLUTION`, SET or VALUES entries other than bare `s.col`
+  * references, non-equi ON conjuncts, a MATCH_CONDITION that is not a
+  * single `l.t >= r.t` / `l.t <= r.t` comparison, or a QUALIFY
+  * predicate over an un-aliased window all fail with the offending
+  * text. Oracle-checked as `q_sql_merge` / `q_sql_merge_partial` /
   * `q_sql_merge_delete` / `q_sql_merge_branches` /
-  * `q_sql_merge_insert_list` / `q_sql_asof` / `q_sql_qualify`.
+  * `q_sql_merge_insert_list` / `q_sql_merge_gate_literal` /
+  * `q_sql_update` / `q_sql_delete` / `q_sql_asof` / `q_sql_qualify` /
+  * `q_sql_exclude`.
   */
 object SqlText {
-
-  // MERGE INTO <target> [AS t] USING <source> [AS s] ON <equi-conds>
-  //   [WHEN MATCHED [AND <pred>] THEN (UPDATE SET <* | assignments> | DELETE)]*
-  //   [WHEN NOT MATCHED THEN INSERT <* | (cols) VALUES (s.cols)>]
-  // — `SET *` (or no action clauses at all) is the canonical full-row
-  // upsert; `SET col = s.col, …` is the partial update (matched rows
-  // keep every unlisted column); `DELETE` removes matched target rows;
-  // an `AND <pred>` gate restricts a matched action to pairs
-  // satisfying it. Multiple matched branches evaluate in statement
-  // order, FIRST-MATCH-WINS; a branch after an ungated one is
-  // unreachable and rejected. `INSERT *` is full-row (schemas must
-  // align); `INSERT (cols) VALUES (s.cols)` fills unlisted target
-  // columns with typed NULLs — VALUES entries must be bare source
-  // column references, expression RHS fails loudly. At most ONE
-  // not-matched clause, after every matched clause.
-  private val MergeHeadRe =
-    ("""(?is)^\s*MERGE\s+INTO\s+(\w+)(?:\s+(?:AS\s+)?(?!USING\b)(\w+))?""" +
-     """\s+USING\s+(\w+)(?:\s+(?:AS\s+)?(?!ON\b)(\w+))?""" +
-     """\s+ON\s+(.+?)""" +
-     """((?:\s+WHEN\s.+)?)\s*;?\s*$""").r
-
-  private val MatchedUpdateRe =
-    """(?is)^WHEN\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+UPDATE\s+SET\s+(\*|.+?)\s*$""".r
-  private val MatchedDeleteRe =
-    """(?is)^WHEN\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+DELETE\s*$""".r
-  private val NotMatchedInsertRe =
-    """(?is)^WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*$""".r
-  private val NotMatchedInsertListRe =
-    ("""(?is)^WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s*""" +
-     """\(([^)]*)\)\s*VALUES\s*\(([^)]*)\)\s*$""").r
-  private val InsertValueRe = """(?s)^\s*(\w+)\.(\w+)\s*$""".r
-
-  /** A parsed `WHEN MATCHED` action: the optional AND-gate text and
-    * either the SET fragment (update) or None (delete). */
-  private sealed trait MatchedAction
-  private case class MatchedUpdate(pred: Option[String], set: String)
-    extends MatchedAction
-  private case class MatchedDelete(pred: Option[String])
-    extends MatchedAction
-
-  private val AssignRe =
-    """(?s)^\s*(?:(\w+)\.)?(\w+)\s*=\s*(\w+)\.(\w+)\s*$""".r
 
   // SELECT … FROM <lt> [AS l] ASOF JOIN <rt> [AS r]
   //   MATCH_CONDITION(<a>.<t> >= <b>.<t2>) ON <equi-conds> [tail…]
@@ -143,16 +111,6 @@ object SqlText {
   private val QualifyRe =
     """(?is)^\s*(SELECT\s+.+?)\s+QUALIFY\s+(.+?)(\s+ORDER\s+BY\s+.+?)?\s*;?\s*$""".r
 
-  // UPDATE <t> SET col = <expr>[, …] [WHERE <pred>] — single-table
-  // (no FROM/USING join form); the result IS the updated relation.
-  // All RHS expressions evaluate against the ORIGINAL row (ANSI
-  // semantics: `SET a = b, b = a` swaps), because every assignment
-  // lands in ONE projection over the source columns. WHERE follows
-  // SQL's three-valued logic: rows where the predicate is NULL are
-  // NOT updated. RHS/pred go through Spark's expression parser —
-  // anything unresolvable fails loudly at analysis. DELETE FROM <t>
-  // [WHERE <pred>]: removes rows where the predicate is TRUE (NULL
-  // keeps the row, ANSI); no WHERE empties the relation. Oracle-checked as `q_sql_update` / `q_sql_delete`.
   // SELECT * EXCLUDE (cols) FROM <t> [tail] — Snowflake/DuckDB's
   // projection-complement sugar (no Spark syntax): rewrites to the
   // explicit column list from the table's schema. Canonical single
@@ -162,37 +120,14 @@ object SqlText {
     ("""(?is)^\s*SELECT\s+\*\s+EXCLUDE\s+\(?\s*([\w\s,]+?)\s*\)?""" +
      """\s+FROM\s+(\w+)(\s+.*?)?\s*;?\s*$""").r
 
-  private val UpdateRe =
-    """(?is)^\s*UPDATE\s+(\w+)\s+SET\s+(.+?)(?:\s+WHERE\s+(.+?))?\s*;?\s*$""".r
-  private val DeleteRe =
-    """(?is)^\s*DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.+?))?\s*;?\s*$""".r
-  private val UpdateAssignRe = """(?s)^\s*(\w+)\s*=\s*(.+)$""".r
-
-  private val EquiRe = """(?s)^\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*$""".r
-
   /** A statement plus its literal-masked shadow
     * ([[SqlDialect.maskLiterals]] — same length, `'…'`/`"…"`/backtick
     * interiors and comment bodies turned to `#`). The grammar regexes
     * match against `masked`, so a keyword INSIDE a string literal or
-    * comment (`SET note = 'approved WHERE audited'`, a gate comparing
-    * to `' THEN '`, a `-- comment` mid-statement) is invisible to the
-    * splitter; every captured group is sliced from `original` at the
-    * match offsets, so the executed text keeps its literals intact
-    * (round-14 ADVICE: this was the one layer not quote-aware). */
-  private final case class Stmt(original: String, masked: String) {
-    def slice(from: Int, until: Int): Stmt =
-      Stmt(original.substring(from, until), masked.substring(from, until))
-    def trimmed: Stmt = {
-      val from = masked.indexWhere(!_.isWhitespace)
-      if (from < 0) Stmt("", "")
-      else slice(from, masked.lastIndexWhere(!_.isWhitespace) + 1)
-    }
-  }
-
-  // fragment boundaries always fall OUTSIDE literal/comment spans (they
-  // are keyword positions found in the mask), so masking a fragment
-  // equals slicing the parent's mask — re-masking is sound and simpler
-  private def stmtOf(text: String) = Stmt(text, SqlDialect.maskLiterals(text))
+    * comment is invisible to them; every captured group is sliced from
+    * `original` at the match offsets, so the executed text keeps its
+    * literals intact. */
+  private final case class Stmt(original: String, masked: String)
 
   /** Anchored-match extractor over the MASKED text, capturing from the
     * ORIGINAL; absent groups surface as null, like plain `Regex`. */
@@ -207,226 +142,235 @@ object SqlText {
     }
   }
 
-  private val MergeHeadM = new MRe(MergeHeadRe)
   private val AsofM = new MRe(AsofRe)
   private val QualifyM = new MRe(QualifyRe)
   private val ExcludeM = new MRe(ExcludeRe)
-  private val UpdateM = new MRe(UpdateRe)
-  private val DeleteM = new MRe(DeleteRe)
-  private val MatchedUpdateM = new MRe(MatchedUpdateRe)
-  private val MatchedDeleteM = new MRe(MatchedDeleteRe)
-  private val NotMatchedInsertM = new MRe(NotMatchedInsertRe)
-  private val NotMatchedInsertListM = new MRe(NotMatchedInsertListRe)
 
-  /** Split a fragment at each `boundary` match position in its MASK —
-    * a boundary keyword inside a literal never splits. The boundary
-    * text stays with the piece it starts (lookahead-style). */
-  private def splitParts(frag: Stmt,
-      boundary: scala.util.matching.Regex): Seq[Stmt] = {
-    val starts = boundary.findAllMatchIn(frag.masked).map(_.start).toList
-    val cuts = (0 :: starts).distinct :+ frag.masked.length
-    cuts.sliding(2).collect {
-      case List(a, b) if b > a => frag.slice(a, b)
-    }.toSeq
+  private val MergeForms =
+    "supported: MERGE INTO <table> [[AS] t] USING <table> [[AS] s] ON " +
+      "t.k = s.k [AND …] with WHEN MATCHED [AND <pred>] THEN UPDATE SET " +
+      "<*|col = s.col, …> | DELETE, repeatable first-match-wins, and at " +
+      "most one ungated WHEN NOT MATCHED THEN INSERT <*|(cols) VALUES (s.cols)>"
+
+  private def unsupported(what: String): Nothing =
+    throw new IllegalArgumentException(s"unsupported MERGE $what ($MergeForms)")
+
+  /** The statement text an expression was parsed from, for messages. */
+  private def written(e: Expression): String = {
+    val o = e.origin
+    (for (s <- o.sqlText; a <- o.startIndex; b <- o.stopIndex)
+      yield s.substring(a, b + 1)).getOrElse(e.toString)
   }
 
-  /** Replace each un-quoted `alias.` occurrence in `fragment` with
-    * `replacement` — occurrences inside string literals survive
-    * verbatim (found in the mask, spliced in the original). */
-  private def replaceAliasRefs(fragment: String, alias: String,
-      replacement: String): String = {
-    val masked = SqlDialect.maskLiterals(fragment)
-    val re = s"(?i)\\b${java.util.regex.Pattern.quote(alias)}\\.".r
-    val sb = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(masked).foreach { m =>
-      sb.append(fragment.substring(last, m.start)).append(replacement)
-      last = m.end
-    }
-    sb.append(fragment.substring(last)).toString
+  /** A bare table reference, `name [[AS] alias]`: the table and the
+    * alias its statement qualifies columns with (the name's last part
+    * when there is none). */
+  private def relation(spark: SparkSession,
+      plan: LogicalPlan): Option[(DataFrame, String)] = plan match {
+    case SubqueryAlias(alias, r: UnresolvedRelation) =>
+      Some((spark.table(r.tableName), alias.name))
+    case r: UnresolvedRelation =>
+      Some((spark.table(r.tableName), r.multipartIdentifier.last))
+    case _ => None
   }
 
   /** Parse an AND-conjunction of alias-qualified equi conditions into
     * (leftCol, rightCol) pairs, oriented so the first element belongs
     * to `leftAlias`. Anything non-equi is a loud error. */
-  private def equiKeys(cond: String, leftAlias: String,
-      rightAlias: String): Seq[(String, String)] =
-    cond.split("""(?i)\s+AND\s+""").toSeq.map {
-      case EquiRe(a1, c1, a2, c2) =>
-        if (a1.equalsIgnoreCase(leftAlias) && a2.equalsIgnoreCase(rightAlias))
-          (c1, c2)
-        else if (a1.equalsIgnoreCase(rightAlias) && a2.equalsIgnoreCase(leftAlias))
-          (c2, c1)
-        else sys.error(s"ON condition references unknown alias: '$a1.$c1 = $a2.$c2' " +
-          s"(expected aliases '$leftAlias' and '$rightAlias')")
-      case other => sys.error(
-        s"only alias-qualified equi conditions are supported in ON, got: '$other'")
-    }
+  private def equiKeys(cond: Expression, leftAlias: String,
+      rightAlias: String): Seq[(String, String)] = cond match {
+    case And(l, r) =>
+      equiKeys(l, leftAlias, rightAlias) ++ equiKeys(r, leftAlias, rightAlias)
+    case EqualTo(UnresolvedAttribute(Seq(a1, c1)), UnresolvedAttribute(Seq(a2, c2))) =>
+      if (a1.equalsIgnoreCase(leftAlias) && a2.equalsIgnoreCase(rightAlias))
+        Seq((c1, c2))
+      else if (a1.equalsIgnoreCase(rightAlias) && a2.equalsIgnoreCase(leftAlias))
+        Seq((c2, c1))
+      else sys.error(s"ON condition references unknown alias: '${written(cond)}' " +
+        s"(expected aliases '$leftAlias' and '$rightAlias')")
+    case other => sys.error(
+      s"only alias-qualified equi conditions are supported in ON, got: '${written(other)}'")
+  }
+
+  /** The column an assignment's left side names: `col` or `alias.col`. */
+  private def targetCol(key: Expression, alias: String): String = key match {
+    case UnresolvedAttribute(Seq(c)) => c
+    case UnresolvedAttribute(Seq(a, c)) if a.equalsIgnoreCase(alias) => c
+    case _ => throw new IllegalArgumentException(
+      s"SET target must be a '$alias' column: '${written(key)}'")
+  }
 
   /** Strip `alias.` qualifiers from a SQL fragment — after the rewrite
     * every column lives flat in one view, so the qualifiers must go.
-    * Quote-aware: `alias.` inside a string literal survives. */
-  private def stripAliases(fragment: String, aliases: Seq[String]): String =
-    aliases.foldLeft(fragment)((f, a) => replaceAliasRefs(f, a, ""))
-
-  /** Rewrite `userAlias.` qualifiers onto the engine operators' fixed
-    * internal aliases (two-phase through placeholders, so a user alias
-    * that collides with an engine alias — e.g. the target aliased `b` —
-    * can never be double-substituted). Quote-aware like
-    * [[stripAliases]]; the placeholder phase-2 replace is plain text
-    * (the phase-1 pass only plants placeholders outside literals). */
-  private def mapAliases(fragment: String,
-      renames: Seq[(String, String)]): String = {
-    val tmp = renames.zipWithIndex.foldLeft(fragment) {
-      case (f, ((ua, _), i)) =>
-        replaceAliasRefs(f, ua, s"__graft_alias_$i.")
+    * Quote-aware: `alias.` inside a string literal survives (found in
+    * the mask, cut from the original). */
+  private def stripAliases(fragment: String, aliases: Seq[String]): String = {
+    val re = aliases.map(a => s"\\b${java.util.regex.Pattern.quote(a)}\\.")
+      .mkString("(?i)(?:", "|", ")").r
+    val sb = new StringBuilder
+    var last = 0
+    re.findAllMatchIn(SqlDialect.maskLiterals(fragment)).foreach { m =>
+      sb.append(fragment.substring(last, m.start))
+      last = m.end
     }
-    renames.zipWithIndex.foldLeft(tmp) { case (f, ((_, ea), i)) =>
-      f.replace(s"__graft_alias_$i.", s"$ea.")
+    sb.append(fragment.substring(last)).toString
+  }
+
+  /** Run one SQL statement, extending `spark.sql` with the MERGE INTO,
+    * UPDATE, DELETE, ASOF JOIN, QUALIFY and EXCLUDE forms above.
+    * Returns the result relation; for MERGE/UPDATE/DELETE (Spark frames
+    * are immutable — there is no in-place table to mutate without a v2
+    * catalog) the result IS the mutated relation, which the caller
+    * writes wherever the target lives. */
+  def sql(spark: SparkSession, text: String): DataFrame = {
+    SqlDialect.register(spark)
+    val parsed =
+      try Right(spark.sessionState.sqlParser.parsePlan(text))
+      catch { case e: ParseException => Left(e) }
+    parsed match {
+      case Right(m: MergeIntoTable) => merge(spark, m)
+      case Right(UpdateTable(table, assignments, cond)) =>
+        update(spark, table, assignments, cond)
+      case Right(DeleteFromTable(table, cond)) =>
+        val (t, alias) = relation(spark, table).getOrElse(
+          throw new IllegalArgumentException(s"DELETE needs a table name: '$text'"))
+        // DELETE removes rows where the predicate is TRUE; a NULL
+        // predicate keeps the row (ANSI three-valued logic); no WHERE
+        // parses as `true` and empties the relation
+        t.alias(alias).filter(not(coalesce(column(cond), lit(false))))
+      case Right(_) => spark.sql(text)
+      case Left(e) => fallback(spark, text, e)
     }
   }
 
-  /** Run one SQL statement, extending `spark.sql` with the MERGE INTO
-    * and ASOF JOIN forms above. Returns the result relation; for MERGE
-    * (Spark frames are immutable — there is no in-place table to
-    * mutate without a v2 catalog) the result IS the merged relation,
-    * which the caller writes wherever the target lives. */
-  def sql(spark: SparkSession, text: String): DataFrame = {
-    SqlDialect.register(spark)
-    stmtOf(text) match {
-    case MergeHeadM(target, tAliasOrNull, source, sAliasOrNull, cond,
-        whenTail) =>
-      val tAlias = Option(tAliasOrNull).getOrElse(target)
-      val sAlias = Option(sAliasOrNull).getOrElse(source)
-      val keys = equiKeys(cond, tAlias, sAlias)
-      keys.foreach { case (tk, sk) =>
-        require(tk == sk,
-          s"MERGE keys must share a column name (got $tAlias.$tk = $sAlias.$sk); " +
-            "rename the source column before merging")
+  /** MERGE INTO, from the parsed plan. `SET *` is the canonical full-row
+    * upsert; `SET col = s.col, …` is the partial update (matched rows
+    * keep every unlisted column); `DELETE` removes matched target rows;
+    * an `AND <pred>` gate restricts a matched action to pairs
+    * satisfying it. Multiple matched branches evaluate in statement
+    * order, FIRST-MATCH-WINS (Spark's parser rejects a branch after an
+    * ungated one). `INSERT *` is full-row (schemas must align);
+    * `INSERT (cols) VALUES (s.cols)` fills unlisted target columns with
+    * typed NULLs. */
+  private def merge(spark: SparkSession, m: MergeIntoTable): DataFrame = {
+    if (m.withSchemaEvolution) unsupported("WITH SCHEMA EVOLUTION")
+    if (m.notMatchedBySourceActions.nonEmpty)
+      unsupported("clause WHEN NOT MATCHED BY SOURCE")
+    val (corpus, tAlias) = relation(spark, m.targetTable)
+      .getOrElse(unsupported("target: not a table name"))
+    val (batch, sAlias) = relation(spark, m.sourceTable)
+      .getOrElse(unsupported("source: a subquery or other non-table relation"))
+    val keys = equiKeys(m.mergeCondition, tAlias, sAlias)
+    keys.foreach { case (tk, sk) =>
+      require(tk == sk,
+        s"MERGE keys must share a column name (got $tAlias.$tk = $sAlias.$sk); " +
+          "rename the source column before merging")
+    }
+    val keyCols = keys.map(_._1)
+    // gates reference the user's aliases; the engine operators fix
+    // theirs as c (target) / b (source)
+    def gate(e: Expression): Column = column(e.transform {
+      case UnresolvedAttribute(a +: rest) if rest.nonEmpty && a.equalsIgnoreCase(tAlias) =>
+        UnresolvedAttribute("c" +: rest)
+      case UnresolvedAttribute(a +: rest) if rest.nonEmpty && a.equalsIgnoreCase(sAlias) =>
+        UnresolvedAttribute("b" +: rest)
+    })
+    def assigns(as: Seq[Assignment], where: String): Seq[(String, String)] =
+      as.map { a =>
+        targetCol(a.key, tAlias) -> (a.value match {
+          case UnresolvedAttribute(Seq(q, c)) if q.equalsIgnoreCase(sAlias) => c
+          case v => throw new IllegalArgumentException(
+            s"only bare '$sAlias.col' references are supported in $where " +
+              s"(expression RHS is not), got: '${written(v)}'")
+        })
       }
-      val keyCols = keys.map(_._1)
-      // split the WHEN tail into clauses at each WHEN boundary and
-      // classify; anything outside the canonical set fails loudly.
-      // (This split is why AND-gates may not contain CASE WHEN — the
-      // boundary regex cannot tell a branch keyword from an expression
-      // keyword; see the header restriction.)
-      val clauses = splitParts(stmtOf(whenTail), """(?i)\bWHEN\s""".r)
-        .map(_.trimmed).filter(_.original.nonEmpty)
-      // ordered matched branches — Snowflake evaluates them
-      // first-match-wins, so statement order is semantics
-      val matchedActs = scala.collection.mutable.ListBuffer.empty[MatchedAction]
-      // None = no insert arm; Some(Nil) = INSERT *; Some(cols) = list
-      var insertSpec: Option[Seq[(String, String)]] = None
-      clauses.foreach {
-        case NotMatchedInsertM() =>
-          require(insertSpec.isEmpty, "duplicate WHEN NOT MATCHED clause")
-          insertSpec = Some(Nil)
-        case c @ NotMatchedInsertListM(colsTxt, valsTxt) =>
-          require(insertSpec.isEmpty, "duplicate WHEN NOT MATCHED clause")
-          val cols = colsTxt.split(",").toSeq.map(_.trim)
-          require(cols.nonEmpty && cols.forall(_.matches("""\w+""")),
-            s"INSERT column list must be plain column names: '$colsTxt'")
-          val vals = valsTxt.split(",").toSeq.map {
-            case InsertValueRe(a, v) =>
-              require(a.equalsIgnoreCase(sAlias),
-                s"INSERT VALUES must reference the source alias " +
-                  s"'$sAlias': got '$a.$v'")
-              v
-            case other => sys.error(
-              s"only bare '$sAlias.col' references are supported in " +
-                s"INSERT VALUES (expression RHS is not), got: '$other'")
-          }
-          require(cols.size == vals.size,
-            s"INSERT column/value arity mismatch: ${cols.size} columns " +
-              s"vs ${vals.size} values in '${c.original}'")
-          insertSpec = Some(cols.zip(vals))
-        case MatchedUpdateM(predOrNull, set) =>
-          require(insertSpec.isEmpty,
-            "WHEN MATCHED must precede WHEN NOT MATCHED")
-          matchedActs += MatchedUpdate(Option(predOrNull), set.trim)
-        case MatchedDeleteM(predOrNull) =>
-          require(insertSpec.isEmpty,
-            "WHEN MATCHED must precede WHEN NOT MATCHED")
-          matchedActs += MatchedDelete(Option(predOrNull))
-        case other => sys.error(
-          s"unsupported MERGE clause: '${other.original}' (supported: WHEN MATCHED " +
-            "[AND <pred>] THEN UPDATE SET <*|col = s.col, …> | DELETE, " +
-            "repeatable first-match-wins; WHEN NOT MATCHED THEN INSERT " +
-            "<*|(cols) VALUES (s.cols)>; note gates may not contain " +
-            "CASE WHEN — the clause splitter cuts at WHEN/THEN tokens)")
-      }
-      val corpus = spark.table(target)
-      val batch = spark.table(source)
-      // AND-gates reference the user's aliases; the engine operators
-      // fix theirs as c (target) / b (source)
-      def predCol(p: String): org.apache.spark.sql.Column =
-        org.apache.spark.sql.functions.expr(
-          mapAliases(p, Seq(tAlias -> "c", sAlias -> "b")))
-      def parseAssigns(assigns: String): Seq[(String, String)] =
-        assigns.split(",").toSeq.map {
-          case AssignRe(lhsAliasOrNull, tc, rhsAlias, sc) =>
-            require(lhsAliasOrNull == null ||
-                lhsAliasOrNull.equalsIgnoreCase(tAlias),
-              s"SET target must be a '$tAlias' column: $lhsAliasOrNull.$tc")
-            require(rhsAlias.equalsIgnoreCase(sAlias),
-              s"SET source must be a '$sAlias' column: $rhsAlias.$sc")
-            (tc, sc)
-          case other => sys.error(
-            s"only 'col = $sAlias.col' assignments are supported in SET, " +
-              s"got: '$other'")
-        }
-      // SET * as an assignment list: every non-key corpus column from
-      // the batch column of the same name (schemas must align there)
-      def fullSet: Seq[(String, String)] =
-        corpus.columns.filterNot(keyCols.contains).map(n => (n, n)).toSeq
-      def toBranch(a: MatchedAction): MergeBranch = a match {
-        case MatchedUpdate(pred, "*") =>
-          MergeBranch(pred.map(predCol), Some(fullSet))
-        case MatchedUpdate(pred, assigns) =>
-          MergeBranch(pred.map(predCol), Some(parseAssigns(assigns)))
-        case MatchedDelete(pred) =>
-          MergeBranch(pred.map(predCol), None)
-      }
-      (matchedActs.toList, insertSpec) match {
-        // bare MERGE (no clauses) stays the canonical full-row upsert
-        case (Nil, None) =>
-          Graft.upsert(corpus, batch, keyCols,
-            failOnDuplicateMatches = true)
-        // insert-only merge: matched target rows unchanged, unmatched
-        // batch rows append — one anti key join
-        case (Nil, Some(Nil)) =>
-          require(corpus.columns.sameElements(batch.columns),
-            s"INSERT * needs aligned schemas: ${corpus.columns.mkString(",")} " +
-              s"vs ${batch.columns.mkString(",")}")
-          import org.apache.spark.sql.functions.col
-          val insCond = keyCols.map(k => col(s"b.$k") === col(s"c.$k"))
-            .reduce(_ && _)
-          corpus.unionAll(
-            batch.alias("b").join(corpus.alias("c"), insCond, "left_anti"))
-        case (List(MatchedUpdate(None, "*")), Some(Nil)) =>
-          Graft.upsert(corpus, batch, keyCols,
-            failOnDuplicateMatches = true)
-        case (List(MatchedUpdate(pred @ Some(_), "*")), Some(Nil)) =>
-          // gated full-row update ≡ SET every non-key column, gated
-          Graft.upsertPartial(corpus, batch, keyCols, fullSet,
-            pred.map(predCol), failOnDuplicateMatches = true)
-        case (List(MatchedUpdate(pred, assigns)), Some(Nil)) =>
-          Graft.upsertPartial(corpus, batch, keyCols,
-            parseAssigns(assigns), pred.map(predCol),
-            failOnDuplicateMatches = true)
-        case (List(MatchedDelete(pred)), ins @ (None | Some(Nil))) =>
-          // NOTE: this single-branch route matches keys with ANSI ===
-          // (NULL keys never match) — see the header's per-verb policy
-          Graft.mergeDelete(corpus, batch, keyCols, pred.map(predCol),
-            insertUnmatched = ins.isDefined)
-        // everything else — multiple matched branches, insert lists,
-        // update-only merges — is the generalized one-shuffle form
-        case (acts, ins) =>
-          Graft.merge(corpus, batch, keyCols, acts.map(toBranch),
-            insert = ins.isDefined, insertCols = ins.getOrElse(Nil),
-            failOnDuplicateMatches = true)
-      }
+    // SET * as an assignment list: every non-key corpus column from
+    // the batch column of the same name (schemas must align there)
+    def fullSet: Seq[(String, String)] =
+      corpus.columns.filterNot(keyCols.contains).map(n => (n, n)).toSeq
+    def branch(a: MergeAction): MergeBranch = a match {
+      case UpdateStarAction(c) => MergeBranch(c.map(gate), Some(fullSet))
+      case UpdateAction(c, as, _) =>
+        MergeBranch(c.map(gate), Some(assigns(as, "SET assignments")))
+      case DeleteAction(c) => MergeBranch(c.map(gate), None)
+      case other => unsupported(s"action: '${written(other)}'")
+    }
+    // None = no insert arm; Some(Nil) = INSERT *; Some(cols) = list
+    val insert = m.notMatchedActions match {
+      case Seq() => None
+      case Seq(InsertStarAction(None)) => Some(Nil)
+      case Seq(InsertAction(None, as)) => Some(assigns(as, "INSERT VALUES"))
+      case _ => unsupported("clause: a gated or repeated WHEN NOT MATCHED")
+    }
+    (m.matchedActions, insert) match {
+      // insert-only merge: matched target rows unchanged, unmatched
+      // batch rows append — one anti key join
+      case (Seq(), Some(Nil)) =>
+        require(corpus.columns.sameElements(batch.columns),
+          s"INSERT * needs aligned schemas: ${corpus.columns.mkString(",")} " +
+            s"vs ${batch.columns.mkString(",")}")
+        val insCond = keyCols.map(k => col(s"b.$k") === col(s"c.$k"))
+          .reduce(_ && _)
+        corpus.unionAll(
+          batch.alias("b").join(corpus.alias("c"), insCond, "left_anti"))
+      case (Seq(UpdateStarAction(None)), Some(Nil)) =>
+        Graft.upsert(corpus, batch, keyCols, failOnDuplicateMatches = true)
+      case (Seq(a @ (_: UpdateStarAction | _: UpdateAction)), Some(Nil)) =>
+        // gated full-row update ≡ SET every non-key column, gated
+        val b = branch(a)
+        Graft.upsertPartial(corpus, batch, keyCols, b.set.get, b.cond,
+          failOnDuplicateMatches = true)
+      case (Seq(DeleteAction(c)), ins @ (None | Some(Nil))) =>
+        // NOTE: this single-branch route matches keys with ANSI ===
+        // (NULL keys never match) — see the header's per-verb policy
+        Graft.mergeDelete(corpus, batch, keyCols, c.map(gate),
+          insertUnmatched = ins.isDefined)
+      // everything else — multiple matched branches, insert lists,
+      // update-only merges — is the generalized one-shuffle form
+      case (acts, ins) =>
+        Graft.merge(corpus, batch, keyCols, acts.map(branch),
+          insert = ins.isDefined, insertCols = ins.getOrElse(Nil),
+          failOnDuplicateMatches = true)
+    }
+  }
 
+  /** UPDATE <t> SET col = <expr>[, …] [WHERE <pred>] — single-table (no
+    * FROM/USING join form); the result IS the updated relation. All RHS
+    * expressions evaluate against the ORIGINAL row (ANSI semantics:
+    * `SET a = b, b = a` swaps), because every assignment lands in ONE
+    * projection over the source columns. WHERE follows SQL's
+    * three-valued logic: rows where the predicate is NULL are NOT
+    * updated. Anything unresolvable fails loudly at analysis. */
+  private def update(spark: SparkSession, table: LogicalPlan,
+      assignments: Seq[Assignment], cond: Option[Expression]): DataFrame = {
+    val (t0, alias) = relation(spark, table).getOrElse(
+      throw new IllegalArgumentException("UPDATE needs a table name"))
+    val t = t0.alias(alias)
+    val assigns = assignments.map { a =>
+      val c = targetCol(a.key, alias)
+      require(t.columns.contains(c),
+        s"UPDATE SET targets unknown column '$c' of '$alias'")
+      c -> column(a.value)
+    }
+    require(assigns.map(_._1).distinct.size == assigns.size,
+      s"duplicate UPDATE SET target in: ${assigns.map(_._1).mkString(", ")}")
+    val gate = cond.map(p => coalesce(column(p), lit(false))).getOrElse(lit(true))
+    val byName = assigns.toMap
+    // ONE projection over the source columns: every RHS sees the
+    // ORIGINAL row, so `SET a = b, b = a` swaps (ANSI)
+    t.select(t.columns.toSeq.map { c =>
+      byName.get(c) match {
+        case Some(rhs) => when(gate, rhs).otherwise(t(c)).as(c)
+        case None => t(c)
+      }
+    }: _*)
+  }
+
+  /** The forms Spark's parser rejects: ASOF JOIN, SELECT * EXCLUDE and
+    * QUALIFY; anything else rethrows the parser's error. */
+  private def fallback(spark: SparkSession, text: String,
+      parseError: ParseException): DataFrame =
+    Stmt(text, SqlDialect.maskLiterals(text)) match {
     case AsofM(proj, lt, lAliasOrNull, rt, rAliasOrNull,
         mcA, mcT, op, mcB, mcT2, cond, tailOrNull) =>
       val lAlias = Option(lAliasOrNull).getOrElse(lt)
@@ -440,7 +384,8 @@ object SqlText {
           (mcT2, mcT, op == ">=")
         else sys.error(s"MATCH_CONDITION references unknown alias: " +
           s"'$mcA.$mcT $op $mcB.$mcT2'")
-      val keys = equiKeys(cond, lAlias, rAlias)
+      val keys = equiKeys(spark.sessionState.sqlParser.parseExpression(cond),
+        lAlias, rAlias)
       val left = spark.table(lt)
       // align right-side key column names onto the left's (the engine
       // operator joins by shared names)
@@ -472,49 +417,10 @@ object SqlText {
       spark.sql(s"SELECT ${kept.mkString(", ")} " +
         s"FROM $target${Option(tailOrNull).getOrElse("")}")
 
-    case UpdateM(target, assignsTxt, predOrNull) =>
-      import org.apache.spark.sql.functions.{coalesce, expr, lit, when}
-      val t = spark.table(target)
-      val assigns = SqlDialect.splitTopLevel(assignsTxt).map {
-        case UpdateAssignRe(c, rhs) =>
-          require(t.columns.contains(c),
-            s"UPDATE SET targets unknown column '$c' of '$target'")
-          c -> expr(rhs.trim)
-        case other => sys.error(
-          s"only 'col = <expr>' assignments are supported in UPDATE SET, " +
-            s"got: '$other'")
-      }
-      require(assigns.map(_._1).distinct.size == assigns.size,
-        s"duplicate UPDATE SET target in: '$assignsTxt'")
-      val gate = Option(predOrNull)
-        .map(p => coalesce(expr(p), lit(false)))
-        .getOrElse(lit(true))
-      val byName = assigns.toMap
-      // ONE projection over the source columns: every RHS sees the
-      // ORIGINAL row, so `SET a = b, b = a` swaps (ANSI)
-      t.select(t.columns.toSeq.map { c =>
-        byName.get(c) match {
-          case Some(rhs) => when(gate, rhs).otherwise(t(c)).as(c)
-          case None => t(c)
-        }
-      }: _*)
-
-    case DeleteM(target, predOrNull) =>
-      import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-      val t = spark.table(target)
-      Option(predOrNull) match {
-        // DELETE removes rows where the predicate is TRUE; a NULL
-        // predicate keeps the row (ANSI three-valued logic)
-        case Some(p) => t.filter(
-          not(coalesce(expr(p), lit(false))))
-        case None => t.limit(0)
-      }
-
     case QualifyM(head, pred, orderOrNull) =>
       spark.sql(s"SELECT * FROM ($head) __graft_qualify WHERE $pred" +
         Option(orderOrNull).getOrElse(""))
 
-    case other => spark.sql(other.original)
-  }
+    case _ => throw parseError
   }
 }

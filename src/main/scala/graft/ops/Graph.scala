@@ -633,11 +633,17 @@ object Graph {
   /** Induced-subgraph restriction of a canonical edge list to a node
     * set — two semi joins, the k-core peel step. Both joins reference
     * the SAME `nodes` plan (condition-based, no per-side rename), so
-    * the physical broadcast exchange is built once and REUSED for the
-    * second join instead of collected twice per round. */
+    * its exchange is built once and REUSED for the second join. The
+    * node set is a shuffled hash build side, never a broadcast: every
+    * broadcast hash relation takes at least one whole memory page in
+    * the block store (about 1 MB for a long key) and stays there after
+    * the query until the JVM has collected the plan and the
+    * ContextCleaner has removed it, while a shuffled hash table is task
+    * memory, freed when its task ends. */
   private def induced(edges: DataFrame, nodes: DataFrame): DataFrame = {
-    val e1 = edges.join(nodes, edges("a") === nodes("n"), "left_semi")
-    e1.join(nodes, e1("b") === nodes("n"), "left_semi")
+    val ns = nodes.hint("shuffle_hash")
+    val e1 = edges.join(ns, edges("a") === ns("n"), "left_semi")
+    e1.join(ns, e1("b") === ns("n"), "left_semi")
   }
 
   /** FIXED-ROUND k-core peel over a canonical (a < b) edge list:
@@ -897,9 +903,9 @@ object Graph {
       rounds: Int): DataFrame = {
     var nodes = degrees(edges).filter(col("dg") >= k).select("n")
     for (_ <- 1 to rounds) {
-      // LAZY cut: the round's broadcast collect is the only
+      // LAZY cut: the round's node-set shuffle is the only
       // materialization (the reused exchange means the second semi join
-      // reads the same broadcast) — persists as a side effect
+      // reads the same shuffle) — persists as a side effect
       nodes = nodes.localCheckpoint(false)
       nodes = degrees(induced(edges, nodes)).filter(col("dg") >= k)
         .select("n")

@@ -2383,11 +2383,11 @@ object Relational {
              |ORDER BY o_orderkey""".stripMargin)),
 
     // --------------------------- literal-aware DML grammar (SQL text)
-    // round-14 ADVICE closed: [[graft.SqlText]] matches its statement
-    // grammar against a literal-masked shadow and slices the original
-    // at the match offsets, so a string literal containing ` WHERE `
-    // (or a comment-opening `--`) can no longer split UPDATE at the
-    // wrong token. This key drives exactly the adversarial text — a
+    // round-14 ADVICE closed: [[graft.SqlText]] reads UPDATE with
+    // Spark's own SQL parser, to which a string literal containing
+    // ` WHERE ` (or a comment-opening `--`) is one token, so it can
+    // never split UPDATE at the wrong place. This key drives exactly
+    // the adversarial text — a
     // SET RHS literal carrying both poison sequences plus a trailing
     // real WHERE clause — through the front door; the oracle replays
     // the ANSI semantics with the literal intact. Same single
@@ -2414,8 +2414,8 @@ object Relational {
 
     // ----------------- literal-aware MERGE gates + first-match-wins
     // the sibling key for MERGE: an AND-gate COMPARING AGAINST a
-    // literal that contains both ` WHEN ` and ` THEN ` — the exact
-    // text the clause splitter would previously have cut mid-gate —
+    // literal that contains both ` WHEN ` and ` THEN ` — one string
+    // token to Spark's SQL parser, which SqlText reads MERGE with —
     // routed through the generalized [[graft.Graft.merge]] (gated
     // DELETE before an ungated UPDATE, first-match-wins, plus the
     // insert arm), which also carries the front door's

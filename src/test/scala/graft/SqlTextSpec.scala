@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.functions._
 
 /** The SQL-text front door ([[SqlText]]): canonical MERGE INTO / ASOF
@@ -31,8 +32,12 @@ class SqlTextSpec extends SparkSpec {
   test("MERGE INTO without aliases or action clauses means the same thing") {
     stage()
     val out = SqlText.sql(spark,
-      "MERGE INTO st_corpus USING st_batch ON st_corpus.k = st_batch.k")
+      """MERGE INTO st_corpus USING st_batch ON st_corpus.k = st_batch.k
+        |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     assert(out.count() == 4)
+    // a MERGE with no WHEN clause is not a statement (Snowflake's grammar)
+    intercept[ParseException](SqlText.sql(spark,
+      "MERGE INTO st_corpus USING st_batch ON st_corpus.k = st_batch.k"))
   }
 
   test("MERGE with explicit SET list updates only the listed columns") {
@@ -88,6 +93,14 @@ class SqlTextSpec extends SparkSpec {
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
       .orderBy("k").collect().map(_.getLong(0))
     assert(kept.toSeq == Seq(1L, 2L, 3L, 9L))
+    // a gate may hold a CASE expression (its WHEN/THEN are the gate's)
+    val cased = SqlText.sql(spark,
+      """MERGE INTO st_corpus c USING st_batch b ON c.k = b.k
+        |WHEN MATCHED AND CASE WHEN b.v > 0 THEN true ELSE false END
+        |  THEN DELETE
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    assert(cased.toSeq == Seq((1L, "a", 10L), (3L, "c", 30L), (9L, "z", 1L)))
   }
 
   test("MERGE conditional UPDATE gates the SET on the AND predicate") {
@@ -168,27 +181,37 @@ class SqlTextSpec extends SparkSpec {
       """MERGE INTO st_corpus c USING st_batch b ON c.k = b.k
         |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (b.k, b.v + 1)""".stripMargin))
     assert(e1.getMessage.contains("expression RHS"), e1.getMessage)
-    // column/value arity mismatch
-    val e2 = intercept[IllegalArgumentException](SqlText.sql(spark,
+    // column/value arity mismatch: Spark's parser rejects it
+    val e2 = intercept[ParseException](SqlText.sql(spark,
       """MERGE INTO st_corpus c USING st_batch b ON c.k = b.k
         |WHEN NOT MATCHED THEN INSERT (k, tag, v) VALUES (b.k, b.v)""".stripMargin))
-    assert(e2.getMessage.contains("arity"), e2.getMessage)
+    assert(e2.getMessage.contains("number of inserted values"), e2.getMessage)
     // a branch after an ungated branch is unreachable under
-    // first-match-wins
-    val e3 = intercept[IllegalArgumentException](SqlText.sql(spark,
+    // first-match-wins: Spark's parser rejects it
+    val e3 = intercept[ParseException](SqlText.sql(spark,
       """MERGE INTO st_corpus c USING st_batch b ON c.k = b.k
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN MATCHED AND b.v > c.v THEN DELETE
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
-    assert(e3.getMessage.contains("unreachable"), e3.getMessage)
-    // the documented CASE-WHEN-in-gate grammar limit stays a loud,
-    // self-explanatory error, not a silent misparse
-    val e4 = intercept[RuntimeException](SqlText.sql(spark,
+    assert(e3.getMessage.contains("NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION"),
+      e3.getMessage)
+    // shapes Spark's parser admits but no engine route runs: each
+    // fails with the supported forms, not in Spark's analyzer
+    Seq(
+      """MERGE INTO st_corpus c USING (SELECT * FROM st_batch) b ON c.k = b.k
+        |WHEN MATCHED THEN UPDATE SET *""".stripMargin,
       """MERGE INTO st_corpus c USING st_batch b ON c.k = b.k
-        |WHEN MATCHED AND CASE WHEN b.v > 0 THEN true ELSE false END
-        |  THEN DELETE
-        |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
-    assert(e4.getMessage.contains("CASE WHEN"), e4.getMessage)
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin,
+      """MERGE INTO st_corpus c USING st_batch b ON c.k = b.k
+        |WHEN NOT MATCHED AND b.v > 0 THEN INSERT *""".stripMargin,
+      """MERGE WITH SCHEMA EVOLUTION INTO st_corpus c USING st_batch b
+        |ON c.k = b.k WHEN MATCHED THEN UPDATE SET *""".stripMargin
+    ).foreach { stmt =>
+      val e = intercept[IllegalArgumentException](SqlText.sql(spark, stmt))
+      assert(e.getMessage.contains("unsupported MERGE") &&
+        e.getMessage.contains("WHEN NOT MATCHED THEN INSERT"), e.getMessage)
+    }
   }
 
   test("mergeDelete API: delete-only needs no schema alignment, anti join never fans out") {
@@ -209,12 +232,14 @@ class SqlTextSpec extends SparkSpec {
   test("MERGE rejects non-equi ON and differing key names loudly") {
     stage()
     val e1 = intercept[RuntimeException](SqlText.sql(spark,
-      "MERGE INTO st_corpus c USING st_batch b ON c.k > b.k"))
+      "MERGE INTO st_corpus c USING st_batch b ON c.k > b.k " +
+        "WHEN MATCHED THEN UPDATE SET *"))
     assert(e1.getMessage.contains("equi"))
     Seq((2L, "B", 99L)).toDF("kk", "tag", "v")
       .createOrReplaceTempView("st_batch2")
     val e2 = intercept[IllegalArgumentException](SqlText.sql(spark,
-      "MERGE INTO st_corpus c USING st_batch2 b ON c.k = b.kk"))
+      "MERGE INTO st_corpus c USING st_batch2 b ON c.k = b.kk " +
+        "WHEN MATCHED THEN UPDATE SET *"))
     assert(e2.getMessage.contains("share a column name"))
   }
 
@@ -319,9 +344,9 @@ class SqlTextSpec extends SparkSpec {
     val e1 = intercept[IllegalArgumentException](
       SqlText.sql(spark, "UPDATE st_ud SET nope = 1"))
     assert(e1.getMessage.contains("unknown column"))
-    val e2 = intercept[RuntimeException](
+    val e2 = intercept[ParseException](
       SqlText.sql(spark, "UPDATE st_ud SET a + 1"))
-    assert(e2.getMessage.contains("assignments"))
+    assert(e2.getMessage.contains("PARSE_SYNTAX_ERROR"), e2.getMessage)
     val e3 = intercept[IllegalArgumentException](
       SqlText.sql(spark, "UPDATE st_ud SET a = 1, a = 2"))
     assert(e3.getMessage.contains("duplicate"))
