@@ -17,7 +17,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
@@ -333,10 +333,8 @@ private[sources] object BatchSource {
       rootDir: String): InputPartition =
     BatchInputPartition(runs(handles).map { run =>
       val (first, last) = (run.head, run.last)
-      val vals = Partitions.valuesOf(first.path, rootDir, partSchema.fields.toSeq)
-      val values = InternalRow.fromSeq(partSchema.fields.toSeq.map(f =>
-        CatalystTypeConverters.convertToCatalyst(vals.getOrElse(f.name, null))))
-      PlannedRun(PartitionedFile(values, SparkPath.fromPathString(first.path),
+      PlannedRun(PartitionedFile(Partitions.row(first.path, rootDir, partSchema),
+          SparkPath.fromPathString(first.path),
           first.start, last.start + last.bytes - first.start),
         run.map(_.rowGroup), run.map(_.rows).sum)
     }.toArray)
@@ -462,22 +460,20 @@ private[sources] class BatchScanBuilder(
   /** Accept filters for ROW-GROUP PRUNING via footer min/max stats
     * (`ParquetFilters` + `RowGroupFilter`, [[BatchSource.prune]]) —
     * whole batches whose stats exclude the predicate are never planned,
-    * never opened, never read. Filters over only PARTITION columns are
-    * absorbed COMPLETELY (file-level evaluation is exact — a partition
-    * value is constant across its file), so Spark drops them from the
-    * plan and column pruning can drop the partition column itself; all
-    * other filters are returned as residual: row-group pruning is a
+    * never opened, never read. A filter whose partition-only part is the
+    * whole filter ([[Partitions.absorbable]]: every leaf on a partition
+    * column, with a literal of that column's type) is absorbed
+    * COMPLETELY (file-level evaluation is exact — a partition value is
+    * constant across its file), so Spark drops it from the plan and
+    * column pruning can drop the partition column itself; all other
+    * filters are returned as residual: row-group pruning is a
     * skip-optimization, row-level evaluation stays with Spark (same
     * contract as parquet row-group skipping). */
   override def pushFilters(
       filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
     pushed = filters
-    if (partCols.isEmpty) filters
-    else {
-      val names = partCols.map(_.name).toSet
-      filters.filterNot(Partitions.absorbable(_, names))
-    }
+    filters.filterNot(Partitions.absorbable(_, partCols))
   }
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
@@ -546,10 +542,12 @@ private[sources] class BatchScanBuilder(
         catch { case _: UnsupportedOperationException => return None } // no min/max
       val footerValues = dataAggSchema.fields.indices.iterator
         .map(i => footerRow.get(i, dataAggSchema(i).dataType))
-      val parts = Partitions.valuesOf(path, qroot, partCols)
+      val parts = Partitions.row(path, qroot, partCols)
       new GenericInternalRow(cols.zip(fromFooter).map[Any] {
         case (_, true) => footerValues.next()
-        case (c, false) => CatalystTypeConverters.convertToCatalyst(parts.getOrElse(c.get, null))
+        case (c, false) =>
+          val i = partCols.indexWhere(_.name == c.get)
+          parts.get(i, partCols(i).dataType)
       }.toArray): InternalRow
     }
     // all files empty: no row would leave COUNT(*) NULL, not 0
@@ -653,21 +651,18 @@ private[sources] class BatchScan(
     * path-encoded partition values contradict a filter are dropped from
     * the listing before any footer is opened (zero IO per excluded file;
     * at 100 TB this is the difference between touching one `lang=en/`
-    * subtree and sweeping every footer in the stage). Runtime (DPP)
-    * filters participate too: a dim-side join key over a partition column
-    * prunes files at replan time. */
-  private def files: Seq[FileStatus] = {
-    if (partCols.isEmpty) allFiles
-    else {
-      val fs = allFilters.filter(f =>
-        f.references.exists(partColNames.contains))
-      if (fs.isEmpty) allFiles
-      else allFiles.filter { f =>
-        val vals = Partitions.valuesOf(f.getPath.toString, rootDir, partCols)
-        fs.forall(Partitions.matches(_, vals))
-      }
+    * subtree and sweeping every footer in the stage). The partition parts
+    * of the static and runtime (DPP) filters are one Catalyst predicate,
+    * bound once per call ([[Partitions.pruner]]) and evaluated on each
+    * file's partition-values row; a file stays iff it is TRUE. So a
+    * dim-side join key over a partition column prunes files at replan
+    * time. */
+  private def files: Seq[FileStatus] =
+    Partitions.pruner(allFilters.toSeq, partCols) match {
+      case Some(keep) =>
+        allFiles.filter(f => keep.eval(Partitions.row(f.getPath.toString, rootDir, partCols)))
+      case None => allFiles
     }
-  }
 
   private val partColNames = partCols.map(_.name).toSet
 

@@ -101,8 +101,9 @@ private[sources] class BatchMicroBatchStream(
     * URL-DECODED and typed with the partition column's inferred type
     * (the same round trip [[Partitions.parseRaw]] applies to the path
     * itself — comparing the raw encoded form against decoded partition
-    * values would silently admit zero files forever), and matching
-    * reuses the batch side's exact [[Partitions.matches]]. This is a
+    * values would silently admit zero files forever), and the terms are
+    * ANDed into the batch side's Catalyst predicate
+    * ([[Partitions.pruner]]), bound once per stream. This is a
     * semantic dial (pruned files' rows never enter the stream) — the
     * streaming twin of the batch side's absorbed partition filters,
     * surfaced as an option because there is no planner to absorb them
@@ -125,11 +126,10 @@ private[sources] class BatchMicroBatchStream(
       }
     }.getOrElse(Seq.empty)
 
+  private lazy val partitionPruner = Partitions.pruner(partitionFilter, partCols)
+
   private def keepFile(path: String): Boolean =
-    partitionFilter.isEmpty || {
-      val vals = Partitions.valuesOf(path, rootDir, partCols)
-      partitionFilter.forall(Partitions.matches(_, vals))
-    }
+    partitionPruner.forall(_.eval(Partitions.row(path, rootDir, partCols)))
 
   /** One `partition_filter` per checkpoint, PINNED in the checkpoint
     * itself: the filter prunes at DISCOVERY time, so files admitted to

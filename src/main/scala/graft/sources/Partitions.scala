@@ -3,11 +3,14 @@ package graft.sources
 import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets
 
+import scala.util.Try
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, expressions => expr}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSeq, AttributeSet, BasePredicate, BindReferences, Expression, Literal, Predicate, PredicateHelper}
+import org.apache.spark.sql.sources
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 
 /** Hive-style partition layout for the graft connector: the write side
@@ -20,14 +23,22 @@ import org.apache.spark.sql.types._
   * flat tables, core.py:70-124), but its read side prunes eagerly; this
   * closes the asymmetry: what the sink writes, the scan can skip.
   *
+  * Pruning is Catalyst's, as `PartitioningAwareFileIndex` prunes: each
+  * pushed filter becomes a Catalyst predicate over the partition columns,
+  * its partition-only part comes from `PredicateHelper`, and the parts
+  * are ANDed, bound once per scan ([[pruner]]) and evaluated on each
+  * file's partition-values row ([[row]]); a file is kept iff the result
+  * is TRUE. Catalyst's evaluation is SQL's own three-valued logic, with
+  * Spark's ordering (strings by code point, NaN largest, -0.0 = 0.0).
+  *
   * Scale contract: partition pruning is PATH arithmetic on the driver's
-  * file listing — zero IO per excluded file. A filter on a partition
-  * column is absorbed COMPLETELY (not returned as a residual), because a
-  * partition value is constant across its file: Spark neither re-reads
-  * nor re-evaluates it, and column pruning then drops the partition
-  * column from the data read entirely.
+  * file listing — zero IO per excluded file. A filter whose every leaf
+  * is on a partition column is absorbed COMPLETELY (not returned as a
+  * residual), because a partition value is constant across its file:
+  * Spark neither re-reads nor re-evaluates it, and column pruning then
+  * drops the partition column from the data read entirely.
   */
-private[sources] object Partitions {
+private[sources] object Partitions extends PredicateHelper {
 
   val NullMarker = "__GRAFT_NULL__"
 
@@ -108,139 +119,72 @@ private[sources] object Partitions {
     }
   }
 
-  /** Typed partition values of one file, keyed by column name. */
-  def valuesOf(
-      path: String, root: String, partCols: Seq[StructField]): Map[String, Any] = {
+  /** One file's partition values as a Catalyst row in `fields`' order,
+    * the marker and a missing key as NULL: the row [[pruner]] evaluates,
+    * the scan's `PartitionedFile` carries and partition MIN/MAX reads. */
+  def row(path: String, root: String, fields: Seq[StructField]): InternalRow = {
     val raw = parseRaw(path, root).toMap
-    partCols.flatMap(f => raw.get(f.name).map(r =>
-      f.name -> castValue(r, f.dataType))).toMap
+    InternalRow.fromSeq(fields.map(f => raw.get(f.name).map(r =>
+      CatalystTypeConverters.convertToCatalyst(castValue(r, f.dataType))).orNull))
   }
 
-  /** Is `filter` a shape [[matches]] evaluates EXACTLY over constant
-    * partition values, referencing only partition columns? Only such
-    * filters may be absorbed (removed from Spark's residual). */
-  def absorbable(filter: Filter, partCols: Set[String]): Boolean =
-    filter.references.forall(partCols.contains) && evaluable(filter)
-
-  private def evaluable(f: Filter): Boolean = f match {
-    case _: EqualTo | _: In | _: IsNull | _: IsNotNull |
-         _: GreaterThan | _: GreaterThanOrEqual |
-         _: LessThan | _: LessThanOrEqual => true
-    case And(l, r) => evaluable(l) && evaluable(r)
-    case Or(l, r) => evaluable(l) && evaluable(r)
-    case Not(c) => evaluable(c)
-    case _ => false
+  /** `filter` as a Catalyst predicate over `attrs`. A leaf on a column
+    * outside `attrs`, a shape without a translation or a literal that is
+    * not of its column's type becomes an opaque boolean attribute outside
+    * `attrs`, so Catalyst treats it as per-row data. */
+  private def toCatalyst(filter: Filter, attrs: Seq[AttributeReference]): Expression = {
+    lazy val opaque = AttributeReference("__non_partition__", BooleanType)()
+    def leaf(c: String, vs: Seq[Any])(mk: (Expression, Seq[Expression]) => Expression) =
+      attrs.find(_.name == c).flatMap { a =>
+        val lits = vs.flatMap(v => Try(Literal.create(v, a.dataType)).toOption)
+        if (lits.size == vs.size) Some(mk(a, lits)) else None
+      }.getOrElse(opaque)
+    def cmp(c: String, v: Any)(mk: (Expression, Expression) => Expression) =
+      leaf(c, Seq(v))((a, l) => mk(a, l.head))
+    def go(f: Filter): Expression = f match {
+      case sources.EqualTo(c, v) => cmp(c, v)(expr.EqualTo(_, _))
+      case sources.GreaterThan(c, v) => cmp(c, v)(expr.GreaterThan(_, _))
+      case sources.GreaterThanOrEqual(c, v) => cmp(c, v)(expr.GreaterThanOrEqual(_, _))
+      case sources.LessThan(c, v) => cmp(c, v)(expr.LessThan(_, _))
+      case sources.LessThanOrEqual(c, v) => cmp(c, v)(expr.LessThanOrEqual(_, _))
+      case sources.In(c, vs) => leaf(c, vs.toSeq)(expr.In(_, _))
+      case sources.IsNull(c) => leaf(c, Nil)((a, _) => expr.IsNull(a))
+      case sources.IsNotNull(c) => leaf(c, Nil)((a, _) => expr.IsNotNull(a))
+      case sources.And(l, r) => expr.And(go(l), go(r))
+      case sources.Or(l, r) => expr.Or(go(l), go(r))
+      case sources.Not(c) => expr.Not(go(c))
+      case _ => opaque
+    }
+    go(filter)
   }
 
-  /** Evaluation state for [[matches]] — genuine SQL three-valued logic
-    * plus two per-row states:
-    *   - [[Unknown]] is a NULL-valued comparison, CONSTANT for every row
-    *     of the file (a partition value is), so at the top level no row
-    *     satisfies the filter → exclude, like [[KnownFalse]]. Its
-    *     negation is still UNKNOWN for every row → still excludable.
-    *   - [[PerRow]]: the value can be anything row to row (a reference
-    *     to a non-partition column, or an incomparable literal) — some
-    *     row might satisfy → keep.
-    *   - [[NeverTrue]]: per-row value is FALSE or UNKNOWN but provably
-    *     never TRUE (e.g. And(Unknown, PerRow): x AND UNKNOWN cannot be
-    *     TRUE). Excludable at the top level like Unknown — but its
-    *     NEGATION can be TRUE for some rows (NOT FALSE), so Not maps it
-    *     to [[PerRow]], not to Unknown. Collapsing it into Unknown made
-    *     Not(And(p = 1, d > 5)) over a null p prune files whose d ≤ 5
-    *     rows genuinely satisfy the filter.
-    * The Unknown/PerRow distinction is what a blanket "NULL under NOT →
-    * exclude" got wrong: Not(IsNotNull(c)) over a null partition value
-    * is TRUE (IS NULL), not UNKNOWN — IsNull/IsNotNull never return
-    * UNKNOWN. */
-  private sealed trait Tri
-  private case object KnownTrue extends Tri
-  private case object KnownFalse extends Tri
-  private case object Unknown extends Tri
-  private case object PerRow extends Tri
-  private case object NeverTrue extends Tri
+  /** The partition-only part of `filter`: Catalyst's own over-approximation
+    * for file-source partition filters (an AND drops a per-row side, an OR
+    * or NOT with one keeps the file). None = prunes nothing. */
+  private def partitionPart(
+      e: Expression, attrs: Seq[AttributeReference]): Option[Expression] =
+    extractPredicatesWithinOutputSet(e, AttributeSet(attrs))
 
-  /** Exact evaluation of an [[evaluable]] filter against one file's
-    * constant partition values. True = some row of the file may satisfy
-    * the filter; false = provably none does (file excluded). A reference
-    * to a column not in `vals` keeps the file (conservative — only
-    * reachable for non-absorbed filters, which Spark re-evaluates
-    * row-level anyway). */
-  def matches(filter: Filter, vals: Map[String, Any]): Boolean =
-    eval3(filter, vals) match {
-      case KnownTrue | PerRow => true
-      case KnownFalse | Unknown | NeverTrue => false
-    }
+  private def attributes(partCols: Seq[StructField]): Seq[AttributeReference] =
+    partCols.map(f => AttributeReference(f.name, f.dataType)())
 
-  private def eval3(f: Filter, vals: Map[String, Any]): Tri = {
-    // comparison leaf: missing column → per-row; NULL operand → UNKNOWN;
-    // otherwise both sides become Catalyst literals of the partition
-    // value's type and compare under Catalyst's ordering for it (strings
-    // by code point, NaN largest, as Spark compares the column's rows);
-    // a literal of another type → conservative per-row keep
-    def cmp3(c: String, v: Any)(p: Int => Boolean): Tri =
-      if (!vals.contains(c)) PerRow
-      else if (vals(c) == null || v == null) Unknown
-      else {
-        val a = Literal(vals(c))
-        scala.util.Try(Literal(v)).toOption.filter(_.dataType == a.dataType) match {
-          case Some(b) =>
-            if (p(TypeUtils.getInterpretedOrdering(a.dataType).compare(a.value, b.value)))
-              KnownTrue
-            else KnownFalse
-          case None => PerRow
-        }
-      }
-    f match {
-      case EqualTo(c, v) => cmp3(c, v)(_ == 0)
-      case GreaterThan(c, v) => cmp3(c, v)(_ > 0)
-      case GreaterThanOrEqual(c, v) => cmp3(c, v)(_ >= 0)
-      case LessThan(c, v) => cmp3(c, v)(_ < 0)
-      case LessThanOrEqual(c, v) => cmp3(c, v)(_ <= 0)
-      case In(c, vs) =>
-        if (!vals.contains(c)) PerRow
-        else {
-          val rs = vs.toIndexedSeq.map(v => cmp3(c, v)(_ == 0))
-          if (rs.contains(KnownTrue)) KnownTrue
-          else if (rs.contains(PerRow)) PerRow
-          else if (rs.contains(Unknown)) Unknown // NULL in list, no match
-          else KnownFalse // includes the empty IN — vacuously false
-        }
-      case IsNull(c) =>
-        if (!vals.contains(c)) PerRow
-        else if (vals(c) == null) KnownTrue else KnownFalse
-      case IsNotNull(c) =>
-        if (!vals.contains(c)) PerRow
-        else if (vals(c) != null) KnownTrue else KnownFalse
-      case And(l, r) => (eval3(l, vals), eval3(r, vals)) match {
-        case (KnownFalse, _) | (_, KnownFalse) => KnownFalse
-        case (KnownTrue, KnownTrue) => KnownTrue
-        // a NeverTrue conjunct bars TRUE for every row — so does an
-        // Unknown one paired with anything per-row (x AND UNKNOWN is
-        // FALSE or UNKNOWN, never TRUE). Only both-constant-Unknown
-        // stays Unknown (constant for every row → negation excludable)
-        case (NeverTrue, _) | (_, NeverTrue) => NeverTrue
-        case (Unknown, PerRow) | (PerRow, Unknown) => NeverTrue
-        case (Unknown, _) | (_, Unknown) => Unknown
-        case _ => PerRow // at least one per-row side, none false/unknown
-      }
-      case Or(l, r) => (eval3(l, vals), eval3(r, vals)) match {
-        case (KnownTrue, _) | (_, KnownTrue) => KnownTrue
-        // OR with a full per-row side can still be TRUE for some row
-        case (PerRow, _) | (_, PerRow) => PerRow
-        case (KnownFalse, KnownFalse) => KnownFalse
-        case (NeverTrue, KnownFalse) | (KnownFalse, NeverTrue)
-           | (NeverTrue, NeverTrue) => NeverTrue // {F,U} ∨ {F,U}: never T
-        case _ => Unknown // any Unknown side with F/U/N: always UNKNOWN
-      }
-      case Not(c) => eval3(c, vals) match {
-        case KnownTrue => KnownFalse
-        case KnownFalse => KnownTrue
-        // NOT of {FALSE, UNKNOWN} is {TRUE, UNKNOWN} — can be TRUE for
-        // some row → keep (per-row), NOT constant-unknown
-        case NeverTrue => PerRow
-        case other => other // NOT(UNKNOWN)=UNKNOWN; NOT(per-row)=per-row
-      }
-      case _ => PerRow // non-evaluable shape: keep; Spark re-checks rows
-    }
+  /** May Spark drop `filter` from the residual? Only when its partition-only
+    * part is the whole filter: every leaf is on a partition column with a
+    * literal of that column's type, so the file-level verdict is exact. */
+  def absorbable(filter: Filter, partCols: Seq[StructField]): Boolean = {
+    val attrs = attributes(partCols)
+    val whole = toCatalyst(filter, attrs)
+    partitionPart(whole, attrs).contains(whole)
+  }
+
+  /** The partition parts of `filters`, ANDed and bound to the positions of
+    * `partCols` once: evaluated on a file's [[row]], TRUE keeps the file and
+    * FALSE or NULL drops it, as `PartitioningAwareFileIndex` prunes. None
+    * when no filter constrains a partition column. */
+  def pruner(filters: Seq[Filter], partCols: Seq[StructField]): Option[BasePredicate] = {
+    val attrs = attributes(partCols)
+    filters.flatMap(f => partitionPart(toCatalyst(f, attrs), attrs))
+      .reduceOption(expr.And(_, _))
+      .map(p => Predicate.createInterpreted(BindReferences.bindReference(p, AttributeSeq(attrs))))
   }
 }

@@ -919,6 +919,55 @@ class BatchSourceSpec extends SparkSpec {
     assert(nNull == expected, s"expected $expected null-partition rows, got $nNull")
   }
 
+  test("a partition-only filter whose literal has another type stays residual") {
+    import org.apache.spark.sql.sources.EqualTo
+    val dir = stagePartitioned()
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", dir))
+    val builder = new BatchScanBuilder(spark.read.format("graft").load(dir).schema, opts)
+    // no lang value is the LONG 5: the filter cannot be judged per file,
+    // so Spark must keep evaluating it on the rows
+    val mistyped = EqualTo("lang", 5L)
+    assert(builder.pushFilters(Array(EqualTo("lang", "en"), mistyped)).toSeq == Seq(mistyped))
+  }
+
+  test("adversarial partition values prune like the same filter over the flat source") {
+    // two partition columns: a DOUBLE with NaN, both zeros and NULL, and a
+    // STRING with a non-BMP value and the path-hostile '/', '=', '%', ' '
+    import spark.implicits._
+    val xs = Seq[java.lang.Double](Double.NaN, -0.0, 0.0, 1.5, null)
+    val ss = Seq("a/b", "c=d", "e%f", "g h", "\uFF61", "\uD83D\uDE00")
+    val rows = for ((x, i) <- xs.zipWithIndex; (s, j) <- ss.zipWithIndex; k <- 0 to 1)
+      yield (x, s, (i * ss.size + j) * 2L + k)
+    val src = rows.toDF("x", "s", "data_col")
+    val flat = Files.createTempDirectory("graft_adv_flat").toString
+    src.coalesce(1).write.mode("overwrite").parquet(flat)
+    val dir = Files.createTempDirectory("graft_adv_part").toString
+    src.coalesce(1).write.format("graft").option("partition_by", "x,s")
+      .mode("overwrite").save(dir)
+    val n = xs.size * ss.size
+    val cases = Seq(
+      (col("x") === 0.0, 2 * ss.size),
+      (col("x") > 1.0, 2 * ss.size),
+      (col("x").isNull, ss.size),
+      (!(col("x") === 1.5), 3 * ss.size),
+      (col("x").isin(Double.NaN, 1.5), 2 * ss.size),
+      (col("s") > "c" && col("s") < "g", 2 * xs.size),
+      (col("s") > "\uFF61", xs.size), // code-point order: only the emoji
+      (!(col("s") === "a/b" || col("data_col") > 40), (ss.size - 1) * xs.size))
+    cases.foreach { case (cond, kept) =>
+      val got = spark.read.format("graft").load(dir).filter(cond)
+      // Row.toString tells NaN and -0.0 apart, which == on doubles does not
+      def rendered(df: org.apache.spark.sql.DataFrame) =
+        df.select("x", "s", "data_col").collect().map(_.toString).sorted.toSeq
+      val want = rendered(spark.read.parquet(flat).filter(cond))
+      assert(want.nonEmpty, s"$cond selects no rows")
+      assert(rendered(got) == want, s"$cond")
+      assert(batchNotes(got).exists(_.endsWith(s"files=$kept/$n")),
+        s"$cond: expected files=$kept/$n, got ${batchNotes(got)}")
+    }
+  }
+
   test("partition parsing anchors at the table root — ancestor '=' dirs are not columns") {
     // a stage living UNDER a directory that happens to contain '=' must
     // not sprout phantom partition columns (Spark's basePath rule)
@@ -1013,34 +1062,40 @@ class BatchSourceSpec extends SparkSpec {
 
   test("NULL under NOT evaluates with three-valued logic, not a blanket exclude") {
     import org.apache.spark.sql.sources._
+    // the pruner's verdict on a file whose LONG partition column p holds
+    // vals("p"); d is a data column
+    def matches(f: Filter, vals: Map[String, Any]): Boolean =
+      Partitions.pruner(Seq(f), Seq(org.apache.spark.sql.types.StructField(
+        "p", org.apache.spark.sql.types.LongType)))
+        .forall(_.eval(org.apache.spark.sql.catalyst.InternalRow(vals("p"))))
     val nullVal: Map[String, Any] = Map("p" -> null)
     // NOT(p IS NOT NULL) ≡ p IS NULL → TRUE over a null partition value:
     // the file MUST be kept (the old blanket rule excluded it)
-    assert(Partitions.matches(Not(IsNotNull("p")), nullVal))
-    assert(!Partitions.matches(Not(IsNull("p")), nullVal))
+    assert(matches(Not(IsNotNull("p")), nullVal))
+    assert(!matches(Not(IsNull("p")), nullVal))
     // a comparison under NOT stays three-valued: NOT(p = 1) over NULL is
     // UNKNOWN, constant for the whole file → exclude
-    assert(!Partitions.matches(Not(EqualTo("p", 1L)), nullVal))
+    assert(!matches(Not(EqualTo("p", 1L)), nullVal))
     // the never-TRUE refinement: over a NULL p, (p=1 AND d>5) is FALSE or
     // UNKNOWN per row (d varies) but never TRUE — its NEGATION is TRUE
     // for every d<=5 row, so the file must be KEPT (collapsing this into
     // constant-UNKNOWN wrongly pruned rows that satisfy the filter)
-    assert(Partitions.matches(
+    assert(matches(
       Not(And(EqualTo("p", 1L), GreaterThan("d", 5L))), nullVal))
     // whereas an all-constant conjunction over NULL p is UNKNOWN for
     // every row, and so is its negation → still excludable
-    assert(!Partitions.matches(
+    assert(!matches(
       Not(And(EqualTo("p", 1L), LessThan("p", 0L))), nullVal))
     // NOT over a mixed conjunction: with p=2, NOT(p=1 AND d>5) is TRUE
     // whatever the per-row data column d holds → keep, exactly
     val p2: Map[String, Any] = Map("p" -> 2L)
-    assert(Partitions.matches(Not(And(EqualTo("p", 1L), GreaterThan("d", 5L))), p2))
+    assert(matches(Not(And(EqualTo("p", 1L), GreaterThan("d", 5L))), p2))
     // ...and with p=1 the NOT's value depends on d → per-row → keep
-    assert(Partitions.matches(Not(And(EqualTo("p", 1L), GreaterThan("d", 5L))), p2 + ("p" -> 1L)))
+    assert(matches(Not(And(EqualTo("p", 1L), GreaterThan("d", 5L))), p2 + ("p" -> 1L)))
     // OR with an UNKNOWN side can still be satisfied by the other side
-    assert(Partitions.matches(Or(EqualTo("p", null), EqualTo("p", 2L)), p2))
+    assert(matches(Or(EqualTo("p", null), EqualTo("p", 2L)), p2))
     // empty IN is vacuously false — excludable
-    assert(!Partitions.matches(In("p", Array.empty[Any]), p2))
+    assert(!matches(In("p", Array.empty[Any]), p2))
   }
 
   test("footer-sweep cache is digest-keyed and bounded (oldest entry evicted)") {

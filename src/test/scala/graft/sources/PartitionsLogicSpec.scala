@@ -1,17 +1,20 @@
 package graft.sources
 
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.sources._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property tests for the partition-pruning evaluation logic
-  * ([[Partitions.matches]]'s five-state machine) against a brute-force
-  * SQL three-valued reference:
+/** Property tests for partition pruning ([[Partitions.pruner]]: the
+  * partition-only part of a filter as a bound Catalyst predicate over the
+  * file's partition-values row) against a brute-force SQL three-valued
+  * reference:
   *
   *   - SOUNDNESS (the safety property): if ANY row extension of the
   *     file's constant partition values could satisfy the filter, the
   *     file must be kept. Pruning a file with a satisfying row silently
-  *     drops result rows — the exact bug class the NeverTrue state fixed
-  *     (Not over And(Unknown, PerRow)).
+  *     drops result rows — e.g. Not(And(p = 1, d > 5)) over a NULL p is
+  *     TRUE for every d <= 5 row.
   *   - PRECISION on partition-only filters: with no per-row references,
   *     evaluation is total, so exclusion must EXACTLY equal 3VL
   *     non-TRUE — conservatism there would just be lost pruning.
@@ -23,6 +26,12 @@ class PartitionsLogicSpec extends AnyFunSuite {
   // literal + row-value domain: null, boundary longs around the generated
   // comparison points
   private val domain: Seq[Any] = Seq(null, 0L, 1L, 6L, 10L)
+
+  /** Does the pruner keep a file whose partition column `p` (of type
+    * `dt`) holds `p`? Any other column is data. */
+  private def kept(f: Filter, p: Any, dt: DataType = LongType): Boolean =
+    Partitions.pruner(Seq(f), Seq(StructField("p", dt)))
+      .forall(_.eval(InternalRow(CatalystTypeConverters.convertToCatalyst(p))))
 
   /** Brute-force SQL 3VL evaluation over a TOTAL row assignment:
     * Some(bool) or None = UNKNOWN. The reference semantics. */
@@ -89,13 +98,12 @@ class PartitionsLogicSpec extends AnyFunSuite {
     (0 until 5000).foreach { _ =>
       val f = genFilter(rnd, 3, IndexedSeq("p", "d")) // p = partition, d = data
       val pVal = domain(rnd.nextInt(domain.length))
-      val vals: Map[String, Any] = Map("p" -> pVal)
       // exists a data-row value making the filter TRUE?
       val satisfiable = domain.exists(dv =>
         eval(f, Map("p" -> pVal, "d" -> dv)).contains(true))
       if (satisfiable) {
         satisfiableCases += 1
-        assert(Partitions.matches(f, vals),
+        assert(kept(f, pVal),
           s"UNSOUND PRUNE: $f with p=$pVal has a satisfying row but was excluded")
       }
     }
@@ -150,8 +158,8 @@ class PartitionsLogicSpec extends AnyFunSuite {
 
   test("string partition values compare by code point, as Spark compares strings") {
     // U+1F600 sorts before U+FF61 in UTF-16 units, after it in code points
-    assert(Partitions.matches(GreaterThan("p", "\uFF61"), Map("p" -> "\uD83D\uDE00")))
-    assert(!Partitions.matches(LessThan("p", "\uFF61"), Map("p" -> "\uD83D\uDE00")))
+    assert(kept(GreaterThan("p", "\uFF61"), "\uD83D\uDE00", StringType))
+    assert(!kept(LessThan("p", "\uFF61"), "\uD83D\uDE00", StringType))
   }
 
   test("precision: partition-only filters exclude exactly the 3VL non-TRUE files") {
@@ -161,10 +169,10 @@ class PartitionsLogicSpec extends AnyFunSuite {
       val f = genFilter(rnd, 3, IndexedSeq("p"))
       val pVal = domain(rnd.nextInt(domain.length))
       val truth = eval(f, Map("p" -> pVal)).contains(true)
-      val kept = Partitions.matches(f, Map("p" -> pVal))
-      assert(kept == truth,
-        s"$f with p=$pVal: matches=$kept but exact 3VL truth is $truth")
-      if (!kept) excluded += 1
+      val keep = kept(f, pVal)
+      assert(keep == truth,
+        s"$f with p=$pVal: kept=$keep but exact 3VL truth is $truth")
+      if (!keep) excluded += 1
     }
     assert(excluded > 500, s"generator sanity: only $excluded exclusions exercised")
   }
